@@ -147,10 +147,6 @@ object Analytics {
       .orderBy(col(key))
   }
 
-  /** Conditional proportion (A9: `(pred).mean()` in pandas). */
-  def proportionWhere(df: DataFrame, pred: Column, name: String): DataFrame =
-    df.agg(round(avg(when(pred, 1.0).otherwise(0.0)), 6).as(name))
-
   /** Per-group quartiles (px.box, price_analysis.py:296-301). Exact
     * interpolating percentile == DuckDB quantile_cont. */
   def quartilesBy(df: DataFrame, key: String, value: Column): DataFrame =

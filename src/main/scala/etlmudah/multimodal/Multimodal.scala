@@ -42,11 +42,6 @@ object Multimodal {
       i => (conv(substring(md5(concat(media, i.cast("string").cast("binary"))),
         1, 8), 16, 10).cast("double") / 4294967296.0).cast("float"))
 
-  /** STUB resize/re-embed: fold `features` down to `outDims` by striding —
-    * keeps the pipeline shape of a resolution change. */
-  def resizeStub(features: Column, outDims: Int): Column =
-    transform(sequence(lit(0), lit(outDims - 1)), i => element_at(features, i + 1))
-
   /** Batched decode path — the Scala analog of a Pandas UDF over
     * mapInPandas: an iterator-in/iterator-out partition transform where
     * a real implementation would accumulate rows into fixed-size

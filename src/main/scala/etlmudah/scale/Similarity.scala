@@ -470,23 +470,6 @@ object Similarity {
     Array.fill(tables, bits, dims)(rnd.nextGaussian())
   }
 
-  /** Bucket keys for one vector: for each of L tables, pack B sign bits
-    * of hyperplane projections into a long. Returns array<long> size L.
-    * `dims` must match the embedding length. */
-  def lshBuckets(vec: Column, tables: Int, bits: Int, dims: Int): Column = {
-    val hp = hyperplanes(tables, bits, dims)
-    val keys = (0 until tables).map { t =>
-      val bitVals = (0 until bits).map { j =>
-        val w = typedLit(hp(t)(j))
-        val proj = aggregate(zip_with(vec, w, (x, wv) => x.cast("double") * wv),
-          lit(0.0), (s, x) => s + x)
-        when(proj > 0, lit(1L)).otherwise(lit(0L)) * lit(1L << j)
-      }
-      bitVals.reduce(_ + _)
-    }
-    array(keys: _*)
-  }
-
   /** Bucket keys for a whole corpus, the codegen path: explode vectors
     * to (id, dim, x), compute all tables x bits hyperplane projections
     * as sum() aggregate columns with literal-array weight lookups

@@ -1159,16 +1159,6 @@ object Streaming {
           .partitionBy("batch_id").parquet(tmp))
     }
 
-  /** Batch-begin recovery for the per-bucket swap used by
-    * [[upsertSink]] — delegates to the shared bucketed-base protocol
-    * ([[etlmudah.load.BucketedBase.recoverSwaps]]; invariants
-    * documented there). Kept as the streaming-facing name because the
-    * sink docs and StreamingSpec's torn-layout rehearsals speak in
-    * terms of it. */
-  private[streaming] def recoverBucketSwaps(
-      fs: org.apache.hadoop.fs.FileSystem, basePath: String): Unit =
-    etlmudah.load.BucketedBase.recoverSwaps(fs, basePath)
-
   /** WATERMARK-LATENESS AUDIT — the operational blind spot the plain
     * watermarked aggregation leaves open: `withWatermark` + windowed
     * agg silently DROPS rows later than the watermark (documented at

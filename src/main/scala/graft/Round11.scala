@@ -28,7 +28,7 @@ object Round11 {
     // is CASE-expressible. The fresh-root delete makes the seed part
     // of the query definition (re-runs converge identically).
     "q301_bucketed_merge_load" -> ((s, dir) => {
-      val root = s"/tmp/graft_sink_q301_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val root = Stage.scratch("graft_sink_q301", dir)
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(root), true)

@@ -14,63 +14,31 @@ import etlmudah.Tables
 object Round12 {
 
   /** Stage the events table into one file per event-time DAY, give the
-    * files a deterministically SCRAMBLED arrival order (mtime follows
-    * ord = (day mod 7)·100 + day — the file source feeds oldest-mtime
-    * first), and run [[etlmudah.streaming.Streaming.latenessAuditSink]]
-    * over them once (done-marker memoized per corpus): a later batch
-    * carrying an earlier day arrives BELOW the watermark the
-    * higher days advanced, so the sink's on-time/late split is a
+    * files a deterministically SCRAMBLED arrival order (file name and
+    * arrival follow ord = (day mod 7)·100 + day), and run
+    * [[etlmudah.streaming.Streaming.latenessAuditSink]] over them once
+    * per corpus ([[Stage.directory]], published only on a finished run):
+    * a later batch carrying an earlier day arrives BELOW the watermark
+    * the higher days advanced, so the sink's on-time/late split is a
     * deterministic function of the ladder — which is exactly what
     * q342/q343's oracles replay in SQL (running-max watermark over the
     * batch order, one row per quarantined event). */
-  private def stagedLatenessAudit(s: SparkSession, dir: String): String = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
-    import etlmudah.streaming.Streaming
-    // under the graft_stage root so Bench's startup clear covers this
-    // cross-run memo exactly like the stagedArtifact family
-    val root = s"${System.getProperty("java.io.tmpdir", "/tmp")}" +
-      s"/graft_stage/sink_q342_v1_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
-    val fs = new Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new Path(s"$root/_done")
-    if (fs.exists(done)) return root
-    fs.delete(new Path(root), true)
-    val src = s"$root/src"
-    fs.mkdirs(new Path(src))
-    val ev = Tables.eventsTyped(s, dir)
-    val days = ev.select(dayofmonth(col("ts")).as("d")).distinct()
-      .collect().map(_.getInt(0)).sorted // bounded: <= 31 day keys
-    days.foreach { d =>
-      val ord = (d % 7) * 100 + d
-      val tmp = s"$root/tmp_d$d"
-      ev.filter(dayofmonth(col("ts")) === d).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).head
-      fs.rename(part, new Path(src, f"b$ord%04d.parquet"))
-      fs.delete(new Path(tmp), true)
+  private def stagedLatenessAudit(s: SparkSession, dir: String): String =
+    Stage.directory(s, dir, "lateness-audit-v1-l2h-c8", "lateaudit",
+        "events.parquet") { root =>
+      import org.apache.spark.sql.streaming.Trigger
+      import etlmudah.streaming.Streaming
+      val src = Stage.dayLadder(s, root, Tables.eventsTyped(s, dir),
+        d => f"b${(d % 7) * 100 + d}%04d")
+      val q = Streaming.latenessAuditSink(
+          Streaming.readEvents(s, src, maxFilesPerTrigger = 1),
+          s"$root/counts", s"$root/late", s"$root/wm", s"$root/cp",
+          latenessUs = 7200000000L, compactEvery = 8)
+        .trigger(Trigger.AvailableNow()).start()
+      // a timed-out run must not publish truncated counts
+      require(q.awaitTermination(600000),
+        "lateness-audit staged sink did not finish within 600s")
     }
-    val base = 1700000000000L
-    days.sortBy(d => (d % 7) * 100 + d).zipWithIndex.foreach {
-      case (d, i) =>
-        val ord = (d % 7) * 100 + d
-        fs.setTimes(new Path(src, f"b$ord%04d.parquet"),
-          base + i * 2000L, -1)
-    }
-    val q = Streaming.latenessAuditSink(
-        Streaming.readEvents(s, src, maxFilesPerTrigger = 1),
-        s"$root/counts", s"$root/late", s"$root/wm", s"$root/cp",
-        latenessUs = 7200000000L, compactEvery = 8)
-      .trigger(Trigger.AvailableNow()).start()
-    // memoize ONLY a completed run: a timed-out awaitTermination must
-    // retry next invocation, never serve truncated counts forever
-    require(q.awaitTermination(600000),
-      "lateness-audit staged sink did not finish within 600s; " +
-        "not writing the _done memo")
-    fs.create(done).close()
-    root
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

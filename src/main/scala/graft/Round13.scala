@@ -24,98 +24,63 @@ object Round13 {
     * watermarks, so a one-sided heartbeat would pin the other side at
     * the data's tail and late windows would never close), then run
     * the REAL [[etlmudah.streaming.Streaming.attributionJoinFullOuter]]
-    * over the ladder once (done-marker memoized per corpus, only on a
-    * finished run — the q342 discipline). Heartbeat 1 sits 10 days
-    * past the data (every real window closes with margin, so the
+    * over the ladder once per corpus ([[Stage.directory]], published
+    * only on a finished run — the q342 discipline). Heartbeat 1 sits 10
+    * days past the data (every real window closes with margin, so the
     * oracle needs no watermark arithmetic at all); heartbeat 2 is the
     * extra trigger that flushes the state heartbeat 1's watermark
     * evicted. */
-  private def stagedFullOuterJoin(s: SparkSession, dir: String): String = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
-    import etlmudah.streaming.Streaming
-    // under the graft_stage root so Bench's startup clear covers this
-    // cross-run memo exactly like the stagedArtifact family (v2: the
-    // layout adds the compacted read copy below)
-    val root = s"${System.getProperty("java.io.tmpdir", "/tmp")}" +
-      s"/graft_stage/sink_q357_v2_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
-    val fs = new Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new Path(s"$root/_done")
-    if (fs.exists(done)) return root
-    fs.delete(new Path(root), true)
-    val src = s"$root/src"
-    fs.mkdirs(new Path(src))
-    val ev = Tables.eventsTyped(s, dir)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"))
-    // ONE bounded driver scalar: the data's max event time, placing
-    // the heartbeats
-    val maxUs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
-    def stageFile(df: DataFrame, name: String): Unit = {
-      val tmp = s"$root/tmp_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).head
-      fs.rename(part, new Path(src, s"$name.parquet"))
-      fs.delete(new Path(tmp), true)
-    }
-    // one file per event-time DAY, arriving IN CHRONOLOGICAL ORDER —
-    // unlike q342's deliberately scrambled ladder, nothing here may
-    // arrive below the watermark (a late row would DROP on arrival
-    // and the batch-join oracle would overcount). Bounded driver
-    // collect: <= 31 day keys.
-    val days = ev.select(dayofmonth(col("ts")).as("d")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    days.foreach { d =>
-      stageFile(ev.filter(dayofmonth(col("ts")) === d), f"b$d%02d")
-    }
-    def hb(name: String, atUs: Long): Unit =
-      stageFile(ev.limit(1).select(
-        lit(9000000000L).as("event_id"),
-        timestamp_micros(lit(atUs)).cast(ev.schema("ts").dataType).as("ts"),
-        lit(HbUser).as("user_id"), lit("click").as("event_type"))
-        .unionByName(ev.limit(1).select(
-          lit(9000000001L).as("event_id"),
+  private def stagedFullOuterJoin(s: SparkSession, dir: String): String =
+    Stage.directory(s, dir, "full-outer-join-v2-w1h-l10m", "fojoin",
+        "events.parquet") { root =>
+      import org.apache.spark.sql.streaming.Trigger
+      import etlmudah.streaming.Streaming
+      val ev = Tables.eventsTyped(s, dir)
+        .filter(col("event_type").isin("click", "purchase"))
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"))
+      // ONE bounded driver scalar: the data's max event time, placing
+      // the heartbeats
+      val maxUs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
+      def hb(atUs: Long): DataFrame =
+        ev.limit(1).select(
+          lit(9000000000L).as("event_id"),
           timestamp_micros(lit(atUs)).cast(ev.schema("ts").dataType).as("ts"),
-          lit(HbUser).as("user_id"), lit("purchase").as("event_type"))),
-        name)
-    val day = 86400000000L
-    hb("hb1", maxUs + 10 * day)
-    hb("hb2", maxUs + 11 * day)
-    // deterministic arrival order (FileStreamSource feeds oldest
-    // mtime first)
-    val names = days.map(d => f"b$d%02d") ++ Seq("hb1", "hb2")
-    names.zipWithIndex.foreach { case (n, i) =>
-      fs.setTimes(new Path(src, s"$n.parquet"), 1700000000000L + i * 2000L, -1)
+          lit(HbUser).as("user_id"), lit("click").as("event_type"))
+          .unionByName(ev.limit(1).select(
+            lit(9000000001L).as("event_id"),
+            timestamp_micros(lit(atUs)).cast(ev.schema("ts").dataType).as("ts"),
+            lit(HbUser).as("user_id"), lit("purchase").as("event_type")))
+      val day = 86400000000L
+      // one file per event-time DAY, arriving IN CHRONOLOGICAL ORDER —
+      // unlike q342's deliberately scrambled ladder, nothing here may
+      // arrive below the watermark (a late row would DROP on arrival
+      // and the batch-join oracle would overcount)
+      val src = Stage.dayLadder(s, root, ev, d => f"b$d%02d",
+        Seq("hb1" -> hb(maxUs + 10 * day), "hb2" -> hb(maxUs + 11 * day)))
+      val evs = Streaming.readEvents(s, src, maxFilesPerTrigger = 1)
+      val q = Streaming.attributionJoinFullOuter(
+          evs.where(col("event_type") === "purchase"),
+          evs.where(col("event_type") === "click"),
+          "user_id", "ts", windowUs = 3600000000L,
+          lateness = "10 minutes")
+        .select(col("p_user"), unix_micros(col("p_ts")).as("p_us"),
+          col("c_user"), unix_micros(col("c_ts")).as("c_us"))
+        .writeStream.format("parquet")
+        .option("path", s"$root/joined")
+        .option("checkpointLocation", s"$root/cp")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      require(q.awaitTermination(600000),
+        "full-outer staged stream did not finish within 600s")
+      // COMPACT the micro-batch sink for its readers: AvailableNow at
+      // maxFilesPerTrigger=1 leaves one tiny file per (batch, partition)
+      // (~1000 files at sf0.1 — 5.3s/read measured, pure listing+footer
+      // overhead, guide §6 small files). The stream is complete, so one
+      // plain rewrite preserves the committed row set exactly.
+      s.read.parquet(s"$root/joined").coalesce(1)
+        .write.mode("overwrite").parquet(s"$root/joined_compact")
     }
-    val evs = Streaming.readEvents(s, src, maxFilesPerTrigger = 1)
-    val q = Streaming.attributionJoinFullOuter(
-        evs.where(col("event_type") === "purchase"),
-        evs.where(col("event_type") === "click"),
-        "user_id", "ts", windowUs = 3600000000L,
-        lateness = "10 minutes")
-      .select(col("p_user"), unix_micros(col("p_ts")).as("p_us"),
-        col("c_user"), unix_micros(col("c_ts")).as("c_us"))
-      .writeStream.format("parquet")
-      .option("path", s"$root/joined")
-      .option("checkpointLocation", s"$root/cp")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(600000),
-      "full-outer staged stream did not finish within 600s; " +
-        "not writing the _done memo")
-    // COMPACT the micro-batch sink for its readers: AvailableNow at
-    // maxFilesPerTrigger=1 leaves one tiny file per (batch, partition)
-    // (~1000 files at sf0.1 — 5.3s/read measured, pure listing+footer
-    // overhead, guide §6 small files). The stream is complete, so one
-    // plain rewrite preserves the committed row set exactly.
-    s.read.parquet(s"$root/joined").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/joined_compact")
-    fs.create(done).close()
-    root
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -151,7 +151,7 @@ object RoundsA {
     // text formats): write zstd ORC, read back, aggregate — types
     // survive exactly, so the oracle is the source table itself
     "q181_orc_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q181_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q181", dir)
       etlmudah.sinks.Writers.writeOrc(
         Tables.orders(s, dir).select("o_orderkey", "o_orderpriority", "o_totalprice"),
         out)

@@ -105,7 +105,7 @@ object RoundsB {
     // aggregate. The oracle sees only values: layout must never
     // change results
     "q235_zorder_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q235_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q235", dir)
       etlmudah.sinks.Writers.writeZOrdered(
         Tables.orders(s, dir), out,
         Seq("o_totalprice", "o_custkey"), files = 16)

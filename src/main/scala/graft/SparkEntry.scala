@@ -74,7 +74,7 @@ object SparkEntry {
     * published one. q108 still runs the miner itself (its own oracle
     * row benchmarks the mining cost every round). */
   private[graft] def stagedClusterPairs(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, clusterPairsTag, "pairs")(
+    Stage.parquet(s, dir, clusterPairsTag, "pairs")(
       clusterPairs(Tables.documents(s, dir)))
 
   /** The q198 trained weight table staged once per corpus — the
@@ -87,7 +87,7 @@ object SparkEntry {
     * holdout protocol it demonstrates. */
   private[graft] val lrWeightsTag = "lrw-v1-b16-s3-lr0.02-y-spark"
   private[graft] def stagedLrWeights(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, lrWeightsTag, "lrw")(
+    Stage.parquet(s, dir, lrWeightsTag, "lrw")(
       etlmudah.text.TextStats.trainHashedLogReg(
         Tables.documents(s, dir)
           .withColumn("y",
@@ -120,7 +120,7 @@ object SparkEntry {
 
   private[graft] val portableSigTag = "psig-v1-n3-k128"
   private[graft] def stagedPortableSigs(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, portableSigTag, "psig")(
+    Stage.parquet(s, dir, portableSigTag, "psig")(
       Dedup.minhashPortableSigTable(Tables.documents(s, dir),
         "text", "doc_id", shingleN = 3, k = 128))
 
@@ -134,7 +134,7 @@ object SparkEntry {
     * benchmarks the mining cost every round, the q108 discipline). */
   private[graft] val winnowFpTag = "wfp-v1-k3-w4"
   private[graft] def stagedWinnowFps(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, winnowFpTag, "wfp")(
+    Stage.parquet(s, dir, winnowFpTag, "wfp")(
       Dedup.winnowFingerprints(Tables.documents(s, dir), "text", "doc_id",
         k = 3, w = 4))
 
@@ -153,7 +153,7 @@ object SparkEntry {
     * weights by construction). */
   private[graft] val coEdgeTag = "coedge-v1-orderkey-partkey"
   private[graft] def stagedCoEdges(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, coEdgeTag, "coedge", "lineitem.parquet")(
+    Stage.parquet(s, dir, coEdgeTag, "coedge", "lineitem.parquet")(
       etlmudah.graph.Centrality.cooccurrenceEdges(
         Tables.lineitem(s, dir), "l_orderkey", "l_partkey"))
 
@@ -164,7 +164,7 @@ object SparkEntry {
     * consumes this artifact and pays only the rank loop + the gate. */
   private[graft] val hostEdgeTag = "hedge-v1-links2"
   private[graft] def stagedHostEdges(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, hostEdgeTag, "hedge") {
+    Stage.parquet(s, dir, hostEdgeTag, "hedge") {
       import etlmudah.web.Web
       val id = col("doc_id")
       Web.hostLinkEdges(
@@ -177,108 +177,9 @@ object SparkEntry {
 
   private[graft] val winnowPairTag = "wpair-v1-k3-w4-ms2-df50"
   private[graft] def stagedWinnowPairs(s: SparkSession, dir: String): DataFrame =
-    stagedArtifact(s, dir, winnowPairTag, "wpair")(
+    Stage.parquet(s, dir, winnowPairTag, "wpair")(
       Dedup.winnowSharedPairsFromFps(stagedWinnowFps(s, dir),
         minShared = 2L, maxDf = 50L))
-
-  /** Stage-once machinery shared by the derived artifacts
-    * ([[stagedClusterPairs]], [[stagedPortableSigs]],
-    * [[stagedWinnowFps]], [[stagedWinnowPairs]]): keyed on source URI +
-    * per-leaf-file (name, length, mtime) + a builder version/params
-    * tag. Publishing uses per-writer ATTEMPT DIRS plus an atomically
-    * renamed `CURRENT` pointer file (see the protocol comment in the
-    * body): a live attempt dir is never deleted, so racing writers and
-    * mid-scan readers are always safe; `_SUCCESS` inside the pointed
-    * attempt guards completeness. */
-  private[graft] def stagedArtifact(s: SparkSession, dir: String, tag: String,
-                             prefix: String,
-                             srcTable: String = "documents.parquet")
-                            (build: => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    // qualify BEFORE relativizing: listFiles returns scheme-qualified
-    // paths, so stripping an unqualified root would be a no-op and the
-    // key would carry absolute paths (key churn across hosts/tmpdirs)
-    val src = fs.makeQualified(new Path(s"$dir/$srcTable"))
-    val srcUriPath = src.toUri.getPath
-    val rootSt = fs.getFileStatus(src)
-    // RECURSIVE listing: a partitioned/nested layout has no top-level
-    // data files, and a non-recursive list would leave the key constant
-    // across corpus regenerations (silent stale-artifact reuse). Paths
-    // are recorded relative to the root so nested same-name files stay
-    // distinct.
-    val leafIds: Seq[String] =
-      if (rootSt.isDirectory) {
-        val it = fs.listFiles(src, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val st = it.next()
-          // walk up to the root: a leaf only enters the key if NO
-          // segment on its relative path is `_`/`.`-prefixed — data
-          // under e.g. a leftover _temporary/ from a killed write is
-          // not part of the corpus identity and must not churn the key
-          val segs = scala.collection.mutable.ArrayBuffer.empty[String]
-          var p = st.getPath
-          var visible = true
-          while (p != null && p.toUri.getPath != srcUriPath) {
-            segs += p.getName
-            if (p.getName.startsWith("_") || p.getName.startsWith("."))
-              visible = false
-            p = p.getParent
-          }
-          if (visible && p != null)
-            buf += s"${segs.reverse.mkString("/")}|${st.getLen}|${st.getModificationTime}"
-        }
-        buf.sorted.toSeq
-      } else Seq(s"${rootSt.getLen}|${rootSt.getModificationTime}")
-    // layout=2: attempt-dir + CURRENT-pointer publishing (below); the
-    // version keeps new code off old-layout dirs from earlier rounds
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest((s"$srcUriPath|$tag|layout=2|n=${leafIds.size}|" + leafIds.mkString(";"))
-        .getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val out = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stage/${prefix}_$key"
-    val current = new Path(s"$out/CURRENT")
-    // Publish protocol: each writer builds under its own attempt dir,
-    // then atomically renames a pointer file into CURRENT. A live
-    // attempt dir is NEVER deleted, so a reader mid-scan of one
-    // writer's artifact cannot lose files to a racing writer (the
-    // failure the previous rename-first protocol still allowed); racing
-    // writers resolve to last-pointer-wins over content-identical
-    // artifacts. Crash-abandoned attempt dirs are unreferenced garbage,
-    // bounded by writer count, reclaimed when the keyed dir is.
-    def resolve(): Option[String] =
-      try {
-        if (!fs.exists(current)) None
-        else {
-          val in = fs.open(current)
-          val name = try scala.io.Source.fromInputStream(in).mkString.trim
-            finally in.close()
-          Some(s"$out/$name")
-            .filter(a => fs.exists(new Path(s"$a/_SUCCESS")))
-        }
-      } catch {
-        // a racing writer's delete+rename pointer swap has a window
-        // where CURRENT vanishes between our exists() and open() —
-        // treat it as absent (worst case: a redundant rebuild), never
-        // a propagated FileNotFoundException
-        case _: java.io.FileNotFoundException => None
-      }
-    val attemptPath = resolve().getOrElse {
-      val attempt = s"attempt-${java.util.UUID.randomUUID().toString.take(8)}"
-      build.write.mode("overwrite").parquet(s"$out/$attempt")
-      val ctmp = new Path(s"$out/.CURRENT.$attempt")
-      val o = fs.create(ctmp, true)
-      try o.write(attempt.getBytes("UTF-8")) finally o.close()
-      fs.delete(current, false) // no-op unless a racer just published
-      fs.rename(ctmp, current)  // atomic; loser's pointer stays as junk
-      fs.delete(ctmp, false)    // if our rename lost, drop our pointer
-      // a racer mid-swap can blank CURRENT for an instant; one retry
-      // covers it before declaring the publish failed
-      resolve().orElse { Thread.sleep(50); resolve() }
-        .getOrElse(sys.error(s"staged artifact publish failed: $out"))
-    }
-    s.read.parquet(attemptPath)
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     baseQueries ++ RoundsA.queries ++ RoundsB.queries ++ Round11.queries ++ Round12.queries ++ Round13.queries
@@ -841,8 +742,7 @@ object SparkEntry {
     // shape through an actual RDBMS wire instead of TSV. Production is
     // the same code with a Postgres URL.
     "q153_jdbc_roundtrip" -> ((s, dir) => {
-      val db = s"${System.getProperty("java.io.tmpdir", "/tmp")}" +
-        s"/graft_jdbc_${dir.replaceAll("[^0-9a-zA-Z]", "_")}/orders_db"
+      val db = s"${Stage.scratch("graft_jdbc", dir)}/orders_db"
       val url = s"jdbc:derby:$db;create=true"
       etlmudah.sinks.Writers.writeJdbc(
         Tables.orders(s, dir).select("o_orderkey", "o_orderpriority", "o_totalprice"),
@@ -858,7 +758,7 @@ object SparkEntry {
     }),
 
     "q44_tsv_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q44_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q44", dir)
       etlmudah.sinks.Writers.writeTsv(
         Tables.orders(s, dir).select("o_orderkey", "o_orderpriority", "o_totalprice"),
         out)
@@ -877,7 +777,7 @@ object SparkEntry {
     // totalprice (disjoint file min/max -> data skipping; clustering is
     // pinned in WritersSpec), read a range slice back, aggregate
     "q85_range_sorted_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q85_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q85", dir)
       etlmudah.sinks.Writers.writeRangeSorted(
         Tables.orders(s, dir), out, Seq("o_totalprice"), files = 8)
       s.read.parquet(out)
@@ -893,7 +793,7 @@ object SparkEntry {
     // status, read back ONE partition (directory pruning exercised; the
     // pruning itself is pinned in WritersSpec), aggregate.
     "q45_partitioned_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q45_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q45", dir)
       etlmudah.sinks.Writers.writePartitioned(
         Tables.orders(s, dir).select("o_orderkey", "o_orderstatus",
           "o_orderpriority", "o_totalprice"),
@@ -910,7 +810,7 @@ object SparkEntry {
     // two getOrCompute calls, second is served from cache (plan identity
     // pinned in WritersSpec) — values must still match the source table.
     "q46_staged_cached" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q46_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q46", dir)
       etlmudah.sinks.Writers.writeStaged(
         Tables.customer(s, dir).select("c_custkey", "c_nationkey", "c_acctbal"),
         out)
@@ -1305,7 +1205,7 @@ object SparkEntry {
     // write documents as JSON lines, read back, re-aggregate — values
     // must survive the text encoding exactly (q44's TSV contract)
     "q116_jsonl_roundtrip" -> ((s, dir) => {
-      val out = s"/tmp/graft_sink_q116_${dir.replaceAll("[^0-9a-zA-Z]", "_")}"
+      val out = Stage.scratch("graft_sink_q116", dir)
       etlmudah.sinks.Writers.writeJsonl(
         Tables.documents(s, dir).select("doc_id", "source", "n_chars"), out)
       s.read.schema("doc_id BIGINT, source STRING, n_chars BIGINT").json(out)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "etlmudah.GraftExtensions")
-      // events.ts is parquet TIMESTAMP(NANOS); Spark has no nanos type —
-      // read as epoch-nanos long (Tables.eventsTyped derives micros).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata ships one parquet file per table; 128MB splits would scan
-      // each fact on a single task at local SFs (row-group-bounded)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // wide signature aggregates need this to stay in codegen (see Bench)
-      .config("spark.sql.codegen.maxFields", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -16,6 +16,24 @@ class ContractSpec extends AnyFunSuite {
     assert(nums.distinct.size == q.size, "duplicate q-number prefixes (a Map key collision ate one)")
   }
 
+  /** Pins the registry's surface byte for byte: a refactor that moves
+    * queries or oracles between files must leave both digests unchanged;
+    * adding, renaming or editing a query or an oracle updates them. */
+  test("registry digest: queries key set and (key, oracleSql) pairs") {
+    def sha256(s: String): String = java.security.MessageDigest
+      .getInstance("SHA-256").digest(s.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+    val keys = sha256(SparkEntry.queries.keys.toSeq.sorted.mkString("\u0000"))
+    val pairs = sha256(SparkEntry.oracleSql.toSeq.sorted
+      .map { case (k, v) => s"$k\u0000$v" }.mkString("\u0000"))
+    assert(keys ==
+      "bf8c9d3a76b19532c8e7e77215d8772399a0b303d342d6352bed2069d6be0b7d",
+      s"queries key set digest: $keys")
+    assert(pairs ==
+      "9ff35b643b7a0a57353a7f56da78f2441069d0b83b892bf90919b0f037a45dd7",
+      s"oracleSql pairs digest: $pairs")
+  }
+
   test("GraftExtensions: every native function resolves and evaluates in SQL") {
     val spark = SparkTestSession.spark
     val probes = Seq(

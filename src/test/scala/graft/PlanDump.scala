@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan + exclusive-timing dump for specific registered queries:
   * `sbt "Test/runMain graft.PlanDump sfDir outDir reps q1 q2 ..."` —
   * writes each query's `.explain("formatted")` to `outDir/<name>.txt`
@@ -16,17 +14,7 @@ object PlanDump {
     val outDir = args(1)
     val reps = args(2).toInt
     val names = args.drop(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "etlmudah.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.codegen.maxFields", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     // session warmup so the first query doesn't absorb codegen cold-start

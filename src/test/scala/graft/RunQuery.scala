@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only single-query runner:
   * `sbt "Test/runMain graft.RunQuery q75_cube_orders /root/testdata/sf0.001"`
   * Prints the result (and row count) of one registered SparkEntry query —
@@ -16,15 +14,7 @@ object RunQuery {
     }
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "etlmudah.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.maxFields", "512")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     // cache: show/count/explain otherwise recompute the query three times
     val df = SparkEntry.queries(name)(spark, dir).cache()
