@@ -1,8 +1,9 @@
 package etlmudah.scale
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import etlmudah.text.TextStats
 
@@ -842,27 +843,41 @@ object Dedup {
   }
 
   /** Duplicate-CLUSTER assignment: connected components over a near-dup
-    * pair graph by iterative min-label propagation. Each node's label
-    * becomes the minimum label among itself and its neighbors until a
-    * fixpoint; near-dup components are near-cliques, so convergence is
-    * 2-3 rounds regardless of corpus size. Returns (doc_id, cluster_id,
-    * cluster_size) for every node that appears in a pair; cluster_id is
-    * the component's minimum doc id (the canonical survivor).
+    * pair graph. Returns (doc_id, cluster_id, cluster_size) for every
+    * node that appears in a pair, ordered by doc_id; cluster_id is the
+    * component's minimum doc id (the canonical survivor). Self-loops
+    * and repeated or reversed pairs add nothing; a pair with one null id
+    * contributes only its other end, and null ids never appear.
     *
-    * Scale notes: the edge set is near-dup pairs only — a vanishing
-    * fraction of the corpus — and is materialized once for the
-    * iteration. Labels are `localCheckpoint`ed each round so the plan
-    * does not grow with iteration count. Each round also pointer-jumps
-    * (label := label(label), path halving), so even adversarial
-    * long-chain graphs converge in O(log diameter) rounds instead of
-    * O(diameter) — near-dup components in practice are near-cliques
-    * and finish in 2-3 rounds either way.
+    * Round layout: the pair set is pinned once, and edge sets at or
+    * below `localEdgeThreshold` rows (distinct edges, the pairs taken
+    * both ways) are labelled on the DRIVER by union-find instead of in
+    * Spark rounds — on one machine a round costs scheduling, not data
+    * work, and the former single-partition rounds ran one pinned job
+    * plus an `isEmpty` probe per round (~20 jobs on a 47-node graph).
+    * One job reads the pinned pairs: each partition folds its pairs
+    * into a spanning forest, one (id, component min) link per node it
+    * holds, and the driver unions those links over sorted primitive
+    * long arrays ([[minLabels]]), so driver memory is a few dozen bytes
+    * per NODE however many pairs repeat it. The result goes back as an
+    * in-memory local relation, already in doc_id order: one 3-long row
+    * per node. Every node owns at least one distinct edge, so at the
+    * 5M-edge default bound that is at most 5M rows of ~90 B as encoded
+    * Spark rows (a 3-long payload plus row and array headers): ~450 MB
+    * of driver heap at the very bound, plus a second copy while a plan
+    * executes it. Larger edge sets keep their natural partitioning and
+    * run the distributed rounds below, with AQE sizing each round's
+    * exchanges (pass 0 to force that path).
     *
-    * Round layout: edge sets at or below `localEdgeThreshold` rows run
-    * every round on a single partition — per-round cost is scheduling,
-    * not shuffling, the right shape for the post-mining edge set on one
-    * machine. Larger edge sets keep their natural partitioning and let
-    * AQE size each round's exchanges (pass 0 to force that path).
+    * Distributed rounds: iterative min-label propagation — each node's
+    * label becomes the minimum label among itself and its neighbors
+    * until a fixpoint. Labels are `localCheckpoint`ed each round so the
+    * plan does not grow with iteration count. Each round also
+    * pointer-jumps (label := label(label), path halving), so even
+    * adversarial long-chain graphs converge in O(log diameter) rounds
+    * instead of O(diameter) — near-dup components in practice are
+    * near-cliques and finish in 2-3 rounds either way. Labels still
+    * changing after `maxIter` rounds are an error, never a result.
     *
     * Skew guard (distributed path only): the per-round joins key on raw
     * node/label ids, so a hot star head — one node in a vast fraction of
@@ -877,7 +892,7 @@ object Dedup {
     * hot-star graph). */
   /** The CC round-layout decision, factored pure so the scale
     * rehearsal can assert it ENGAGES on a given graph's real stats:
-    * returns (local single-partition rounds?, salted joins?). */
+    * returns (driver tier?, salted joins?). */
   private[scale] def ccLayout(edgeCount: Long, maxDegree: Long,
                               localEdgeThreshold: Long,
                               hotDegreeThreshold: Long): (Boolean, Boolean) = {
@@ -890,30 +905,28 @@ object Dedup {
                   localEdgeThreshold: Long = 5000000L,
                   hotDegreeThreshold: Long = 2000000L,
                   skewSaltFactor: Int = 16): DataFrame = {
-    // materialize the PAIR MINING PIPELINE once before symmetrizing:
-    // union(p, p.swapped) evaluates its input twice, and the input here
-    // is the whole candidate+verify near-dup join — measured ~2x the
-    // mining cost inside every cluster-consuming query before this
+    // pin the PAIR MINING PIPELINE so it runs once: the driver tier
+    // counts and then reads it, and union(p, p.swapped) below would
+    // evaluate its input twice — measured ~2x the mining cost inside
+    // every cluster-consuming query before the pin. Lazy, so the count
+    // job is also the job that materializes it.
     val p = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .localCheckpoint(true)
-    val rawEdges = p
+      .localCheckpoint(false)
+    val nPairs = p.queryExecution.toRdd.count()
+    // the symmetrized edge set has at most 2 * nPairs rows, so a small
+    // pair set is known to be local without building it
+    if (2 * nPairs <= localEdgeThreshold) return clustersOnDriver(p)
+    val edges = p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    // auto-select the round layout from the materialized edge count
-    // (count on a checkpointed frame is a cheap metadata-ish pass)
-    val edgeCount = rawEdges.count()
-    val local = edgeCount <= localEdgeThreshold
-    def pin(df: DataFrame): DataFrame =
-      (if (local) df.coalesce(1) else df).localCheckpoint(true)
-    val edges = if (local) pin(rawEdges) else rawEdges
+    val edgeCount = edges.count()
+    if (edgeCount <= localEdgeThreshold) return clustersOnDriver(p)
     // hot-key probe: max degree over the materialized edge set (one
-    // map-side-combined aggregate; skipped on the local layout where a
-    // single partition is the plan anyway)
-    val maxDegree = if (local) 0L
-      else edges.groupBy(col("src"))
-        .agg(count(lit(1)).as("__d")).agg(max(col("__d"))).head().getLong(0)
+    // map-side-combined aggregate)
+    val maxDegree = edges.groupBy(col("src"))
+      .agg(count(lit(1)).as("__d")).agg(max(col("__d"))).head().getLong(0)
     val (_, salted) =
       ccLayout(edgeCount, maxDegree, localEdgeThreshold, hotDegreeThreshold)
     def joinLabels(bigSide: DataFrame, labelSide: DataFrame, key: String,
@@ -922,8 +935,9 @@ object Dedup {
         etlmudah.joins.Joins.saltedJoin(bigSide, labelSide, key,
           skewSaltFactor, joinType)
       else bigSide.join(labelSide, Seq(key), joinType)
-    var labels = pin(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id"))
+      .localCheckpoint(true)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -945,17 +959,111 @@ object Dedup {
           least(col("l1"), coalesce(col("ll"), col("l1"))).as("new_label"))
       // convergence flag rides along in the same materialization, so each
       // round is exactly one job plus a cheap isEmpty probe
-      val updated = pin(jumped.select(col("id"), col("new_label"),
-        (col("new_label") < col("label")).as("chg")))
+      val updated = jumped.select(col("id"), col("new_label"),
+          (col("new_label") < col("label")).as("chg"))
+        .localCheckpoint(true)
       converged = updated.filter(col("chg")).isEmpty
       labels = updated.select(col("id"), col("new_label").as("label"))
       iter += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"dupClusters: labels still changing after maxIter=$maxIter rounds")
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("label"))
       .select(col("id").as("doc_id"), col("label").as("cluster_id"),
         col("cluster_size"))
       .orderBy(col("doc_id"))
+  }
+
+  /** The driver tier of [[dupClusters]] over its pinned (src, dst)
+    * pairs: one job collects each partition's spanning forest, the
+    * driver unions the forests and hands the labels back as a local
+    * relation in doc_id order, with the schema the distributed rounds
+    * produce (ids nullable iff either input id is). */
+  private def clustersOnDriver(p: DataFrame): DataFrame = {
+    val forests = p.queryExecution.toRdd.mapPartitions { rows =>
+      val a = Array.newBuilder[Long]
+      val b = Array.newBuilder[Long]
+      // a null end links nothing: the other end enters as a self-loop
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          a += r.getLong(0)
+          b += (if (r.isNullAt(1)) r.getLong(0) else r.getLong(1))
+        } else if (!r.isNullAt(1)) {
+          a += r.getLong(1)
+          b += r.getLong(1)
+        }
+      }
+      Iterator.single(minLabels(a.result(), b.result()))
+    }.collect()
+    val (ids, roots) =
+      minLabels(forests.flatMap(_._1), forests.flatMap(_._2))
+    val sizes = new Array[Long](ids.length)
+    roots.foreach(r => sizes(java.util.Arrays.binarySearch(ids, r)) += 1)
+    val idNullable = p.schema.exists(_.nullable)
+    localRows(p.sparkSession, StructType(Seq(
+        StructField("doc_id", LongType, idNullable),
+        StructField("cluster_id", LongType, idNullable),
+        StructField("cluster_size", LongType, nullable = false))),
+      ids.length) { i =>
+      (ids(i), roots(i), sizes(java.util.Arrays.binarySearch(ids, roots(i))))
+    }
+  }
+
+  /** Connected components of the pairs (a(k), b(k)) by union-find over
+    * primitive arrays: returns the sorted distinct ids and, per id, the
+    * minimum id of its component. Ids are indexed by sorted position,
+    * so linking each root under the smaller index links it under the
+    * smaller id, and a root always holds its component's minimum. */
+  private def minLabels(a: Array[Long],
+                        b: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = sortedDistinct(a ++ b)
+    val n = ids.length
+    val parent = Array.range(0, n)
+    def find(i0: Int): Int = {  // path halving
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    for (k <- a.indices) {
+      val x = find(java.util.Arrays.binarySearch(ids, a(k)))
+      val y = find(java.util.Arrays.binarySearch(ids, b(k)))
+      if (x < y) parent(y) = x else if (y < x) parent(x) = y
+    }
+    (ids, Array.tabulate(n)(i => ids(find(i))))
+  }
+
+  /** `xs` sorted ascending without repeats, in place on its own buffer:
+    * no boxing (the graph driver tiers' node and edge-key index). */
+  private[etlmudah] def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var n = 0
+    for (i <- xs.indices) if (n == 0 || xs(i) != xs(n - 1)) {
+      xs(n) = xs(i)
+      n += 1
+    }
+    java.util.Arrays.copyOf(xs, n)
+  }
+
+  /** A graph driver tier's result handed back as an in-memory local
+    * relation: `n` rows of three longs in index order, each built only
+    * as the relation encodes it (never held as a boxed collection),
+    * then fitted to `schema`: its names, its (integral) types and its
+    * nullability. */
+  private[etlmudah] def localRows(spark: SparkSession, schema: StructType,
+                                  n: Int)(row: Int => (Long, Long, Long)): DataFrame = {
+    import spark.implicits._
+    val rows = new IndexedSeq[(Long, Long, Long)] {
+      def length: Int = n
+      def apply(i: Int): (Long, Long, Long) = row(i)
+    }
+    rows.toDF(schema.fieldNames.toSeq: _*).select(schema.fields.map { f =>
+      // no value fails the cast (each came from that type); the
+      // encoder's longs are never null, and a CASE without ELSE is the
+      // identity that widens a column the schema wants nullable
+      val c = col(f.name).cast(f.dataType)
+      (if (f.nullable) when(c.isNotNull, c) else c).as(f.name)
+    }.toSeq: _*)
   }
 
   /** Survivor-selection POLICY over duplicate clusters: keep the

@@ -116,10 +116,25 @@ class CentralitySpec extends SparkSpec {
       (3L, 1L, 1L), (2L, 3L, 1L), (3L, 2L, 1L)))
   }
 
+  /** triangleStats at the default threshold (the driver tier on these
+    * graphs) pinned to the forced Spark path (threshold 0): same rows
+    * in the same order, same schema. Returns node -> (degree,
+    * triangles). */
+  private def triStatsBothTiers(
+      edges: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] = {
+    val driver = Centrality.triangleStats(edges)
+    val joins = Centrality.triangleStats(edges, localEdgeThreshold = 0L)
+    assert(driver.schema == joins.schema)
+    val rows = driver.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows == joins.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+    rows.map(r => r._1 -> ((r._2, r._3))).toMap
+  }
+
   private def triStats(edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
     import spark.implicits._
-    Centrality.triangleStats(edges.toDF("u", "v"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    triStatsBothTiers(edges.toDF("u", "v"))
   }
 
   /** Serial triangle replay: brute-force closed wedges over the
@@ -146,6 +161,24 @@ class CentralitySpec extends SparkSpec {
     val got = triStats(edges)
     assert(got == serialTriangles(edges), s"got $got")
     assert(got(1L) == ((3L, 3L)) && got(5L) == ((1L, 0L)) && got(6L) == ((1L, 0L)))
+    // int node ids stay ints on both tiers
+    import spark.implicits._
+    val ints = edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("u", "v")
+    val driver = Centrality.triangleStats(ints)
+    val joins = Centrality.triangleStats(ints, localEdgeThreshold = 0L)
+    assert(driver.schema == joins.schema &&
+      driver.schema("node").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(driver.collect().toSeq == joins.collect().toSeq)
+  }
+
+  test("triangleStats: the driver tier runs at most 2 Spark jobs") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (3L, 2L), (2L, 4L),
+      (4L, 3L), (4L, 5L), (6L, 7L)).toDF("u", "v")
+    val (jobs, out) =
+      countingJobs(Centrality.triangleStats(edges).collect())
+    assert(out.length == 7)
+    assert(jobs <= 2, s"$jobs jobs")
   }
 
   test("triangleStats: skewed star closes no triangles; adding one rim edge closes exactly one") {
@@ -261,8 +294,7 @@ class CentralitySpec extends SparkSpec {
       Seq((i, i + 1), (i + 1, i + 2), (i, i + 2)))
     val edges = (clique ++ spokes ++ rims).toDF("u", "v").repartition(8)
     val t0 = System.nanoTime()
-    val got = Centrality.triangleStats(edges).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = triStatsBothTiers(edges)
     val secs = (System.nanoTime() - t0) / 1e9
     assert(got(1L) == ((3059L, 59L * 58L / 2L)),
       s"hub (clique + spokes): ${got(1L)}")

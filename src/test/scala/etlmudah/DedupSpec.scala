@@ -360,22 +360,77 @@ class DedupSpec extends SparkSpec {
     assert(out("digits") == ((3L, 3L)))    // + 4==5
   }
 
+  /** dupClusters at the default threshold (the driver tier on these
+    * graphs) pinned to the forced distributed rounds (threshold 0):
+    * same rows in the same doc_id order, same schema. Returns the
+    * default tier's rows. */
+  private def clustersBothTiers(
+      pairs: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] = {
+    val driver = Dedup.dupClusters(pairs)
+    val rounds = Dedup.dupClusters(pairs, localEdgeThreshold = 0L)
+    assert(driver.schema == rounds.schema)
+    val rows = driver.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows == rounds.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+    rows
+  }
+
   test("dupClusters: min-label components over a known graph") {
     import spark.implicits._
     // two components: {1,2,3} (chain 1-2, 2-3) and {7,9}
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
-    val out = Dedup.dupClusters(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(out == Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L),
+    val out = clustersBothTiers(pairs)
+    assert(out == Seq((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L),
       (7L, 7L, 2L), (9L, 7L, 2L)))
   }
 
   test("dupClusters: long chain converges (diameter > one round)") {
     import spark.implicits._
     val chain = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.dupClusters(chain).collect()
-    assert(out.length == 13 && out.forall(_.getLong(1) == 0L))
-    assert(out.forall(_.getLong(2) == 13L))
+    val out = clustersBothTiers(chain)
+    assert(out.length == 13 && out.forall(_._2 == 0L))
+    assert(out.forall(_._3 == 13L))
+  }
+
+  test("dupClusters: self-loops, reversed duplicates, empty input and null ids agree on both tiers") {
+    import spark.implicits._
+    // one graph, three disjoint parts: a self-loop puts its node in as
+    // a singleton and links nothing (1-3); repeated and reversed pairs
+    // are one edge (11-14); a null end links nothing, so the other end
+    // stands alone, and nulls drop (21-25)
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(1L)), (Some(2L), Some(3L)), (Some(3L), Some(3L)),
+      (Some(11L), Some(12L)), (Some(12L), Some(11L)), (Some(11L), Some(12L)),
+      (Some(14L), Some(13L)), (Some(13L), Some(14L)),
+      (Some(21L), None), (None, Some(24L)), (None, None), (Some(22L), Some(23L)),
+      (Some(25L), None), (Some(25L), Some(22L))).toDF("id_a", "id_b")
+    assert(clustersBothTiers(pairs) == Seq((1L, 1L, 1L), (2L, 2L, 2L),
+      (3L, 2L, 2L), (11L, 11L, 2L), (12L, 11L, 2L), (13L, 13L, 2L),
+      (14L, 13L, 2L), (21L, 21L, 1L), (22L, 22L, 3L), (23L, 22L, 3L),
+      (24L, 24L, 1L), (25L, 22L, 3L)))
+    // 0 edges are within any threshold, 0 included, so an empty pair
+    // set takes the driver tier on both calls
+    assert(clustersBothTiers(
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b")).isEmpty)
+  }
+
+  test("dupClusters: the driver tier runs at most 3 Spark jobs") {
+    import spark.implicits._
+    // the former single-partition layout ran a pinned job plus an
+    // isEmpty probe per round on top of its setup pins
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
+    val (jobs, out) = countingJobs(Dedup.dupClusters(pairs).collect())
+    assert(out.length == 5)
+    assert(jobs <= 3, s"$jobs jobs")
+  }
+
+  test("dupClusters: rounds that reach maxIter unconverged throw") {
+    import spark.implicits._
+    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.dupClusters(chain, maxIter = 1, localEdgeThreshold = 0L))
+    assert(e.getMessage.contains("maxIter=1"), e.getMessage)
   }
 
   test("dupSurvivorsBy: per-cluster argmax quality, ties break to lowest id") {

@@ -944,24 +944,12 @@ class TextStatsSpec extends SparkSpec {
     val words = ('a' to 'j').zipWithIndex.map { case (c, i) =>
       Seq.fill(30 - i)(s"$c$c") }
     val df = Seq((1L, words.flatten.mkString(" "))).toDF("doc_id", "text")
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    def countJobs(mb: Int): (Int, Seq[(Int, String)]) = {
-      spark.sparkContext.addSparkListener(listener)
-      jobs = 0
-      // threshold 0 forces the distributed loop — this test is about
-      // THAT loop's batching; small vocabs normally drive locally
-      val out = TextStats.bpeMerges(df, "text", nMerges = 10,
+    // threshold 0 forces the distributed loop — this test is about
+    // THAT loop's batching; small vocabs normally drive locally
+    def countJobs(mb: Int): (Int, Seq[(Int, String)]) = countingJobs(
+      TextStats.bpeMerges(df, "text", nMerges = 10,
           minPairFreq = 2L, maxBatch = mb, driverVocabThreshold = 0L)
-        .collect().map(r => (r.getInt(0), r.getString(3))).toSeq
-      Thread.sleep(500) // listener events are async; let the bus drain
-      spark.sparkContext.removeSparkListener(listener)
-      (jobs, out)
-    }
+        .collect().map(r => (r.getInt(0), r.getString(3))).toSeq)
     val (serialJobs, serialOut) = countJobs(1)
     val (batchedJobs, batchedOut) = countJobs(16)
     assert(batchedOut == serialOut)
