@@ -196,32 +196,6 @@ object Centrality {
       .limit(k)
   }
 
-  /** Per-node triangle participation + degree over an undirected edge
-    * list (u, v with u < v; defensively canonicalized). Returns
-    * (node, degree, triangles) ordered triangles DESC with node as the
-    * tie-break — the local clustering signal: near-dup components are
-    * near-cliques (triangle-dense), spam link farms are stars
-    * (triangle-free), so triangles/degree-choose-2 separates the two
-    * where degree alone cannot.
-    *
-    * Algorithm: degree-ordered orientation (Schank & Wagner 2005; the
-    * MapReduce formulation is Suri & Vassilvitskii 2011) — each edge
-    * points from its (degree, node)-smaller endpoint to the larger, so
-    * every triangle is generated EXACTLY once as a wedge at its
-    * smallest vertex plus one closure lookup, and max out-degree is
-    * O(√E) on ANY graph, making the wedge count Σ outdeg² the minimum
-    * over orientations. Both the wedge join and the closure are pure
-    * EQUI-joins (the wedge-endpoint ordering is a post-join filter on
-    * the carried degree, and closure probes the oriented pair itself) —
-    * no OR-condition join that would degrade to a nested loop.
-    *
-    * Scale shape: oriented edges are materialized once
-    * (`localCheckpoint`) and feed all three join sides — without it the
-    * whole upstream miner would run three times. Exact triangle
-    * counting costs the wedge count by construction; on graphs whose
-    * thresholded core is still wedge-heavy, sample wedges upstream
-    * (Seshadhri et al. 2013) — approximation is a caller decision, not
-    * something this operator does silently. */
   /** k-CORE peel (Seidman 1983; the Batagelj–Zaveršnik peel made
     * bulk-synchronous): repeatedly drop nodes whose degree WITHIN the
     * surviving subgraph is < k, `rounds` times; returns the survivors
@@ -644,9 +618,22 @@ object Centrality {
     * in-memory local relation in output order, with the schema the
     * Spark path produces. Pass 0 to force the Spark path.
     *
-    * Spark path: the same orientation as equi-joins — each triangle is
+    * Spark path: the same orientation as equi-joins (the MapReduce
+    * formulation is Suri & Vassilvitskii 2011) — each triangle is
     * generated exactly once as a wedge at its lowest-ranked vertex,
-    * closed by an oriented edge. */
+    * closed by an oriented edge. Max out-degree is O(√E) on any graph,
+    * so the wedge count Σ outdeg² is the minimum over orientations, and
+    * both joins are pure equi-joins (the wedge-endpoint ordering is a
+    * post-join filter on the carried degree), never an OR-condition
+    * nested loop. Exact counting costs the wedge count by construction;
+    * on graphs whose thresholded core is still wedge-heavy, sample
+    * wedges upstream (Seshadhri et al. 2013) — approximation is a
+    * caller decision, not something this operator does silently.
+    *
+    * Why triangles: near-dup components are near-cliques
+    * (triangle-dense) and spam link farms are stars (triangle-free), so
+    * triangles / C(degree, 2) separates the two where degree alone
+    * cannot. */
   def triangleStats(edges: DataFrame,
                     localEdgeThreshold: Long = 500000L): DataFrame = {
     val canon = edges.select(

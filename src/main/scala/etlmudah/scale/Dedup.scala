@@ -924,9 +924,10 @@ object Dedup {
     val edgeCount = edges.count()
     if (edgeCount <= localEdgeThreshold) return clustersOnDriver(p)
     // hot-key probe: max degree over the materialized edge set (one
-    // map-side-combined aggregate)
+    // map-side-combined aggregate); no edges have max degree 0, not NULL
     val maxDegree = edges.groupBy(col("src"))
-      .agg(count(lit(1)).as("__d")).agg(max(col("__d"))).head().getLong(0)
+      .agg(count(lit(1)).as("__d"))
+      .agg(coalesce(max(col("__d")), lit(0L))).head().getLong(0)
     val (_, salted) =
       ccLayout(edgeCount, maxDegree, localEdgeThreshold, hotDegreeThreshold)
     def joinLabels(bigSide: DataFrame, labelSide: DataFrame, key: String,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import etlmudah.Tables
 import etlmudah.load.BucketedBase
 import etlmudah.multimodal.Multimodal
+import Fragments._
 
 /** Round-11 registry tier — appended to [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]] (the registry is split per-round from here
@@ -125,24 +126,13 @@ object Round11 {
     // generate-series — never parses a byte.
     "q304_png_pixel_stats" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 4 + 1).cast("int")
-      val hg = (id % 3 + 1).cast("int")
+      val (wg, hg) = smallDims(id)
       val blob = Multimodal.fakePng24(id, wg, hg)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 5, 40)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"),
           Multimodal.pngPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "rgb"))
     }),
 
     // CROSS-FORMAT image dedup on real pixels: consecutive docs share
@@ -154,20 +144,12 @@ object Round11 {
     // q203 must-land-identically discipline): a green row proves the
     // PNG decode + hash equals the BMP path bit for bit.
     "q305_cross_format_ahash_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
-      val wg = (seed % 4 + 1).cast("int")
-      val hg = (seed % 3 + 1).cast("int")
+      val seed = plantedSeed(2)
+      val (wg, hg) = smallDims(seed)
       val ah = when(col("doc_id") % 2 === 0,
         Multimodal.bmpAHash(Multimodal.fakeBmp24(seed, wg, hg)))
         .otherwise(Multimodal.pngAHash(Multimodal.fakePng24(seed, wg, hg)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // PNG THUMBNAIL path: transcode (graft_png_to_bmp24) composes the
@@ -175,22 +157,8 @@ object Round11 {
     // BMP→box-filter resize→stats. Same visual image as q264's BMP
     // fixtures, so its oracle lands verbatim (q203 discipline): a
     // green row proves the transcode is byte-faithful through resize.
-    "q306_png_transcode_resize" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .where(col("doc_id") % 7 === 0)
-        .select(col("doc_id"),
-          (col("doc_id") % 8 + 2).as("w"),
-          ((col("doc_id") * 3) % 8 + 2).as("h"))
-        .select(col("doc_id"), col("w"), col("h"),
-          expr("graft_bmp_stats(graft_bmp_resize(graft_png_to_bmp24(" +
-            "graft_fake_png24(doc_id, w, h)), 2))").as("st"))
-        .select(col("doc_id"), col("w"), col("h"),
-          col("st.width").as("ow"), col("st.height").as("oh"),
-          col("st.n_px"),
-          col("st.b_min"), col("st.b_max"), col("st.b_sum"),
-          col("st.g_min"), col("st.g_max"), col("st.g_sum"),
-          col("st.r_min"), col("st.r_max"), col("st.r_sum"))
-        .orderBy(col("doc_id"))),
+    "q306_png_transcode_resize" -> resizeStats(
+      "graft_png_to_bmp24(graft_fake_png24(doc_id, w, h))"),
 
     // FULL Public-Suffix-List registered-domain resolution — the
     // production eTLD+1 tier (Web.pslRegisteredDomain) registered with
@@ -450,11 +418,10 @@ object Round11 {
     // parsing a byte.
     "q334_video_frame_sample" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 4 + 1).cast("int")
-      val hg = (id % 3 + 1).cast("int")
+      val (wg, hg) = smallDims(id)
       val nf = (id % 5 + 2)
       val blob = Multimodal.fakeAvi(id, wg, hg, nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 60)).otherwise(blob)
+      val maimed = maim(blob, 7, 60)
       Tables.documents(s, dir)
         .select(id, wg.as("w"), hg.as("h"), maimed.as("avi"))
         .select(col("w"), col("h"), col("doc_id"),
@@ -462,17 +429,7 @@ object Round11 {
         .select(col("w"), col("h"),
           Multimodal.aviFrameStats(col("avi"),
             expr("j * (doc_id % 5 + 2) div 3")).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_samples"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_samples", "bgr"))
     }),
 
     // CROSS-CONTAINER image dedup: q227's planted pairs rendered
@@ -482,23 +439,15 @@ object Round11 {
     // must land exactly on q227's oracle (the q203 discipline, now
     // across image AND video containers).
     "q335_cross_container_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
-      val wg = (seed % 4 + 1).cast("int")
-      val hg = (seed % 3 + 1).cast("int")
+      val seed = plantedSeed(2)
+      val (wg, hg) = smallDims(seed)
       val ah = when(col("doc_id") % 3 === 0,
         Multimodal.bmpAHash(Multimodal.fakeBmp24(seed, wg, hg)))
         .when(col("doc_id") % 3 === 1,
           Multimodal.pngAHash(Multimodal.fakePng24(seed, wg, hg)))
         .otherwise(Multimodal.aviFrameAHash(
           Multimodal.fakeAvi(seed, wg, hg, lit(1)), lit(0)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // DISTRIBUTION-FREE median CI (binomial order statistics, normal
@@ -1030,64 +979,13 @@ object Round11 {
     // dedup-group histogram as the all-BMP tier, because the hash is
     // defined over the visual image independent of container format
     "q305_cross_format_ahash_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 2 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 4 + 1) AS w,
-        |    (seed % 3 + 1) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    (dd.seed*7 + ((gi.i*dd.h)//8)*3 + ((gj.j*dd.w)//8)) % 256
-        |  + (dd.seed*11 + ((gi.i*dd.h)//8)*5 + ((gj.j*dd.w)//8)*2) % 256
-        |  + (dd.seed*13 + ((gi.i*dd.h)//8)*7 + ((gj.j*dd.w)//8)*3) % 256
-        |    AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      ahashDedupSql,
 
     // q264's oracle VERBATIM: the PNG→BMP transcode is byte-faithful,
     // so decode→transcode→resize→stats must land exactly where the
     // native-BMP pipeline does
     "q306_png_transcode_resize" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 8 + 2)::BIGINT AS w,
-        |    ((doc_id * 3) % 8 + 2)::BIGINT AS h
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |o AS (SELECT doc_id, w, h, w // 2 AS ow, h // 2 AS oh FROM d),
-        |cells AS (
-        |  SELECT o.doc_id, oy.x AS oy, ox.x AS ox,
-        |    (sum((o.doc_id*7 + (oy.x*2 + dy.x)*3 + (ox.x*2 + dx.x))
-        |      % 256) // 4)::INT AS b,
-        |    (sum((o.doc_id*11 + (oy.x*2 + dy.x)*5 + (ox.x*2 + dx.x)*2)
-        |      % 256) // 4)::INT AS g,
-        |    (sum((o.doc_id*13 + (oy.x*2 + dy.x)*7 + (ox.x*2 + dx.x)*3)
-        |      % 256) // 4)::INT AS r
-        |  FROM o, range(0, 4) oy(x), range(0, 4) ox(x),
-        |       range(0, 2) dy(x), range(0, 2) dx(x)
-        |  WHERE oy.x < o.oh AND ox.x < o.ow
-        |  GROUP BY 1, 2, 3),
-        |st AS (SELECT doc_id, count(*)::BIGINT AS n_px,
-        |    min(b)::INT AS b_min, max(b)::INT AS b_max,
-        |    sum(b)::BIGINT AS b_sum,
-        |    min(g)::INT AS g_min, max(g)::INT AS g_max,
-        |    sum(g)::BIGINT AS g_sum,
-        |    min(r)::INT AS r_min, max(r)::INT AS r_max,
-        |    sum(r)::BIGINT AS r_sum
-        |  FROM cells GROUP BY 1)
-        |SELECT o.doc_id, o.w, o.h, o.ow, o.oh, st.n_px,
-        |  st.b_min, st.b_max, st.b_sum, st.g_min, st.g_max, st.g_sum,
-        |  st.r_min, st.r_max, st.r_sum
-        |FROM o JOIN st USING (doc_id)
-        |ORDER BY o.doc_id""".stripMargin,
+      bmpResizeStatsSql,
 
     // PSL resolution replayed in label algebra: parse rules into
     // (kind, key, klab), explode each host's candidate suffixes,
@@ -1186,26 +1084,7 @@ object Round11 {
          |  FROM cand c
          |  JOIN embeddings e2 ON e2.vec_id = c.vec_id
          |  JOIN embeddings p ON p.vec_id = c.probe_id),
-         |bin AS (SELECT probe_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cos_sim DESC, vec_id ASC) AS rk FROM rr)
-         |  WHERE rk <= 10),
-         |ex AS (SELECT probe_id, vec_id FROM (
-         |    SELECT p.probe_id, em.vec_id,
-         |      row_number() OVER (PARTITION BY p.probe_id
-         |        ORDER BY round(list_cosine_similarity(
-         |          em.embedding::DOUBLE[], pe.embedding::DOUBLE[]), 6)
-         |          DESC, em.vec_id ASC) AS rk
-         |    FROM pr p
-         |    JOIN embeddings pe ON pe.vec_id = p.probe_id
-         |    CROSS JOIN embeddings em WHERE em.vec_id <> p.probe_id)
-         |  WHERE rk <= 10),
-         |h AS (SELECT bin.probe_id, count(*)::BIGINT AS n_hits
-         |  FROM bin JOIN ex USING (probe_id, vec_id) GROUP BY 1)
-         |SELECT pr.probe_id, coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-         |  round(coalesce(h.n_hits, 0)::DOUBLE / 10, 6) AS recall
-         |FROM pr LEFT JOIN h USING (probe_id)
-         |ORDER BY probe_id""".stripMargin
+         |$rerankRecallSql""".stripMargin
     },
 
     // adaptive k-core: ALL THREE candidate peels (k=3,2,1) unrolled
@@ -1213,25 +1092,9 @@ object Round11 {
     // co-edge graph; the first-non-empty rule picks the served
     // fixpoint, final degrees over it
     "q309_k_core" -> {
-      // AS MATERIALIZED: each a(i-1) is referenced TWICE per round —
-      // DuckDB's CTE inlining would otherwise expand the chain
-      // exponentially (2^10 copies of the base self-join)
-      def round(k: Int, i: Int) = {
-        val p = if (i == 1) "a0" else s"a${k}_${i - 1}"
-        s"""d${k}_$i AS MATERIALIZED (
-           |  SELECT s.src AS node, count(*) AS deg FROM sym s
-           |  JOIN $p x ON x.node = s.src
-           |  JOIN $p y ON y.node = s.dst GROUP BY 1),
-           |a${k}_$i AS MATERIALIZED (SELECT node FROM d${k}_$i WHERE deg >= $k)""".stripMargin
-      }
-      s"""WITH e0 AS MATERIALIZED (
-         |  SELECT a.l_partkey::BIGINT AS u, b.l_partkey::BIGINT AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
-         |        UNION ALL SELECT v, u FROM e0),
-         |a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym),
+      def round(k: Int, i: Int) =
+        peelRoundCtes(k, i, if (i == 1) "a0" else s"a${k}_${i - 1}")
+      s"""WITH $corePeelSeedCtes,
          |${(1 to 10).map(round(3, _)).mkString(",\n")},
          |${(1 to 10).map(round(2, _)).mkString(",\n")},
          |${(1 to 2).map(round(1, _)).mkString(",\n")},
@@ -1317,21 +1180,18 @@ object Round11 {
     // Hill estimator on the micro-nat integer lattice: per-term
     // floor(ln(d/dmin)*1e6) BIGINT, exact sum, one closing division
     "q313_degree_tail_index" ->
-      """WITH e0 AS (
-        |  SELECT a.l_partkey::BIGINT AS u, b.l_partkey::BIGINT AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS (SELECT node, count(*)::BIGINT AS deg FROM (
-        |    SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)
-        |  GROUP BY 1),
-        |terms AS (SELECT
-        |    CAST(floor(ln(deg::DOUBLE / 5) * 1000000) AS BIGINT) AS t
-        |  FROM deg WHERE deg >= 5)
-        |SELECT count(*)::BIGINT AS n_tail,
-        |  round(1.0 + count(*) * 1000000.0 / sum(t)::DOUBLE, 6)
-        |    AS alpha_hat
-        |FROM terms""".stripMargin,
+      s"""WITH e0 AS (
+         |${coPairsSql}),
+         |deg AS (SELECT node, count(*)::BIGINT AS deg FROM (
+         |    SELECT u AS node FROM e0 UNION ALL SELECT v FROM e0)
+         |  GROUP BY 1),
+         |terms AS (SELECT
+         |    CAST(floor(ln(deg::DOUBLE / 5) * 1000000) AS BIGINT) AS t
+         |  FROM deg WHERE deg >= 5)
+         |SELECT count(*)::BIGINT AS n_tail,
+         |  round(1.0 + count(*) * 1000000.0 / sum(t)::DOUBLE, 6)
+         |    AS alpha_hat
+         |FROM terms""".stripMargin,
 
     // dow profile: Spark dayofweek is 1=Sunday..7, DuckDB's is
     // 0=Sunday..6 — hence the +1; index = the exact cross-ratio
@@ -1409,19 +1269,8 @@ object Round11 {
         |       ELSE round(exp(cum::DOUBLE / 1e9), 6) END AS survival
         |FROM c WHERE d > 0 ORDER BY t""".stripMargin,
 
-    // Gini: rank-weighted decimal sums, one closing division
     "q318_revenue_gini" ->
-      """WITH rev AS (SELECT o_custkey AS id,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-        |  FROM orders GROUP BY 1),
-        |rk AS (SELECT x, row_number() OVER (ORDER BY x ASC, id ASC)
-        |    AS i FROM rev)
-        |SELECT count(*)::BIGINT AS n,
-        |  CAST(round(sum(x), 2) AS DOUBLE) AS total,
-        |  round((2::DECIMAL(19,0) * sum(x * i::DECIMAL(19,0))
-        |      - (count(*) + 1)::DECIMAL(19,0) * sum(x))::DOUBLE
-        |    / (count(*)::DOUBLE * sum(x)::DOUBLE), 6) AS gini
-        |FROM rk""".stripMargin,
+      revenueGiniSql,
 
     // MI cells: +1 aligns DuckDB's 0-based Sunday with Spark's
     // 1-based; nano-nat PMI lattice, contribution = exact count x
@@ -1505,30 +1354,7 @@ object Round11 {
     // q227's oracle verbatim a second time: three containers, one
     // histogram (the q305 discipline extended to video)
     "q335_cross_container_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 2 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 4 + 1) AS w,
-        |    (seed % 3 + 1) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    (dd.seed*7 + ((gi.i*dd.h)//8)*3 + ((gj.j*dd.w)//8)) % 256
-        |  + (dd.seed*11 + ((gi.i*dd.h)//8)*5 + ((gj.j*dd.w)//8)*2) % 256
-        |  + (dd.seed*13 + ((gi.i*dd.h)//8)*7 + ((gj.j*dd.w)//8)*3) % 256
-        |    AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      ahashDedupSql,
 
     // order-stat CI replay: same rank chain, same lattice cumulative
     "q333_median_order_stat_ci" ->
@@ -1834,30 +1660,27 @@ object Round11 {
     // Newman r over directed edges: exact decimal sums, one closing
     // double chain written identically
     "q325_degree_assortativity" ->
-      """WITH e0 AS (
-        |  SELECT a.l_partkey::BIGINT AS u, b.l_partkey::BIGINT AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |sym AS (SELECT u AS src, v AS dst FROM e0
-        |        UNION ALL SELECT v, u FROM e0),
-        |deg AS (SELECT src AS node, count(*)::BIGINT AS deg FROM sym
-        |  GROUP BY 1),
-        |xy AS (SELECT dx.deg AS x, dy.deg AS y
-        |  FROM sym JOIN deg dx ON dx.node = sym.src
-        |  JOIN deg dy ON dy.node = sym.dst),
-        |s AS (SELECT count(*)::BIGINT AS n,
-        |    sum(x::DECIMAL(19,0)) AS sx, sum(y::DECIMAL(19,0)) AS sy,
-        |    sum(x::DECIMAL(19,0) * y::DECIMAL(19,0)) AS sxy,
-        |    sum(x::DECIMAL(19,0) * x::DECIMAL(19,0)) AS sxx,
-        |    sum(y::DECIMAL(19,0) * y::DECIMAL(19,0)) AS syy
-        |  FROM xy)
-        |SELECT n,
-        |  round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-        |    / sqrt(n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
-        |    / sqrt(n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE), 6)
-        |    AS assortativity
-        |FROM s""".stripMargin,
+      s"""WITH e0 AS (
+         |${coPairsSql}),
+         |sym AS (SELECT u AS src, v AS dst FROM e0
+         |        UNION ALL SELECT v, u FROM e0),
+         |deg AS (SELECT src AS node, count(*)::BIGINT AS deg FROM sym
+         |  GROUP BY 1),
+         |xy AS (SELECT dx.deg AS x, dy.deg AS y
+         |  FROM sym JOIN deg dx ON dx.node = sym.src
+         |  JOIN deg dy ON dy.node = sym.dst),
+         |s AS (SELECT count(*)::BIGINT AS n,
+         |    sum(x::DECIMAL(19,0)) AS sx, sum(y::DECIMAL(19,0)) AS sy,
+         |    sum(x::DECIMAL(19,0) * y::DECIMAL(19,0)) AS sxy,
+         |    sum(x::DECIMAL(19,0) * x::DECIMAL(19,0)) AS sxx,
+         |    sum(y::DECIMAL(19,0) * y::DECIMAL(19,0)) AS syy
+         |  FROM xy)
+         |SELECT n,
+         |  round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
+         |    / sqrt(n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
+         |    / sqrt(n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE), 6)
+         |    AS assortativity
+         |FROM s""".stripMargin,
 
     // z from exact counts, the closing expression written identically
     "q315_two_proportion_z" ->

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import etlmudah.Tables
+import Fragments._
 
 /** Round-12 registry tier — appended to [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]] (per-round registry split, the Round11
@@ -102,24 +103,13 @@ object Round12 {
     // the partial-block crop path is on the oracle surface.
     "q337_jpeg_pixel_stats" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 13 + 4).cast("int")
-      val hg = (id % 9 + 3).cast("int")
+      val (wg, hg) = blockDims(id)
       val blob = etlmudah.multimodal.Multimodal.fakeJpeg(id, wg, hg)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 5, 40)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"),
           etlmudah.multimodal.Multimodal.jpegPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "rgb"))
     }),
 
     // CROSS-FORMAT dedup across the LOSSY boundary — q335's planting
@@ -131,21 +121,13 @@ object Round12 {
     // pair must land in one group. The oracle replays the hash bit
     // for bit from the block closed form (q305 discipline).
     "q338_cross_format_jpeg_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(2)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val ah = when(col("doc_id") % 2 === 0,
         M.bmpAHash(M.fakeBmpBlocks(seed, wg, hg)))
         .otherwise(M.jpegAHash(M.fakeJpeg(seed, wg, hg)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // JPEG THUMBNAIL path: decode → canonical BMP transcode →
@@ -154,22 +136,8 @@ object Round12 {
     // mean over each 2×2 window, windows crossing an 8-pixel block
     // edge mix two constants, so the resize arithmetic is genuinely
     // on the oracle surface.
-    "q339_jpeg_transcode_resize" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .where(col("doc_id") % 7 === 0)
-        .select(col("doc_id"),
-          (col("doc_id") % 8 + 2).as("w"),
-          ((col("doc_id") * 3) % 8 + 2).as("h"))
-        .select(col("doc_id"), col("w"), col("h"),
-          expr("graft_bmp_stats(graft_bmp_resize(graft_jpeg_to_bmp24(" +
-            "graft_fake_jpeg(doc_id, w, h)), 2))").as("st"))
-        .select(col("doc_id"), col("w"), col("h"),
-          col("st.width").as("ow"), col("st.height").as("oh"),
-          col("st.n_px"),
-          col("st.b_min"), col("st.b_max"), col("st.b_sum"),
-          col("st.g_min"), col("st.g_max"), col("st.g_sum"),
-          col("st.r_min"), col("st.r_max"), col("st.r_sum"))
-        .orderBy(col("doc_id"))),
+    "q339_jpeg_transcode_resize" -> resizeStats(
+      "graft_jpeg_to_bmp24(graft_fake_jpeg(doc_id, w, h))"),
 
     // GINI, 100 TB tier — q318's number BIT FOR BIT without the
     // single-reducer global rank window: entities bucket by exact
@@ -212,12 +180,11 @@ object Round12 {
     // whole. Dims 4–16 × 3–11 cross MCU edges.
     "q344_mjpeg_frame_sample" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 13 + 4).cast("int")
-      val hg = (id % 9 + 3).cast("int")
+      val (wg, hg) = blockDims(id)
       val nf = (id % 5 + 2)
       val M = etlmudah.multimodal.Multimodal
       val blob = M.fakeMjpegAvi(id, wg, hg, nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 60)).otherwise(blob)
+      val maimed = maim(blob, 7, 60)
       Tables.documents(s, dir)
         .select(id, wg.as("w"), hg.as("h"), nf.as("nf"), maimed.as("avi"))
         .select(col("w"), col("h"), col("nf"),
@@ -225,17 +192,7 @@ object Round12 {
         .select(col("w"), col("h"),
           M.aviFrameStats(col("avi"),
             expr("j * nf div 3")).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_samples"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_samples", "bgr"))
     }),
 
     // REAL GIF pixel decode — LZW dictionary coding, the THIRD
@@ -245,25 +202,14 @@ object Round12 {
     // form replays verbatim; every 5th blob maimed nulls whole.
     "q349_gif_pixel_stats" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 13 + 4).cast("int")
-      val hg = (id % 9 + 3).cast("int")
+      val (wg, hg) = blockDims(id)
       val M = etlmudah.multimodal.Multimodal
       val blob = M.fakeGif(id, wg, hg)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 5, 40)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"),
           M.gifPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "rgb"))
     }),
 
     // THREE-DECODER dedup on one visual image: doc_id mod 3 renders
@@ -273,23 +219,15 @@ object Round12 {
     // group. Oracle replays the hash from the closed form (q338's
     // discipline with a three-way split).
     "q350_cross_container_lzw_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 3")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(3)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val ah = when(col("doc_id") % 3 === 0,
         M.bmpAHash(M.fakeBmpBlocks(seed, wg, hg)))
         .when(col("doc_id") % 3 === 1,
           M.jpegAHash(M.fakeJpeg(seed, wg, hg)))
         .otherwise(M.gifAHash(M.fakeGif(seed, wg, hg)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // REAL FLAC sample decode — the audio twin of PNG-beside-BMP:
@@ -299,40 +237,14 @@ object Round12 {
     // dims, same maiming), and the ORACLE IS q230's VERBATIM — a
     // green row proves the entropy decoder reproduces the raw tier
     // bit for bit (the q305/q340 must-land-identically discipline).
-    "q346_flac_sample_stats" -> ((s, dir) => {
-      val id = col("doc_id")
-      val ch = (id % 2 + 1)
-      val nf = (id % 3 + 1) * 4
-      val M = etlmudah.multimodal.Multimodal
-      val blob = M.fakeFlac(id, ch, lit(8000L), nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 50)).otherwise(blob)
-      Tables.documents(s, dir)
-        .select(ch.cast("int").as("channels_gen"),
-          M.flacSampleStats(maimed).as("st"))
-        .groupBy(col("channels_gen")).agg(
-          count(lit(1)).as("n_docs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_samples")).as("n_samples"),
-          max(col("st.peak")).as("peak"),
-          min(col("st.s_min")).as("s_min"),
-          max(col("st.s_max")).as("s_max"),
-          sum(col("st.s_sum")).as("s_sum"),
-          sum(col("st.sq_sum")).as("sq_sum"))
-        .orderBy(col("channels_gen"))
-    }),
+    "q346_flac_sample_stats" -> sampleStatsByChannels(
+      etlmudah.multimodal.Multimodal.fakeFlac,
+      etlmudah.multimodal.Multimodal.flacSampleStats(_)),
 
     // the VAD pair on the compressed family — q265's query shape and
     // ORACLE VERBATIM over FLAC inputs (zero-crossings, silence runs)
-    "q347_flac_vad_features" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .where(col("doc_id") % 7 === 3)
-        .select(col("doc_id"), expr(
-          "graft_flac_features(graft_fake_flac(doc_id, 1L, 8000L, " +
-            "doc_id % 50 + 10), 8000)").as("f"))
-        .select(col("doc_id"), col("f.n_samples"), col("f.n_zero_cross"),
-          col("f.n_silent"), col("f.n_silence_runs"),
-          col("f.max_silence_run"))
-        .orderBy(col("doc_id"))),
+    "q347_flac_vad_features" ->
+      vadFeatures("graft_flac_features", "graft_fake_flac"),
 
     // LATENESS-AUDIT SINK batch twin, END-TO-END (the q301 discipline
     // for the streaming tier): the real sink runs over a
@@ -368,40 +280,6 @@ object Round12 {
     })
   )
 
-  /** The full coreness-ladder unroll (shared by q336 and its q345
-    * h-index dial twin — the identical-statistic discipline). */
-  private lazy val corenessLadderSql: String = {
-      val R = 16
-      def round(k: Int, i: Int) = {
-        val p = if (k == 1 && i == 1) "a0"
-                else if (i == 1) s"a${k - 1}_$R"
-                else s"a${k}_${i - 1}"
-        s"""d${k}_$i AS MATERIALIZED (
-           |  SELECT s.src AS node, count(*) AS deg FROM sym s
-           |  JOIN $p x ON x.node = s.src
-           |  JOIN $p y ON y.node = s.dst GROUP BY 1),
-           |a${k}_$i AS MATERIALIZED (SELECT node FROM d${k}_$i WHERE deg >= $k)""".stripMargin
-      }
-      val rounds = (for (k <- 1 to 20; i <- 1 to R) yield round(k, i))
-        .mkString(",\n")
-      val levels = (1 to 20)
-        .map(k => s"SELECT node, $k AS k FROM a${k}_$R")
-        .mkString("\n  UNION ALL ")
-      s"""WITH e0 AS MATERIALIZED (
-         |  SELECT a.l_partkey::BIGINT AS u, b.l_partkey::BIGINT AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-         |sym AS MATERIALIZED (SELECT u AS src, v AS dst FROM e0
-         |        UNION ALL SELECT v, u FROM e0),
-         |a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym),
-         |$rounds,
-         |lev AS MATERIALIZED (
-         |  $levels)
-         |SELECT node, max(k)::BIGINT AS coreness
-         |FROM lev GROUP BY node ORDER BY node""".stripMargin
-    }
-
   def oracleSql: Map[String, String] = Map(
 
     // coreness ladder unrolled level by level, round by round (the
@@ -416,59 +294,19 @@ object Round12 {
     // identical decomposition
     "q345_coreness_hindex" -> corenessLadderSql,
 
-    // JPEG stats replayed from the block-constant closed form
-    // (R = G = B = (seed*17 + (y div 8)*5 + (x div 8)*3) mod 256 at
-    // visual pixel (y, x)) — the oracle never parses a byte
     "q337_jpeg_pixel_stats" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 13 + 4)::INT AS w,
-        |    (doc_id % 9 + 3)::INT AS h FROM documents),
-        |px AS (SELECT d.doc_id,
-        |    (d.doc_id*17 + (fr.fr//8)*5 + (c.c//8)*3) % 256 AS v
-        |  FROM d, range(0, 11) fr(fr), range(0, 16) c(c)
-        |  WHERE d.doc_id % 5 <> 0 AND fr.fr < d.h AND c.c < d.w),
-        |st AS (SELECT doc_id, count(*)::BIGINT AS n_px,
-        |    min(v)::INT AS v_min, max(v)::INT AS v_max,
-        |    sum(v)::BIGINT AS v_sum
-        |  FROM px GROUP BY doc_id)
-        |SELECT d.w, d.h, count(*) AS n_imgs,
-        |  count(st.doc_id)::BIGINT AS n_decoded,
-        |  sum(st.n_px)::BIGINT AS n_px,
-        |  min(st.v_min) AS r_min, max(st.v_max) AS r_max,
-        |  sum(st.v_sum)::BIGINT AS r_sum,
-        |  min(st.v_min) AS g_min, max(st.v_max) AS g_max,
-        |  sum(st.v_sum)::BIGINT AS g_sum,
-        |  min(st.v_min) AS b_min, max(st.v_max) AS b_max,
-        |  sum(st.v_sum)::BIGINT AS b_sum
-        |FROM d LEFT JOIN st USING (doc_id)
-        |GROUP BY d.w, d.h ORDER BY d.w, d.h""".stripMargin,
+      jpegPixelStatsSql,
 
     // the perceptual hash replayed bit for bit from the block closed
     // form (q305's discipline): grid cell (gi, gj) samples VISUAL row
     // h-1-gi*h/8, column gj*w/8; brightness = 3·v (gray); bit set on
     // the exact cross-multiplied cell*64 > total
     "q338_cross_format_jpeg_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 2 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
-        |    (seed % 9 + 3) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    3 * ((dd.seed*17 + ((dd.h - 1 - (gi.i*dd.h)//8)//8)*5
-        |      + (((gj.j*dd.w)//8)//8)*3) % 256) AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, doc_id // 2 AS seed FROM documents),
+         |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
+         |    (seed % 9 + 3) AS h FROM d),
+         |$blockGridCtes,
+         |$ahashGroupSizesSql""".stripMargin,
 
     // box-filtered block closed form: each 2x2 output window floor-
     // means the constants it covers (windows crossing an 8-px block
@@ -502,17 +340,7 @@ object Round12 {
     // q318's oracle VERBATIM: the bucketed plan must land on the
     // identical Gini
     "q340_gini_bucketed" ->
-      """WITH rev AS (SELECT o_custkey AS id,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS x
-        |  FROM orders GROUP BY 1),
-        |rk AS (SELECT x, row_number() OVER (ORDER BY x ASC, id ASC)
-        |    AS i FROM rev)
-        |SELECT count(*)::BIGINT AS n,
-        |  CAST(round(sum(x), 2) AS DOUBLE) AS total,
-        |  round((2::DECIMAL(19,0) * sum(x * i::DECIMAL(19,0))
-        |      - (count(*) + 1)::DECIMAL(19,0) * sum(x))::DOUBLE
-        |    / (count(*)::DOUBLE * sum(x)::DOUBLE), 6) AS gini
-        |FROM rk""".stripMargin,
+      revenueGiniSql,
 
     // boundary-bucketed Lorenz replay: quantile_cont boundaries (the
     // q79 percentile parity), cumulative-from-top over the summary
@@ -580,10 +408,7 @@ object Round12 {
            |  GROUP BY 1, 2),
            |c$i AS MATERIALIZED (SELECT u, v FROM t$i WHERE sup >= 1)""".stripMargin
       s"""WITH e0 AS MATERIALIZED (
-         |  SELECT a.l_partkey::BIGINT AS u, b.l_partkey::BIGINT AS v
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING count(*) >= 2),
+         |${coPairsSql}),
          |c0 AS MATERIALIZED (SELECT u, v FROM e0),
          |${(1 to 5).map(round).mkString(",\n")}
          |SELECT c4.u, c4.v, coalesce(t5.sup, 0)::BIGINT AS support
@@ -594,108 +419,25 @@ object Round12 {
     // q337's pixel-rule oracle VERBATIM (lossless LZW lands on the
     // identical block closed form)
     "q349_gif_pixel_stats" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 13 + 4)::INT AS w,
-        |    (doc_id % 9 + 3)::INT AS h FROM documents),
-        |px AS (SELECT d.doc_id,
-        |    (d.doc_id*17 + (fr.fr//8)*5 + (c.c//8)*3) % 256 AS v
-        |  FROM d, range(0, 11) fr(fr), range(0, 16) c(c)
-        |  WHERE d.doc_id % 5 <> 0 AND fr.fr < d.h AND c.c < d.w),
-        |st AS (SELECT doc_id, count(*)::BIGINT AS n_px,
-        |    min(v)::INT AS v_min, max(v)::INT AS v_max,
-        |    sum(v)::BIGINT AS v_sum
-        |  FROM px GROUP BY doc_id)
-        |SELECT d.w, d.h, count(*) AS n_imgs,
-        |  count(st.doc_id)::BIGINT AS n_decoded,
-        |  sum(st.n_px)::BIGINT AS n_px,
-        |  min(st.v_min) AS r_min, max(st.v_max) AS r_max,
-        |  sum(st.v_sum)::BIGINT AS r_sum,
-        |  min(st.v_min) AS g_min, max(st.v_max) AS g_max,
-        |  sum(st.v_sum)::BIGINT AS g_sum,
-        |  min(st.v_min) AS b_min, max(st.v_max) AS b_max,
-        |  sum(st.v_sum)::BIGINT AS b_sum
-        |FROM d LEFT JOIN st USING (doc_id)
-        |GROUP BY d.w, d.h ORDER BY d.w, d.h""".stripMargin,
+      jpegPixelStatsSql,
 
     // the q338 hash replay with the three-way seed split
     "q350_cross_container_lzw_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 3 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
-        |    (seed % 9 + 3) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    3 * ((dd.seed*17 + ((dd.h - 1 - (gi.i*dd.h)//8)//8)*5
-        |      + (((gj.j*dd.w)//8)//8)*3) % 256) AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, doc_id // 3 AS seed FROM documents),
+         |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
+         |    (seed % 9 + 3) AS h FROM d),
+         |$blockGridCtes,
+         |$ahashGroupSizesSql""".stripMargin,
 
     // q230's oracle VERBATIM: the FLAC entropy decode must land on
     // the raw WAV closed form exactly
     "q346_flac_sample_stats" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 2 + 1)::INT AS ch,
-        |    (doc_id % 3 + 1) * 4 AS nf FROM documents),
-        |s AS (SELECT d.doc_id, d.ch,
-        |    ((d.doc_id * 31 + i.i * 17) % 65536) - 32768 AS v
-        |  FROM d, range(0, 24) i(i)
-        |  WHERE i.i < d.nf * d.ch AND d.doc_id % 7 <> 0),
-        |st AS (SELECT doc_id, ch, count(*)::BIGINT AS n_samples,
-        |    max(abs(v))::INT AS peak, min(v)::INT AS s_min,
-        |    max(v)::INT AS s_max,
-        |    sum(v)::BIGINT AS s_sum, sum(v * v)::BIGINT AS sq_sum
-        |  FROM s GROUP BY 1, 2)
-        |SELECT d.ch AS channels_gen, count(*) AS n_docs,
-        |  count(st.doc_id)::BIGINT AS n_decoded,
-        |  sum(st.n_samples)::BIGINT AS n_samples,
-        |  max(st.peak) AS peak, min(st.s_min) AS s_min,
-        |  max(st.s_max) AS s_max,
-        |  sum(st.s_sum)::BIGINT AS s_sum,
-        |  sum(st.sq_sum)::BIGINT AS sq_sum
-        |FROM d LEFT JOIN st USING (doc_id)
-        |GROUP BY d.ch ORDER BY channels_gen""".stripMargin,
+      wavSampleStatsSql,
 
     // q265's oracle VERBATIM: the VAD features replay identically
     // through the compressed path
     "q347_flac_vad_features" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 50 + 10)::BIGINT AS nf
-        |  FROM documents WHERE doc_id % 7 = 3),
-        |s AS (SELECT d.doc_id, i.x AS i,
-        |    ((d.doc_id * 31 + i.x * 17) % 65536 - 32768)::BIGINT AS v
-        |  FROM d, range(0, 60) i(x) WHERE i.x < d.nf),
-        |f AS (SELECT doc_id, i, v,
-        |    lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv,
-        |    CASE WHEN abs(v) <= 8000 THEN 1 ELSE 0 END AS sil
-        |  FROM s),
-        |runs AS (SELECT doc_id, i,
-        |    i - row_number() OVER (PARTITION BY doc_id ORDER BY i)
-        |      AS grp
-        |  FROM f WHERE sil = 1),
-        |runagg AS (SELECT doc_id, count(*)::BIGINT AS rl FROM runs
-        |           GROUP BY doc_id, grp),
-        |rstats AS (SELECT doc_id, count(*)::BIGINT AS n_runs,
-        |             max(rl)::BIGINT AS max_run
-        |           FROM runagg GROUP BY doc_id),
-        |base AS (SELECT doc_id, count(*)::BIGINT AS n_samples,
-        |    sum(CASE WHEN pv IS NOT NULL AND pv * v < 0
-        |      THEN 1 ELSE 0 END)::BIGINT AS n_zero_cross,
-        |    sum(sil)::BIGINT AS n_silent
-        |  FROM f GROUP BY doc_id)
-        |SELECT b.doc_id, n_samples, n_zero_cross, n_silent,
-        |  coalesce(r.n_runs, 0)::BIGINT AS n_silence_runs,
-        |  coalesce(r.max_run, 0)::BIGINT AS max_silence_run
-        |FROM base b LEFT JOIN rstats r USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+      wavFeaturesSql,
 
     // the micro-batch ledger replayed in SQL: batch order
     // (day mod 7, day); watermark BEFORE a batch = running max of

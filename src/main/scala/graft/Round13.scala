@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import etlmudah.Tables
+import Fragments._
 
 /** Round-13 registry tier — appended to [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]] (per-round registry split, the Round11
@@ -124,21 +125,11 @@ object Round13 {
       val hg = (id % 23 + 3).cast("int")
       val ri = (id % 3 + 1).cast("int")
       val blob = etlmudah.multimodal.Multimodal.fakeJpeg420(id, wg, hg, ri)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 5, 40)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"),
           etlmudah.multimodal.Multimodal.jpegPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "rgb"))
     }),
 
     // CROSS-FORMAT dedup, FOUR containers on one visual image: docs
@@ -150,23 +141,15 @@ object Round13 {
     // subsampled leg the judge asked for. Oracle replays the hash bit
     // for bit from the block closed form.
     "q352_cross_format_subsample_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 4")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(4)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val leg = col("doc_id") % 4
       val ah = when(leg === 0, M.bmpAHash(M.fakeBmpBlocks(seed, wg, hg)))
         .when(leg === 1, M.gifAHash(M.fakeGif(seed, wg, hg)))
         .when(leg === 2, M.jpegAHash(M.fakeJpeg(seed, wg, hg)))
         .otherwise(M.jpegAHash(M.fakeJpeg420(seed, wg, hg, seed % 3)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // ANIMATED-GIF FRAME SAMPLING — the THIRD frame-sampling
@@ -181,29 +164,18 @@ object Round13 {
     // Every 7th container is maimed: decode nulls whole.
     "q353_gif_anim_frame_sample" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 13 + 4).cast("int")
-      val hg = (id % 9 + 3).cast("int")
+      val (wg, hg) = blockDims(id)
       val nf = (id % 5 + 2)
       val M = etlmudah.multimodal.Multimodal
       val blob = M.fakeAnimGif(id, wg, hg, nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 60)).otherwise(blob)
+      val maimed = maim(blob, 7, 60)
       Tables.documents(s, dir)
         .select(id, wg.as("w"), hg.as("h"), nf.as("nf"), maimed.as("gif"))
         .select(col("w"), col("h"), col("nf"),
           explode(sequence(lit(0L), lit(2L))).as("j"), col("gif"))
         .select(col("w"), col("h"),
           M.gifFrameStats(col("gif"), expr("j * nf div 3")).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_samples"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_samples", "bgr"))
     }),
 
     // k-TRUSS ORIENTATION DIAL (Schank–Wagner 2005): q348's statistic
@@ -237,21 +209,11 @@ object Round13 {
       val ri = (id % 3 + 1).cast("int")
       val blob =
         etlmudah.multimodal.Multimodal.fakeJpegProg420(id, wg, hg, ri)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 5, 40)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"),
           etlmudah.multimodal.Multimodal.jpegPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "rgb"))
     }),
 
     // the q338 discipline with the PROGRESSIVE leg: pairs share a
@@ -260,21 +222,13 @@ object Round13 {
     // containers yet (raw bytes vs seven entropy-coded scans); every
     // planted pair must hash-group whole. Oracle = q338's VERBATIM.
     "q360_cross_format_progressive_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(2)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val ah = when(col("doc_id") % 2 === 0,
         M.bmpAHash(M.fakeBmpBlocks(seed, wg, hg)))
         .otherwise(M.jpegAHash(M.fakeJpegProg420(seed, wg, hg, seed % 3)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // MPEG-1 LAYER I BITSTREAM tier — the honest closure of the last
@@ -292,7 +246,7 @@ object Round13 {
       val nf = (id % 3 + 1)
       val M = etlmudah.multimodal.Multimodal
       val blob = M.fakeMp3L1(id, nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 7, 40)
       Tables.documents(s, dir)
         .select(nf.as("nf_gen"), M.mp3L1Stats(maimed).as("st"))
         .groupBy(col("nf_gen")).agg(
@@ -317,22 +271,14 @@ object Round13 {
     // group. Dims 4-16 x 3-11, so pass degeneracy (empty passes at
     // small dims) is on the oracle surface too.
     "q354_png_adam7_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 3")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(3)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val leg = col("doc_id") % 3
       val ah = when(leg === 0, M.bmpAHash(M.fakeBmp24(seed, wg, hg)))
         .when(leg === 1, M.pngAHash(M.fakePng24(seed, wg, hg)))
         .otherwise(M.pngAHash(M.fakePngInterlaced(seed, wg, hg)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // INTERLACED GIF on the same discipline: pairs share a seed,
@@ -342,21 +288,13 @@ object Round13 {
     // q338's VERBATIM (the hash replay doesn't care WHICH containers
     // carried the image, only that both land on the closed form).
     "q355_gif_interlaced_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(2)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val ah = when(col("doc_id") % 2 === 0,
         M.gifAHash(M.fakeGif(seed, wg, hg)))
         .otherwise(M.gifAHash(M.fakeGifInterlaced(seed, wg, hg)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // PNG SAMPLE LAYOUTS on the dedup surface — ONE gray visual
@@ -371,22 +309,14 @@ object Round13 {
     // cross-format discipline: here the CONTAINER stays PNG and the
     // SAMPLE LAYOUT varies.
     "q361_png_color_type_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 5")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(5)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val leg = col("doc_id") % 5
       val ct = when(leg === 0, 0).when(leg === 1, 2)
         .when(leg === 2, 3).when(leg === 3, 4).otherwise(6)
       val ah = M.pngAHash(M.fakePngTyped(seed, wg, hg, ct))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // …and on the STATS surface: per-doc layout rotation over the
@@ -398,27 +328,16 @@ object Round13 {
     // layout term at all — four decode paths, one arithmetic rule.
     "q362_png_color_type_stats" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 13 + 4).cast("int")
-      val hg = (id % 9 + 3).cast("int")
+      val (wg, hg) = blockDims(id)
       val M = etlmudah.multimodal.Multimodal
       val leg = id % 4
       val ct = when(leg === 0, 0).when(leg === 1, 3)
         .when(leg === 2, 4).otherwise(6)
       val blob = M.fakePngTyped(id, wg, hg, ct)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 60)).otherwise(blob)
+      val maimed = maim(blob, 5, 60)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"), M.pngPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "rgb"))
     }),
 
     // BIT DEPTH 16 on the same discipline: quintets share a seed —
@@ -429,9 +348,8 @@ object Round13 {
     // on the identical gray image, so the oracle is q361's VERBATIM —
     // the identical-statistic discipline applied to BIT DEPTH.
     "q363_png_bit_depth_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 5")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(5)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val leg = col("doc_id") % 5
       val ct16 = when(leg === 1, 0).when(leg === 2, 2)
@@ -439,14 +357,7 @@ object Round13 {
       val ah = when(leg === 0,
         M.pngAHash(M.fakePngTyped(seed, wg, hg, lit(2))))
         .otherwise(M.pngAHash(M.fakePng16(seed, wg, hg, ct16)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // APNG FRAME SAMPLING — the FOURTH frame-sampling container
@@ -460,29 +371,18 @@ object Round13 {
     // Every 7th container is maimed: decode nulls whole.
     "q364_apng_frame_sample" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 13 + 4).cast("int")
-      val hg = (id % 9 + 3).cast("int")
+      val (wg, hg) = blockDims(id)
       val nf = (id % 5 + 2)
       val M = etlmudah.multimodal.Multimodal
       val blob = M.fakeApng(id, wg, hg, nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 60)).otherwise(blob)
+      val maimed = maim(blob, 7, 60)
       Tables.documents(s, dir)
         .select(id, wg.as("w"), hg.as("h"), nf.as("nf"), maimed.as("apng"))
         .select(col("w"), col("h"), col("nf"),
           explode(sequence(lit(0L), lit(2L))).as("j"), col("apng"))
         .select(col("w"), col("h"),
           M.apngFrameStats(col("apng"), expr("j * nf div 3")).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_samples"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_samples", "bgr"))
     }),
 
     // TIFF on the cross-format dedup surface — the q338 discipline
@@ -494,21 +394,13 @@ object Round13 {
     // Oracle = q338's VERBATIM (the hash replay doesn't care which
     // container — or which endianness — carried the image).
     "q365_tiff_cross_format_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(2)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val ah = when(col("doc_id") % 2 === 0,
         M.bmpAHash(M.fakeBmpBlocks(seed, wg, hg)))
         .otherwise(M.tiffAHash(M.fakeTiff(seed, wg, hg, seed % 2)))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }),
 
     // TIFF COMPRESSION on the dedup surface: quads share a seed —
@@ -520,49 +412,27 @@ object Round13 {
     // orders — one decoded image, one hash; every planted quad lands
     // whole. The oracle is the q338 hash replay on the 4-way split.
     "q366_tiff_compression_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 4")
-      val wg = (seed % 13 + 4).cast("int")
-      val hg = (seed % 9 + 3).cast("int")
+      val seed = plantedSeed(4)
+      val (wg, hg) = blockDims(seed)
       val M = etlmudah.multimodal.Multimodal
       val leg = col("doc_id") % 4
       val mode = when(leg === 0, 0).when(leg === 1, 2)
         .when(leg === 2, 3).otherwise(5)
       val ah = M.tiffAHash(M.fakeTiff(seed, wg, hg, mode))
-      Tables.documents(s, dir)
-        .select(ah.as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), ah)
     }))
 
   /** q351's pixel-rule oracle — shared VERBATIM with q359 (the
     * progressive scan script must land on the identical closed
     * form). */
   private lazy val q351Sql: String =
-    """WITH d AS (SELECT doc_id, (doc_id % 29 + 4)::INT AS w,
+    s"""WITH d AS (SELECT doc_id, (doc_id % 29 + 4)::INT AS w,
         |    (doc_id % 23 + 3)::INT AS h FROM documents),
         |px AS (SELECT d.doc_id,
         |    (d.doc_id*17 + (fr.fr//8)*5 + (c.c//8)*3) % 256 AS v
         |  FROM d, range(0, 25) fr(fr), range(0, 32) c(c)
         |  WHERE d.doc_id % 5 <> 0 AND fr.fr < d.h AND c.c < d.w),
-        |st AS (SELECT doc_id, count(*)::BIGINT AS n_px,
-        |    min(v)::INT AS v_min, max(v)::INT AS v_max,
-        |    sum(v)::BIGINT AS v_sum
-        |  FROM px GROUP BY doc_id)
-        |SELECT d.w, d.h, count(*) AS n_imgs,
-        |  count(st.doc_id)::BIGINT AS n_decoded,
-        |  sum(st.n_px)::BIGINT AS n_px,
-        |  min(st.v_min) AS r_min, max(st.v_max) AS r_max,
-        |  sum(st.v_sum)::BIGINT AS r_sum,
-        |  min(st.v_min) AS g_min, max(st.v_max) AS g_max,
-        |  sum(st.v_sum)::BIGINT AS g_sum,
-        |  min(st.v_min) AS b_min, max(st.v_max) AS b_max,
-        |  sum(st.v_sum)::BIGINT AS b_sum
-        |FROM d LEFT JOIN st USING (doc_id)
-        |GROUP BY d.w, d.h ORDER BY d.w, d.h""".stripMargin
+        |$grayPixelStatsSql""".stripMargin
 
   def oracleSql: Map[String, String] = Map(
 
@@ -591,28 +461,11 @@ object Round13 {
 
     // the q350 hash replay with the four-way seed split
     "q352_cross_format_subsample_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 4 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
-        |    (seed % 9 + 3) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    3 * ((dd.seed*17 + ((dd.h - 1 - (gi.i*dd.h)//8)//8)*5
-        |      + (((gj.j*dd.w)//8)//8)*3) % 256) AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, doc_id // 4 AS seed FROM documents),
+         |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
+         |    (seed % 9 + 3) AS h FROM d),
+         |$blockGridCtes,
+         |$ahashGroupSizesSql""".stripMargin,
 
     // q344's oracle VERBATIM — same dims, frame counts, maim mod,
     // sampling rule, and per-frame pixel rule (closed form at
@@ -678,30 +531,11 @@ object Round13 {
     // (gi*h)//8 because the visual-hash row h-1-gi*h/8 is file row
     // gi*h/8) with the three-way seed split and the q351-tier dims
     "q354_png_adam7_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 3 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
-        |    (seed % 9 + 3) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    (dd.seed*7 + ((gi.i*dd.h)//8)*3 + ((gj.j*dd.w)//8)) % 256
-        |  + (dd.seed*11 + ((gi.i*dd.h)//8)*5 + ((gj.j*dd.w)//8)*2) % 256
-        |  + (dd.seed*13 + ((gi.i*dd.h)//8)*7 + ((gj.j*dd.w)//8)*3) % 256
-        |    AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, doc_id // 3 AS seed FROM documents),
+         |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
+         |    (seed % 9 + 3) AS h FROM d),
+         |$rgbGridCtes,
+         |$ahashGroupSizesSql""".stripMargin,
 
     // q338's oracle VERBATIM — same seed split, dims and hash rule;
     // the hash replay doesn't care which containers carried the
@@ -721,27 +555,13 @@ object Round13 {
     // because every layout decodes to the identical image — the SQL
     // carries the maim rule and the L formula, nothing else
     "q362_png_color_type_stats" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 13 + 4)::INT AS w,
-        |    (doc_id % 9 + 3)::INT AS h FROM documents),
-        |px AS (SELECT d.doc_id,
-        |    (d.doc_id*11 + fr.fr*5 + c.c*2) % 256 AS v
-        |  FROM d, range(0, 11) fr(fr), range(0, 16) c(c)
-        |  WHERE d.doc_id % 5 <> 0 AND fr.fr < d.h AND c.c < d.w),
-        |st AS (SELECT doc_id, count(*)::BIGINT AS n_px,
-        |    min(v)::INT AS v_min, max(v)::INT AS v_max,
-        |    sum(v)::BIGINT AS v_sum
-        |  FROM px GROUP BY doc_id)
-        |SELECT d.w, d.h, count(*) AS n_imgs,
-        |  count(st.doc_id)::BIGINT AS n_decoded,
-        |  sum(st.n_px)::BIGINT AS n_px,
-        |  min(st.v_min) AS r_min, max(st.v_max) AS r_max,
-        |  sum(st.v_sum)::BIGINT AS r_sum,
-        |  min(st.v_min) AS g_min, max(st.v_max) AS g_max,
-        |  sum(st.v_sum)::BIGINT AS g_sum,
-        |  min(st.v_min) AS b_min, max(st.v_max) AS b_max,
-        |  sum(st.v_sum)::BIGINT AS b_sum
-        |FROM d LEFT JOIN st USING (doc_id)
-        |GROUP BY d.w, d.h ORDER BY d.w, d.h""".stripMargin,
+      s"""WITH d AS (SELECT doc_id, (doc_id % 13 + 4)::INT AS w,
+         |    (doc_id % 9 + 3)::INT AS h FROM documents),
+         |px AS (SELECT d.doc_id,
+         |    (d.doc_id*11 + fr.fr*5 + c.c*2) % 256 AS v
+         |  FROM d, range(0, 11) fr(fr), range(0, 16) c(c)
+         |  WHERE d.doc_id % 5 <> 0 AND fr.fr < d.h AND c.c < d.w),
+         |$grayPixelStatsSql""".stripMargin,
 
     // q361's oracle VERBATIM — same seed split, dims and hash rule;
     // the bit depth changes the byte stream (doubled filter stride,
@@ -770,26 +590,12 @@ object Round13 {
     * 16-bit legs must land on the identical gray closed form under
     * the strip-16 readout). */
   private lazy val oracleSqlQ361: String =
-    """WITH d AS (SELECT doc_id, doc_id // 5 AS seed FROM documents),
-      |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
-      |    (seed % 9 + 3) AS h FROM d),
-      |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-      |    3 * ((dd.seed*11 + ((gi.i*dd.h)//8)*5 + ((gj.j*dd.w)//8)*2)
-      |      % 256) AS s
-      |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-      |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-      |hw AS (SELECT px.seed,
-      |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-      |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-      |      ELSE 0 END)::BIGINT AS h0,
-      |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-      |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-      |      ELSE 0 END)::BIGINT AS h1
-      |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-      |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-      |grp AS (SELECT h0, h1, count(*) AS group_size
-      |  FROM doc GROUP BY h0, h1)
-      |SELECT group_size, count(*) AS n_groups,
-      |  sum(group_size)::BIGINT AS n_docs
-      |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin
+    s"""WITH d AS (SELECT doc_id, doc_id // 5 AS seed FROM documents),
+       |dd AS (SELECT DISTINCT seed, (seed % 13 + 4) AS w,
+       |    (seed % 9 + 3) AS h FROM d),
+       |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
+       |    3 * ((dd.seed*11 + ((gi.i*dd.h)//8)*5 + ((gj.j*dd.w)//8)*2)
+       |      % 256) AS s
+       |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
+       |$ahashGroupSizesSql""".stripMargin
 }

@@ -10,6 +10,7 @@ import etlmudah.multimodal.Multimodal
 import etlmudah.scale.{Dedup, Sampling, Similarity, Sketches, Spectral}
 import etlmudah.web.Web
 import SparkEntry._
+import Fragments._
 
 /** Registry tier q161-q230 (rounds 7-9) — carved out of SparkEntry.scala behind the per-round
   * registry seam (the Round11 convention): `SparkEntry.queries` /
@@ -156,12 +157,7 @@ object RoundsA {
         Tables.orders(s, dir).select("o_orderkey", "o_orderpriority", "o_totalprice"),
         out)
       s.read.orc(out)
-        .groupBy(col("o_orderpriority")).agg(
-          count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("sum_price"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-        .orderBy(col("o_orderpriority"))
+        .transform(copyRoundtripAgg)
     }),
 
 
@@ -251,24 +247,13 @@ object RoundsA {
     // exact sums/mins/maxs cross-engine
     "q224_bmp_pixel_stats" -> ((s, dir) => {
       val id = col("doc_id")
-      val wg = (id % 4 + 1).cast("int")
-      val hg = (id % 3 + 1).cast("int")
+      val (wg, hg) = smallDims(id)
       val blob = Multimodal.fakeBmp24(id, wg, hg)
-      val maimed = when(id % 5 === 0, substring(blob, 1, 40)).otherwise(blob)
+      val maimed = maim(blob, 5, 40)
       Tables.documents(s, dir)
         .select(wg.as("w"), hg.as("h"),
           Multimodal.bmpPixelStats(maimed).as("st"))
-        .groupBy(col("w"), col("h")).agg(
-          count(lit(1)).as("n_imgs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_px")).as("n_px"),
-          min(col("st.b_min")).as("b_min"), max(col("st.b_max")).as("b_max"),
-          sum(col("st.b_sum")).as("b_sum"),
-          min(col("st.g_min")).as("g_min"), max(col("st.g_max")).as("g_max"),
-          sum(col("st.g_sum")).as("g_sum"),
-          min(col("st.r_min")).as("r_min"), max(col("st.r_max")).as("r_max"),
-          sum(col("st.r_sum")).as("r_sum"))
-        .orderBy(col("w"), col("h"))
+        .transform(pixelStatsByDims("n_imgs", "bgr"))
     }),
 
 
@@ -280,26 +265,8 @@ object RoundsA {
     // mid-data to prove partial audio yields null, never a partial
     // statistic. The oracle replays the sample rule over a
     // generate-series — never parses a byte
-    "q230_wav_sample_stats" -> ((s, dir) => {
-      val id = col("doc_id")
-      val ch = (id % 2 + 1)
-      val nf = (id % 3 + 1) * 4
-      val blob = Multimodal.fakeWav16(id, ch, lit(8000L), nf)
-      val maimed = when(id % 7 === 0, substring(blob, 1, 50)).otherwise(blob)
-      Tables.documents(s, dir)
-        .select(ch.cast("int").as("channels_gen"),
-          Multimodal.wavSampleStats(maimed).as("st"))
-        .groupBy(col("channels_gen")).agg(
-          count(lit(1)).as("n_docs"),
-          count(col("st")).as("n_decoded"),
-          sum(col("st.n_samples")).as("n_samples"),
-          max(col("st.peak")).as("peak"),
-          min(col("st.s_min")).as("s_min"),
-          max(col("st.s_max")).as("s_max"),
-          sum(col("st.s_sum")).as("s_sum"),
-          sum(col("st.sq_sum")).as("sq_sum"))
-        .orderBy(col("channels_gen"))
-    }),
+    "q230_wav_sample_stats" -> sampleStatsByChannels(
+      Multimodal.fakeWav16, Multimodal.wavSampleStats(_)),
 
 
     // IMAGE near-dup dedup on REAL pixels: perceptual average hash
@@ -311,17 +278,10 @@ object RoundsA {
     // whole hash from the pixel rule (grid indices are integer
     // division) — never parses a byte
     "q227_image_ahash_dedup" -> ((s, dir) => {
-      val seed = expr("doc_id div 2")
+      val seed = plantedSeed(2)
       val blob = Multimodal.fakeBmp24(seed,
         (seed % 4 + 1).cast("int"), (seed % 3 + 1).cast("int"))
-      Tables.documents(s, dir)
-        .select(Multimodal.bmpAHash(blob).as("ah"))
-        .groupBy(col("ah.h0").as("h0"), col("ah.h1").as("h1"))
-        .agg(count(lit(1)).as("group_size"))
-        .groupBy(col("group_size")).agg(
-          count(lit(1)).as("n_groups"),
-          sum(col("group_size")).as("n_docs"))
-        .orderBy(col("group_size"))
+      ahashGroupSizes(Tables.documents(s, dir), Multimodal.bmpAHash(blob))
     }),
 
 
@@ -340,11 +300,7 @@ object RoundsA {
       // blob materialized as its own projection first (the q163 lesson)
       docs.select(col("doc_id"),
           Multimodal.fakeMediaHeader(variant, w, h).as("blob"))
-        .select(col("doc_id"), Multimodal.mediaMeta(col("blob")).as("m"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("m.width").cast("bigint").as("width"),
-          col("m.height").cast("bigint").as("height"))
-        .orderBy(col("doc_id"))
+        .transform(mediaDims)
     }),
 
 
@@ -494,11 +450,7 @@ object RoundsA {
       // blob materialized as its own projection first (the q163 lesson)
       docs.select(col("doc_id"),
           Multimodal.fakeWebpHeader(variant, w, h).as("blob"))
-        .select(col("doc_id"), Multimodal.mediaMeta(col("blob")).as("m"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("m.width").cast("bigint").as("width"),
-          col("m.height").cast("bigint").as("height"))
-        .orderBy(col("doc_id"))
+        .transform(mediaDims)
     }),
 
 
@@ -1032,11 +984,7 @@ object RoundsA {
     // q218 discipline); q223 consumes the staged edge artifact
     "q222_host_link_rank" -> ((s, dir) => {
       import etlmudah.web.Web
-      val id = col("doc_id")
-      val pages = Tables.documents(s, dir).select(
-        Web.fakeUrl(id, col("source")).as("url"),
-        Web.fakeHtml(id, col("text"), lit(null).cast("string"),
-          Web.fakeLinkUrls(id)).as("page"))
+      val pages = fakePages(s, dir)
       Web.hostRank(Web.hostLinkEdges(pages, "url", "page"), iters = 3)
     }),
 
@@ -1235,32 +1183,30 @@ object RoundsA {
     // has 6dp-rounded cosine >= 0.35; kept_by is the most-similar such
     // mate (ties -> lowest id)
     "q164_semantic_dedup_portable" ->
-      """WITH c AS (
-        |  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-        |  ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8),
-        |scored AS (
-        |  SELECT e.vec_id, e.embedding, c.cid,
-        |    round(list_cosine_similarity(e.embedding::DOUBLE[],
-        |      c.cvec::DOUBLE[]), 6) AS cs
-        |  FROM embeddings e CROSS JOIN c),
-        |assigned AS (
-        |  SELECT vec_id, embedding, cid FROM (
-        |    SELECT vec_id, embedding, cid,
-        |      row_number() OVER (PARTITION BY vec_id
-        |                         ORDER BY cs DESC, cid ASC) AS rn
-        |    FROM scored) WHERE rn = 1),
-        |pairs AS (
-        |  SELECT b.vec_id, a.vec_id AS keep_id,
-        |    round(list_cosine_similarity(a.embedding::DOUBLE[],
-        |      b.embedding::DOUBLE[]), 6) AS cos
-        |  FROM assigned a JOIN assigned b
-        |    ON a.cid = b.cid AND a.vec_id < b.vec_id)
-        |SELECT vec_id, keep_id AS kept_by, cos AS max_cos FROM (
-        |  SELECT vec_id, keep_id, cos,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY cos DESC, keep_id ASC) AS rn
-        |  FROM pairs WHERE cos >= 0.35)
-        |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+      s"""WITH ${ivfCentroidCtes},
+         |scored AS (
+         |  SELECT e.vec_id, e.embedding, c.cid,
+         |    round(list_cosine_similarity(e.embedding::DOUBLE[],
+         |      c.cvec::DOUBLE[]), 6) AS cs
+         |  FROM embeddings e CROSS JOIN c),
+         |assigned AS (
+         |  SELECT vec_id, embedding, cid FROM (
+         |    SELECT vec_id, embedding, cid,
+         |      row_number() OVER (PARTITION BY vec_id
+         |                         ORDER BY cs DESC, cid ASC) AS rn
+         |    FROM scored) WHERE rn = 1),
+         |pairs AS (
+         |  SELECT b.vec_id, a.vec_id AS keep_id,
+         |    round(list_cosine_similarity(a.embedding::DOUBLE[],
+         |      b.embedding::DOUBLE[]), 6) AS cos
+         |  FROM assigned a JOIN assigned b
+         |    ON a.cid = b.cid AND a.vec_id < b.vec_id)
+         |SELECT vec_id, keep_id AS kept_by, cos AS max_cos FROM (
+         |  SELECT vec_id, keep_id, cos,
+         |    row_number() OVER (PARTITION BY vec_id
+         |                       ORDER BY cos DESC, keep_id ASC) AS rn
+         |  FROM pairs WHERE cos >= 0.35)
+         |WHERE rn = 1 ORDER BY vec_id""".stripMargin,
 
 
     // winnowing: trigram md5-lane hashes, trailing windows of 4,
@@ -1311,12 +1257,8 @@ object RoundsA {
 
 
     "q166_winnow_shared_pairs" ->
-      (winnowSelSql + """,
-        |fpd AS (SELECT DISTINCT doc_id, fp FROM sel),
-        |dfc AS (SELECT fp, count(*) AS fp_df FROM fpd GROUP BY fp),
-        |cold AS (
-        |  SELECT f.doc_id, f.fp FROM fpd f JOIN dfc USING (fp)
-        |  WHERE fp_df <= 50)
+      (winnowSelSql + s""",
+        |$winnowColdCtes
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS shared
         |FROM cold a JOIN cold b ON a.fp = b.fp AND a.doc_id < b.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 2
@@ -1353,25 +1295,13 @@ object RoundsA {
     // edges, transitive closure via the recursive reach CTE, min-id
     // cluster labels — q64's oracle shape over the fingerprint tier
     "q170_winnow_dup_clusters" ->
-      (winnowSelSql.replace("WITH tokarr", "WITH RECURSIVE tokarr") + """,
-        |fpd AS (SELECT DISTINCT doc_id, fp FROM sel),
-        |dfc AS (SELECT fp, count(*) AS fp_df FROM fpd GROUP BY fp),
-        |cold AS (
-        |  SELECT f.doc_id, f.fp FROM fpd f JOIN dfc USING (fp)
-        |  WHERE fp_df <= 50),
+      (winnowSelSql.replace("WITH tokarr", "WITH RECURSIVE tokarr") + s""",
+        |$winnowColdCtes,
         |pairs AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
         |  FROM cold a JOIN cold b ON a.fp = b.fp AND a.doc_id < b.doc_id
         |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id AS n, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.n, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-        |cc AS (SELECT n AS doc_id, min(r) AS cluster_id FROM reach GROUP BY n)
+        |$reachCcCtes
         |SELECT doc_id, cluster_id,
         |  count(*) OVER (PARTITION BY cluster_id) AS cluster_size
         |FROM cc ORDER BY doc_id""".stripMargin),
@@ -1381,12 +1311,8 @@ object RoundsA {
     // whole corpus then splitting even/odd equals winnowing each side;
     // the df cap counts docs across BOTH corpora
     "q168_winnow_decontamination" ->
-      (winnowSelSql + """,
-        |fpd AS (SELECT DISTINCT doc_id, fp FROM sel),
-        |dfc AS (SELECT fp, count(*) AS fp_df FROM fpd GROUP BY fp),
-        |cold AS (
-        |  SELECT f.doc_id, f.fp FROM fpd f JOIN dfc USING (fp)
-        |  WHERE fp_df <= 50)
+      (winnowSelSql + s""",
+        |$winnowColdCtes
         |SELECT t.doc_id AS train_id, r.doc_id AS ref_id,
         |  count(*) AS shared
         |FROM cold t JOIN cold r
@@ -1398,32 +1324,25 @@ object RoundsA {
     // q158's assignment CTEs + the q89 md5-uniform cap window — the
     // full cluster-then-cap pipeline replayed
     "q208_cluster_balanced_sample" ->
-      """WITH c AS (
-        |  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-        |  ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8),
-        |scored AS (
-        |  SELECT e.vec_id, c.cid,
-        |    round(list_cosine_similarity(e.embedding::DOUBLE[],
-        |      c.cvec::DOUBLE[]), 6) AS cs
-        |  FROM embeddings e CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, cid FROM (
-        |    SELECT vec_id, cid,
-        |      row_number() OVER (PARTITION BY vec_id
-        |                         ORDER BY cs DESC, cid ASC) AS rn
-        |    FROM scored) WHERE rn = 1),
-        |u AS (
-        |  SELECT vec_id, cid,
-        |    CAST(('0x' || substr(md5(vec_id::VARCHAR || 'cbs'), 1, 8))
-        |      AS UBIGINT) / 4294967296.0 AS u
-        |  FROM assign),
-        |r AS (
-        |  SELECT vec_id, cid,
-        |    row_number() OVER (PARTITION BY cid
-        |                       ORDER BY u ASC, vec_id ASC) AS pick_rank
-        |  FROM u)
-        |SELECT vec_id, cid AS centroid_id, pick_rank::BIGINT AS pick_rank
-        |FROM r WHERE pick_rank <= 32 ORDER BY vec_id""".stripMargin,
+      s"""WITH ${ivfScoredCtes},
+         |assign AS (
+         |  SELECT vec_id, cid FROM (
+         |    SELECT vec_id, cid,
+         |      row_number() OVER (PARTITION BY vec_id
+         |                         ORDER BY cs DESC, cid ASC) AS rn
+         |    FROM scored) WHERE rn = 1),
+         |u AS (
+         |  SELECT vec_id, cid,
+         |    CAST(('0x' || substr(md5(vec_id::VARCHAR || 'cbs'), 1, 8))
+         |      AS UBIGINT) / 4294967296.0 AS u
+         |  FROM assign),
+         |r AS (
+         |  SELECT vec_id, cid,
+         |    row_number() OVER (PARTITION BY cid
+         |                       ORDER BY u ASC, vec_id ASC) AS pick_rank
+         |  FROM u)
+         |SELECT vec_id, cid AS centroid_id, pick_rank::BIGINT AS pick_rank
+         |FROM r WHERE pick_rank <= 32 ORDER BY vec_id""".stripMargin,
 
 
     // reference-side (even-id) md5 centroid pick, both snapshots
@@ -1496,26 +1415,7 @@ object RoundsA {
     // and the intersection count — the recall METRIC hash-checked
     "q229_binary_recall" ->
       s"""WITH $duckBinaryRerankCtes,
-         |bin AS (SELECT probe_id, vec_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY cos_sim DESC, vec_id ASC) AS rk FROM rr)
-         |  WHERE rk <= 10),
-         |ex AS (SELECT probe_id, vec_id FROM (
-         |    SELECT p.probe_id, em.vec_id,
-         |      row_number() OVER (PARTITION BY p.probe_id
-         |        ORDER BY round(list_cosine_similarity(
-         |          em.embedding::DOUBLE[], pe.embedding::DOUBLE[]), 6)
-         |          DESC, em.vec_id ASC) AS rk
-         |    FROM pr p
-         |    JOIN embeddings pe ON pe.vec_id = p.probe_id
-         |    CROSS JOIN embeddings em WHERE em.vec_id <> p.probe_id)
-         |  WHERE rk <= 10),
-         |h AS (SELECT bin.probe_id, count(*)::BIGINT AS n_hits
-         |  FROM bin JOIN ex USING (probe_id, vec_id) GROUP BY 1)
-         |SELECT pr.probe_id, coalesce(h.n_hits, 0)::BIGINT AS n_hits,
-         |  round(coalesce(h.n_hits, 0)::DOUBLE / 10, 6) AS recall
-         |FROM pr LEFT JOIN h USING (probe_id)
-         |ORDER BY probe_id""".stripMargin,
+         |$rerankRecallSql""".stripMargin,
 
 
     "q210_matryoshka_recall" ->
@@ -1556,148 +1456,82 @@ object RoundsA {
     // integer subspace coordinates ((p-1)//8, (p-1)%8), BIGINT squared
     // distances, argmin with lowest-code ties
     "q177_pq_codes" ->
-      """WITH sx AS (
-        |  SELECT vec_id, ((generate_subscripts(embedding, 1) - 1) // 8) AS sub,
-        |    ((generate_subscripts(embedding, 1) - 1) % 8) AS pos,
-        |    CAST(floor(unnest(embedding)::DOUBLE * 1000000) AS BIGINT) AS xq
-        |  FROM embeddings),
-        |pick AS (
-        |  SELECT vec_id AS code_src,
-        |    row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS code
-        |  FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 16),
-        |cb AS (
-        |  SELECT p.code, s.sub, s.pos, s.xq AS cq
-        |  FROM pick p JOIN sx s ON s.vec_id = p.code_src),
-        |scored AS (
-        |  SELECT s.vec_id, s.sub, c.code,
-        |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS sqd
-        |  FROM sx s JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
-        |  GROUP BY 1, 2, 3),
-        |best AS (
-        |  SELECT vec_id, sub, code, sqd,
-        |    row_number() OVER (PARTITION BY vec_id, sub
-        |                       ORDER BY sqd ASC, code ASC) AS rn
-        |  FROM scored)
-        |SELECT vec_id, sub, code, sqd FROM best WHERE rn = 1
-        |ORDER BY vec_id, sub""".stripMargin,
+      s"""WITH $pqScoredCtes,
+         |best AS (
+         |  SELECT vec_id, sub, code, sqd,
+         |    row_number() OVER (PARTITION BY vec_id, sub
+         |                       ORDER BY sqd ASC, code ASC) AS rn
+         |  FROM scored)
+         |SELECT vec_id, sub, code, sqd FROM best WHERE rn = 1
+         |ORDER BY vec_id, sub""".stripMargin,
 
 
     // ADC replay: q177's encode CTEs + the probe LUT (5 largest-md5
     // probes, exact subvectors x codebook) + per-probe ranking
     "q178_pq_adc_topk" ->
-      """WITH sx AS (
-        |  SELECT vec_id, ((generate_subscripts(embedding, 1) - 1) // 8) AS sub,
-        |    ((generate_subscripts(embedding, 1) - 1) % 8) AS pos,
-        |    CAST(floor(unnest(embedding)::DOUBLE * 1000000) AS BIGINT) AS xq
-        |  FROM embeddings),
-        |pick AS (
-        |  SELECT vec_id AS code_src,
-        |    row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS code
-        |  FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 16),
-        |cb AS (
-        |  SELECT p.code, s.sub, s.pos, s.xq AS cq
-        |  FROM pick p JOIN sx s ON s.vec_id = p.code_src),
-        |scored AS (
-        |  SELECT s.vec_id, s.sub, c.code,
-        |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS sqd
-        |  FROM sx s JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
-        |  GROUP BY 1, 2, 3),
-        |enc AS (
-        |  SELECT vec_id, sub, code FROM (
-        |    SELECT vec_id, sub, code,
-        |      row_number() OVER (PARTITION BY vec_id, sub
-        |                         ORDER BY sqd ASC, code ASC) AS rn
-        |    FROM scored) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS probe_id FROM embeddings
-        |  ORDER BY md5(vec_id::VARCHAR) DESC, vec_id DESC LIMIT 5),
-        |lut AS (
-        |  SELECT s.vec_id AS probe_id, c.sub, c.code,
-        |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS lut
-        |  FROM sx s JOIN probes pr ON pr.probe_id = s.vec_id
-        |            JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
-        |  GROUP BY 1, 2, 3),
-        |adc AS (
-        |  SELECT l.probe_id, e.vec_id, sum(l.lut)::BIGINT AS adc_dist
-        |  FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
-        |  GROUP BY 1, 2)
-        |SELECT probe_id, rank, vec_id, adc_dist FROM (
-        |  SELECT probe_id, vec_id, adc_dist,
-        |    row_number() OVER (PARTITION BY probe_id
-        |                       ORDER BY adc_dist ASC, vec_id ASC) AS rank
-        |  FROM adc) WHERE rank <= 10
-        |ORDER BY probe_id, rank""".stripMargin,
+      s"""WITH $pqScoredCtes,
+         |$pqEncProbeCtes,
+         |lut AS (
+         |  SELECT s.vec_id AS probe_id, c.sub, c.code,
+         |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS lut
+         |  FROM sx s JOIN probes pr ON pr.probe_id = s.vec_id
+         |            JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
+         |  GROUP BY 1, 2, 3),
+         |adc AS (
+         |  SELECT l.probe_id, e.vec_id, sum(l.lut)::BIGINT AS adc_dist
+         |  FROM enc e JOIN lut l ON l.sub = e.sub AND l.code = e.code
+         |  GROUP BY 1, 2)
+         |SELECT probe_id, rank, vec_id, adc_dist FROM (
+         |  SELECT probe_id, vec_id, adc_dist,
+         |    row_number() OVER (PARTITION BY probe_id
+         |                       ORDER BY adc_dist ASC, vec_id ASC) AS rank
+         |  FROM adc) WHERE rank <= 10
+         |ORDER BY probe_id, rank""".stripMargin,
 
 
     // IVF-PQ replay: q158's centroid/assignment CTEs + q177's encode
     // CTEs + q178's probe LUT, composed — candidates restricted to
     // each probe's 2 best lists before the ADC ranking
     "q179_ivfpq_topk" ->
-      """WITH c AS (
-        |  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-        |  ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8),
-        |lists AS (
-        |  SELECT vec_id AS id, cid FROM (
-        |    SELECT e.vec_id, c.cid,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        round(list_cosine_similarity(e.embedding::DOUBLE[],
-        |          c.cvec::DOUBLE[]), 6) DESC, c.cid ASC) AS rn
-        |    FROM embeddings e CROSS JOIN c) WHERE rn = 1),
-        |sx AS (
-        |  SELECT vec_id, ((generate_subscripts(embedding, 1) - 1) // 8) AS sub,
-        |    ((generate_subscripts(embedding, 1) - 1) % 8) AS pos,
-        |    CAST(floor(unnest(embedding)::DOUBLE * 1000000) AS BIGINT) AS xq
-        |  FROM embeddings),
-        |pick AS (
-        |  SELECT vec_id AS code_src,
-        |    row_number() OVER (ORDER BY md5(vec_id::VARCHAR), vec_id) - 1 AS code
-        |  FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 16),
-        |cb AS (
-        |  SELECT p.code, s.sub, s.pos, s.xq AS cq
-        |  FROM pick p JOIN sx s ON s.vec_id = p.code_src),
-        |scored AS (
-        |  SELECT s.vec_id, s.sub, c.code,
-        |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS sqd
-        |  FROM sx s JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
-        |  GROUP BY 1, 2, 3),
-        |enc AS (
-        |  SELECT vec_id, sub, code FROM (
-        |    SELECT vec_id, sub, code,
-        |      row_number() OVER (PARTITION BY vec_id, sub
-        |                         ORDER BY sqd ASC, code ASC) AS rn
-        |    FROM scored) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS probe_id FROM embeddings
-        |  ORDER BY md5(vec_id::VARCHAR) DESC, vec_id DESC LIMIT 5),
-        |plists AS (
-        |  SELECT probe_id, cid FROM (
-        |    SELECT p.probe_id, c.cid,
-        |      row_number() OVER (PARTITION BY p.probe_id ORDER BY
-        |        round(list_cosine_similarity(e.embedding::DOUBLE[],
-        |          c.cvec::DOUBLE[]), 6) DESC, c.cid ASC) AS lrn
-        |    FROM probes p JOIN embeddings e ON e.vec_id = p.probe_id
-        |    CROSS JOIN c) WHERE lrn <= 2),
-        |lut AS (
-        |  SELECT s.vec_id AS probe_id, c.sub, c.code,
-        |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS lut
-        |  FROM sx s JOIN probes pr ON pr.probe_id = s.vec_id
-        |            JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
-        |  GROUP BY 1, 2, 3),
-        |cand AS (
-        |  SELECT pl.probe_id, l.id, l.cid FROM lists l
-        |  JOIN plists pl ON pl.cid = l.cid),
-        |adc AS (
-        |  SELECT cd.probe_id, cd.id, cd.cid, sum(l.lut)::BIGINT AS adc_dist
-        |  FROM cand cd JOIN enc e ON e.vec_id = cd.id
-        |  JOIN lut l ON l.probe_id = cd.probe_id
-        |            AND l.sub = e.sub AND l.code = e.code
-        |  GROUP BY 1, 2, 3)
-        |SELECT probe_id, rank, vec_id, list_id, adc_dist FROM (
-        |  SELECT probe_id, id AS vec_id, cid AS list_id, adc_dist,
-        |    row_number() OVER (PARTITION BY probe_id
-        |                       ORDER BY adc_dist ASC, id ASC) AS rank
-        |  FROM adc) WHERE rank <= 10
-        |ORDER BY probe_id, rank""".stripMargin,
+      s"""WITH ${ivfCentroidCtes},
+         |lists AS (
+         |  SELECT vec_id AS id, cid FROM (
+         |    SELECT e.vec_id, c.cid,
+         |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+         |        round(list_cosine_similarity(e.embedding::DOUBLE[],
+         |          c.cvec::DOUBLE[]), 6) DESC, c.cid ASC) AS rn
+         |    FROM embeddings e CROSS JOIN c) WHERE rn = 1),
+         |$pqScoredCtes,
+         |$pqEncProbeCtes,
+         |plists AS (
+         |  SELECT probe_id, cid FROM (
+         |    SELECT p.probe_id, c.cid,
+         |      row_number() OVER (PARTITION BY p.probe_id ORDER BY
+         |        round(list_cosine_similarity(e.embedding::DOUBLE[],
+         |          c.cvec::DOUBLE[]), 6) DESC, c.cid ASC) AS lrn
+         |    FROM probes p JOIN embeddings e ON e.vec_id = p.probe_id
+         |    CROSS JOIN c) WHERE lrn <= 2),
+         |lut AS (
+         |  SELECT s.vec_id AS probe_id, c.sub, c.code,
+         |    sum((s.xq - c.cq) * (s.xq - c.cq))::BIGINT AS lut
+         |  FROM sx s JOIN probes pr ON pr.probe_id = s.vec_id
+         |            JOIN cb c ON c.sub = s.sub AND c.pos = s.pos
+         |  GROUP BY 1, 2, 3),
+         |cand AS (
+         |  SELECT pl.probe_id, l.id, l.cid FROM lists l
+         |  JOIN plists pl ON pl.cid = l.cid),
+         |adc AS (
+         |  SELECT cd.probe_id, cd.id, cd.cid, sum(l.lut)::BIGINT AS adc_dist
+         |  FROM cand cd JOIN enc e ON e.vec_id = cd.id
+         |  JOIN lut l ON l.probe_id = cd.probe_id
+         |            AND l.sub = e.sub AND l.code = e.code
+         |  GROUP BY 1, 2, 3)
+         |SELECT probe_id, rank, vec_id, list_id, adc_dist FROM (
+         |  SELECT probe_id, id AS vec_id, cid AS list_id, adc_dist,
+         |    row_number() OVER (PARTITION BY probe_id
+         |                       ORDER BY adc_dist ASC, id ASC) AS rank
+         |  FROM adc) WHERE rank <= 10
+         |ORDER BY probe_id, rank""".stripMargin,
 
 
     // scorer replay: hash-trick bucket and md5-lattice weight per
@@ -1773,61 +1607,12 @@ object RoundsA {
         |ORDER BY doc_id, ref_id""".stripMargin),
 
 
-    // the sample rule replayed over a generate-series, truncated docs
-    // excluded by the same %7 rule, per-clip stats re-aggregated per
-    // generated channel count
     "q230_wav_sample_stats" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 2 + 1)::INT AS ch,
-        |    (doc_id % 3 + 1) * 4 AS nf FROM documents),
-        |s AS (SELECT d.doc_id, d.ch,
-        |    ((d.doc_id * 31 + i.i * 17) % 65536) - 32768 AS v
-        |  FROM d, range(0, 24) i(i)
-        |  WHERE i.i < d.nf * d.ch AND d.doc_id % 7 <> 0),
-        |st AS (SELECT doc_id, ch, count(*)::BIGINT AS n_samples,
-        |    max(abs(v))::INT AS peak, min(v)::INT AS s_min,
-        |    max(v)::INT AS s_max,
-        |    sum(v)::BIGINT AS s_sum, sum(v * v)::BIGINT AS sq_sum
-        |  FROM s GROUP BY 1, 2)
-        |SELECT d.ch AS channels_gen, count(*) AS n_docs,
-        |  count(st.doc_id)::BIGINT AS n_decoded,
-        |  sum(st.n_samples)::BIGINT AS n_samples,
-        |  max(st.peak) AS peak, min(st.s_min) AS s_min,
-        |  max(st.s_max) AS s_max,
-        |  sum(st.s_sum)::BIGINT AS s_sum,
-        |  sum(st.sq_sum)::BIGINT AS sq_sum
-        |FROM d LEFT JOIN st USING (doc_id)
-        |GROUP BY d.ch ORDER BY channels_gen""".stripMargin,
+      wavSampleStatsSql,
 
 
-    // the aHash replayed from the pixel rule: 8x8 grid cells sample
-    // pixel (gi*h//8, gj*w//8), brightness = the three closed-form
-    // channels summed, bit = cell*64 > grid total (exact BIGINT), two
-    // 32-bit words — then the same group-size histogram
     "q227_image_ahash_dedup" ->
-      """WITH d AS (SELECT doc_id, doc_id // 2 AS seed FROM documents),
-        |dd AS (SELECT DISTINCT seed, (seed % 4 + 1) AS w,
-        |    (seed % 3 + 1) AS h FROM d),
-        |px AS (SELECT dd.seed, gi.i AS gi, gj.j AS gj,
-        |    (dd.seed*7 + ((gi.i*dd.h)//8)*3 + ((gj.j*dd.w)//8)) % 256
-        |  + (dd.seed*11 + ((gi.i*dd.h)//8)*5 + ((gj.j*dd.w)//8)*2) % 256
-        |  + (dd.seed*13 + ((gi.i*dd.h)//8)*7 + ((gj.j*dd.w)//8)*3) % 256
-        |    AS s
-        |  FROM dd, range(0, 8) gi(i), range(0, 8) gj(j)),
-        |tot AS (SELECT seed, sum(s)::BIGINT AS t FROM px GROUP BY seed),
-        |hw AS (SELECT px.seed,
-        |    sum(CASE WHEN px.gi*8 + px.gj < 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj)::INT)
-        |      ELSE 0 END)::BIGINT AS h0,
-        |    sum(CASE WHEN px.gi*8 + px.gj >= 32 AND px.s*64 > tot.t
-        |      THEN (1::BIGINT << (px.gi*8 + px.gj - 32)::INT)
-        |      ELSE 0 END)::BIGINT AS h1
-        |  FROM px JOIN tot USING (seed) GROUP BY px.seed),
-        |doc AS (SELECT d.doc_id, hw.h0, hw.h1 FROM d JOIN hw USING (seed)),
-        |grp AS (SELECT h0, h1, count(*) AS group_size
-        |  FROM doc GROUP BY h0, h1)
-        |SELECT group_size, count(*) AS n_groups,
-        |  sum(group_size)::BIGINT AS n_docs
-        |FROM grp GROUP BY group_size ORDER BY group_size""".stripMargin,
+      ahashDedupSql,
 
 
     // the pixel rule replayed over a correlated generate-series grid
@@ -1963,11 +1748,7 @@ object RoundsA {
     // ORC is lossless: the round-trip aggregate must equal the same
     // aggregate straight off the source table
     "q181_orc_roundtrip" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        | min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        | FROM orders GROUP BY o_orderpriority
-        | ORDER BY o_orderpriority""".stripMargin,
+      copyRoundtripSql,
 
 
     // Kneser-Ney: same CTE ladder as q106 plus the continuation
@@ -1975,143 +1756,88 @@ object RoundsA {
     // Spark side so both engines run the same float tree over the
     // same exact-integer counts
     "q188_kneser_ney_logprob" ->
-      """WITH tok AS (SELECT doc_id, source,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS t,
-        |    generate_subscripts(string_split_regex(trim(text), '\s+'), 1)
-        |      AS pos
-        |  FROM documents),
-        |bg AS (SELECT a.doc_id, a.source, a.t AS prev, b.t AS cur
-        |  FROM tok a JOIN tok b
-        |    ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-        |tf AS (SELECT doc_id, source, prev, cur, count(*)::BIGINT AS m
-        |  FROM bg GROUP BY doc_id, source, prev, cur),
-        |big AS (SELECT prev, cur, sum(m)::BIGINT AS c2
-        |  FROM tf GROUP BY prev, cur),
-        |ctx AS (SELECT prev, sum(c2)::BIGINT AS c1, count(*)::BIGINT AS n1f
-        |  FROM big GROUP BY prev),
-        |cont AS (SELECT cur, count(*)::BIGINT AS n1b FROM big GROUP BY cur),
-        |tot AS (SELECT count(*)::BIGINT AS b FROM big),
-        |doc AS (SELECT doc_id, source,
-        |    round(sum(m * ln((c2 - 0.75) / c1
-        |      + ((0.75 * n1f) / c1) * (CAST(n1b AS DOUBLE) / b)))
-        |      / sum(m), 6) AS doc_lp
-        |  FROM tf JOIN big USING (prev, cur) JOIN ctx USING (prev)
-        |    JOIN cont USING (cur) CROSS JOIN tot
-        |  GROUP BY doc_id, source)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        | round(avg(doc_lp), 4) AS avg_logprob,
-        | round(min(doc_lp), 6) AS min_logprob,
-        | round(max(doc_lp), 6) AS max_logprob
-        |FROM doc GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH $bigramCountCtes,
+         |$kneserNeyDocCtes
+         |${logprobBySourceSql}""".stripMargin,
 
 
     // perplexity buckets: q188's doc CTE + an ntile window; the 6dp
     // doc_lp round happens BEFORE the ordering and ties break by
     // doc_id, so bucket assignment is deterministic cross-engine
     "q189_perplexity_buckets" ->
-      """WITH tok AS (SELECT doc_id, source,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS t,
-        |    generate_subscripts(string_split_regex(trim(text), '\s+'), 1)
-        |      AS pos
-        |  FROM documents),
-        |bg AS (SELECT a.doc_id, a.source, a.t AS prev, b.t AS cur
-        |  FROM tok a JOIN tok b
-        |    ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-        |tf AS (SELECT doc_id, source, prev, cur, count(*)::BIGINT AS m
-        |  FROM bg GROUP BY doc_id, source, prev, cur),
-        |big AS (SELECT prev, cur, sum(m)::BIGINT AS c2
-        |  FROM tf GROUP BY prev, cur),
-        |ctx AS (SELECT prev, sum(c2)::BIGINT AS c1, count(*)::BIGINT AS n1f
-        |  FROM big GROUP BY prev),
-        |cont AS (SELECT cur, count(*)::BIGINT AS n1b FROM big GROUP BY cur),
-        |tot AS (SELECT count(*)::BIGINT AS b FROM big),
-        |doc AS (SELECT doc_id, source,
-        |    round(sum(m * ln((c2 - 0.75) / c1
-        |      + ((0.75 * n1f) / c1) * (CAST(n1b AS DOUBLE) / b)))
-        |      / sum(m), 6) AS doc_lp
-        |  FROM tf JOIN big USING (prev, cur) JOIN ctx USING (prev)
-        |    JOIN cont USING (cur) CROSS JOIN tot
-        |  GROUP BY doc_id, source),
-        |bk AS (SELECT source, doc_lp, ntile(3) OVER
-        |    (PARTITION BY source ORDER BY doc_lp DESC, doc_id) AS bucket
-        |  FROM doc)
-        |SELECT source, bucket::BIGINT AS bucket, count(*)::BIGINT AS n_docs,
-        | round(avg(doc_lp), 4) AS avg_logprob,
-        | round(min(doc_lp), 6) AS min_logprob,
-        | round(max(doc_lp), 6) AS max_logprob
-        |FROM bk GROUP BY source, bucket ORDER BY source, bucket""".stripMargin,
+      s"""WITH $bigramCountCtes,
+         |$kneserNeyDocCtes,
+         |bk AS (SELECT source, doc_lp, ntile(3) OVER
+         |    (PARTITION BY source ORDER BY doc_lp DESC, doc_id) AS bucket
+         |  FROM doc)
+         |SELECT source, bucket::BIGINT AS bucket, count(*)::BIGINT AS n_docs,
+         | round(avg(doc_lp), 4) AS avg_logprob,
+         | round(min(doc_lp), 6) AS min_logprob,
+         | round(max(doc_lp), 6) AS max_logprob
+         |FROM bk GROUP BY source, bucket ORDER BY source, bucket""".stripMargin,
 
 
     // the whole curation chain replayed: q176's clean passes, q180's
     // scorer, q114's fingerprint-dedup CTE on the cleaned text, then
     // q174/q175's domain CTEs and quota window (salt 'webcur')
     "q182_web_curation" ->
-      """WITH base AS (
-        |  SELECT doc_id, source,
-        |    'https://' || ['www.','blog.',''][(doc_id % 3 + 1)::INT] ||
-        |    'd' || (doc_id % 7)::VARCHAR || '.' ||
-        |    ['com','org','co.uk','com.my'][(doc_id % 4 + 1)::INT] ||
-        |    '/' || source || '/' || doc_id::VARCHAR AS url,
-        |    trim(regexp_replace(
-        |      translate(
-        |        regexp_replace(text, '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-        |        chr(8220)||chr(8221)||chr(8216)||chr(8217)||chr(8211)||chr(8212)||chr(160),
-        |        '""''''-- '),
-        |      '\s+', ' ', 'g')) AS clean_text
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(clean_text), '\s+')) AS t
-        |  FROM base),
-        |wts AS (
-        |  SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000 AS w
-        |  FROM tok),
-        |sc AS (
-        |  SELECT doc_id, CASE WHEN sum(w) >= 0
-        |    THEN floor((abs(sum(w) * 1000) * 2 + count(*)) / (count(*) * 2))
-        |    ELSE -floor((abs(sum(w) * 1000) * 2 + count(*)) / (count(*) * 2))
-        |    END / 1000000.0 AS score
-        |  FROM wts GROUP BY doc_id),
-        |gated AS (
-        |  SELECT b.*, s.score FROM base b JOIN sc s USING (doc_id)
-        |  WHERE s.score >= -0.01),
-        |ded AS (
-        |  SELECT min(doc_id) AS doc_id FROM gated
-        |  GROUP BY md5(regexp_replace(lower(trim(clean_text)), '\s+', ' ', 'g'))),
-        |surv AS (SELECT g.* FROM gated g JOIN ded USING (doc_id)),
-        |hd AS (
-        |  SELECT doc_id, clean_text, score,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host
-        |  FROM surv),
-        |ad AS (
-        |  SELECT doc_id, clean_text, score, host,
-        |    string_split(lower(host), '.') AS arr,
-        |    len(string_split(lower(host), '.')) AS n
-        |  FROM hd),
-        |dm AS (
-        |  SELECT doc_id, clean_text, score,
-        |    CASE WHEN n <= 2 THEN lower(host)
-        |         WHEN (arr[n-1] || '.' || arr[n]) IN
-        |           ('co.uk','ac.uk','gov.uk','org.uk','com.my','gov.my',
-        |            'edu.my','org.my','com.au','net.au','org.au','co.jp',
-        |            'ne.jp','or.jp','com.br','com.cn','com.sg','co.in','co.kr')
-        |           THEN arr[n-2] || '.' || arr[n-1] || '.' || arr[n]
-        |         ELSE arr[n-1] || '.' || arr[n] END AS domain
-        |  FROM ad),
-        |k AS (
-        |  SELECT domain, doc_id, clean_text, score,
-        |    row_number() OVER (PARTITION BY domain
-        |      ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'webcur'), 1, 8))
-        |        AS UBIGINT) / 4294967296.0 ASC, doc_id ASC) AS rn
-        |  FROM dm)
-        |SELECT domain, count(*) AS n_docs,
-        |  sum(len(string_split_regex(trim(clean_text), '\s+')))::BIGINT AS n_tokens,
-        |  min(score) AS min_score, max(score) AS max_score
-        |FROM k WHERE rn <= 10
-        |GROUP BY domain ORDER BY domain""".stripMargin,
+      s"""WITH base AS (
+         |  SELECT doc_id, source,
+         |${fakeUrlExpr},
+         |    trim(regexp_replace(
+         |      translate(
+         |        regexp_replace(text, '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]', '', 'g'),
+         |        chr(8220)||chr(8221)||chr(8216)||chr(8217)||chr(8211)||chr(8212)||chr(160),
+         |        '""''''-- '),
+         |      '\\s+', ' ', 'g')) AS clean_text
+         |  FROM documents),
+         |tok AS (
+         |  SELECT doc_id, unnest(string_split_regex(trim(clean_text), '\\s+')) AS t
+         |  FROM base),
+         |wts AS (
+         |  SELECT doc_id,
+         |    CAST(CAST(('0x' || substr(md5('w:q:' ||
+         |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
+         |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
+         |      % 2001 - 1000 AS w
+         |  FROM tok),
+         |sc AS (
+         |  SELECT doc_id, CASE WHEN sum(w) >= 0
+         |    THEN floor((abs(sum(w) * 1000) * 2 + count(*)) / (count(*) * 2))
+         |    ELSE -floor((abs(sum(w) * 1000) * 2 + count(*)) / (count(*) * 2))
+         |    END / 1000000.0 AS score
+         |  FROM wts GROUP BY doc_id),
+         |gated AS (
+         |  SELECT b.*, s.score FROM base b JOIN sc s USING (doc_id)
+         |  WHERE s.score >= -0.01),
+         |ded AS (
+         |  SELECT min(doc_id) AS doc_id FROM gated
+         |  GROUP BY md5(regexp_replace(lower(trim(clean_text)), '\\s+', ' ', 'g'))),
+         |surv AS (SELECT g.* FROM gated g JOIN ded USING (doc_id)),
+         |hd AS (
+         |  SELECT doc_id, clean_text, score,
+         |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host
+         |  FROM surv),
+         |ad AS (
+         |  SELECT doc_id, clean_text, score, host,
+         |    string_split(lower(host), '.') AS arr,
+         |    len(string_split(lower(host), '.')) AS n
+         |  FROM hd),
+         |dm AS (
+         |  SELECT doc_id, clean_text, score,
+         |$registeredDomainExpr
+         |  FROM ad),
+         |k AS (
+         |  SELECT domain, doc_id, clean_text, score,
+         |    row_number() OVER (PARTITION BY domain
+         |      ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'webcur'), 1, 8))
+         |        AS UBIGINT) / 4294967296.0 ASC, doc_id ASC) AS rn
+         |  FROM dm)
+         |SELECT domain, count(*) AS n_docs,
+         |  sum(len(string_split_regex(trim(clean_text), '\\s+')))::BIGINT AS n_tokens,
+         |  min(score) AS min_score, max(score) AS max_score
+         |FROM k WHERE rn <= 10
+         |GROUP BY domain ORDER BY domain""".stripMargin,
 
 
     // replay: synth URL -> host regexp -> eTLD+1 CASE -> aggregate.
@@ -2181,25 +1907,8 @@ object RoundsA {
         |ORDER BY doc_id""".stripMargin,
 
 
-    // The identical (?i)\b(\Q..\E|..)\b pattern — \Q..\E quoting is
-    // shared, and \b agrees on this pure-ASCII corpus (Java's \b is
-    // Unicode-aware, RE2's ASCII — the seam is documented at the
-    // operator and never touches ASCII text). The coalesce matches
-    // Spark's '' clean verdict: DuckDB's list chain yields NULL, not
-    // '', on the empty match list.
     "q193_blocklist_scan" ->
-      """WITH s AS (
-        |  SELECT source,
-        |    len(regexp_extract_all(text,
-        |      '(?i)\b(\Qspark\E|\Qslow\E)\b', 1)) AS hits,
-        |    coalesce(array_to_string(list_sort(list_distinct(list_transform(
-        |      regexp_extract_all(text, '(?i)\b(\Qspark\E|\Qslow\E)\b', 1),
-        |      x -> lower(x)))), ','), '') AS terms_hit
-        |  FROM documents)
-        |SELECT source, terms_hit, count(*) AS n_docs,
-        |  CAST(sum(hits) AS BIGINT) AS n_hits
-        |FROM s GROUP BY source, terms_hit
-        |ORDER BY source, terms_hit""".stripMargin,
+      blocklistScanSql,
 
 
     // The full 3-step training loop replayed: z (BIGINT), p (fixed
@@ -2207,224 +1916,52 @@ object RoundsA {
     // (both engines round-to-integer the identical double). A hash
     // match means DuckDB re-trained the model to the same weights.
     "q198_hashed_lr_train" ->
-      """WITH yl AS (SELECT doc_id,
-        |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents),
-        |x AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tok GROUP BY 1, 2),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |bl AS (SELECT range::BIGINT AS b FROM range(0, 16)),
-        |w0 AS (SELECT b, 0::BIGINT AS w6 FROM bl),
-        |p1 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w0.w6)::BIGINT AS z6
-        |        FROM x JOIN w0 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g1 AS (SELECT x.b,
-        |    sum(round((p1.p - p1.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p1 USING (doc_id) GROUP BY 1),
-        |w1 AS (SELECT bl.b,
-        |    round((coalesce(w0.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g1.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w0 USING (b) LEFT JOIN g1 USING (b)),
-        |p2 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w1.w6)::BIGINT AS z6
-        |        FROM x JOIN w1 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g2 AS (SELECT x.b,
-        |    sum(round((p2.p - p2.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p2 USING (doc_id) GROUP BY 1),
-        |w2 AS (SELECT bl.b,
-        |    round((coalesce(w1.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g2.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w1 USING (b) LEFT JOIN g2 USING (b)),
-        |p3 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w2.w6)::BIGINT AS z6
-        |        FROM x JOIN w2 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g3 AS (SELECT x.b,
-        |    sum(round((p3.p - p3.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p3 USING (doc_id) GROUP BY 1),
-        |w3 AS (SELECT bl.b,
-        |    round((coalesce(w2.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g3.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w2 USING (b) LEFT JOIN g3 USING (b))
-        |SELECT b AS bucket, w6, w6::DOUBLE / 1000000.0 AS w
-        |FROM w3 ORDER BY bucket""".stripMargin,
+      s"""WITH $lrLabelsCtes,
+         |${lrTrainCtes("documents")}
+         |SELECT b AS bucket, w6, w6::DOUBLE / 1000000.0 AS w
+         |FROM w3 ORDER BY bucket""".stripMargin,
 
 
     // q49's split bounds gate every CTE: the ladder sees only u<0.8
     // docs (nn counts them), scoring/AUC see only u>=0.9 docs
     "q205_lr_holdout_auc" ->
-      """WITH uu AS (SELECT doc_id,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |    AS UBIGINT) / 4294967296.0 AS u FROM documents),
-        |yl AS (SELECT doc_id,
-        |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |tr AS (SELECT d.doc_id, d.text FROM documents d
-        |  JOIN uu USING (doc_id) WHERE uu.u < 0.8),
-        |te AS (SELECT d.doc_id, d.text FROM documents d
-        |  JOIN uu USING (doc_id) WHERE uu.u >= 0.9 AND uu.u < 1.0),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM tr),
-        |x AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tok GROUP BY 1, 2),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM tr),
-        |bl AS (SELECT range::BIGINT AS b FROM range(0, 16)),
-        |w0 AS (SELECT b, 0::BIGINT AS w6 FROM bl),
-        |p1 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w0.w6)::BIGINT AS z6
-        |        FROM x JOIN w0 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g1 AS (SELECT x.b,
-        |    sum(round((p1.p - p1.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p1 USING (doc_id) GROUP BY 1),
-        |w1 AS (SELECT bl.b,
-        |    round((coalesce(w0.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g1.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w0 USING (b) LEFT JOIN g1 USING (b)),
-        |p2 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w1.w6)::BIGINT AS z6
-        |        FROM x JOIN w1 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g2 AS (SELECT x.b,
-        |    sum(round((p2.p - p2.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p2 USING (doc_id) GROUP BY 1),
-        |w2 AS (SELECT bl.b,
-        |    round((coalesce(w1.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g2.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w1 USING (b) LEFT JOIN g2 USING (b)),
-        |p3 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w2.w6)::BIGINT AS z6
-        |        FROM x JOIN w2 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g3 AS (SELECT x.b,
-        |    sum(round((p3.p - p3.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p3 USING (doc_id) GROUP BY 1),
-        |w3 AS (SELECT bl.b,
-        |    round((coalesce(w2.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g3.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w2 USING (b) LEFT JOIN g3 USING (b)),
-        |tokt AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM te),
-        |xt AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tokt GROUP BY 1, 2),
-        |sct AS (SELECT xt.doc_id,
-        |    CASE WHEN sum(xt.x * w3.w6) >= 0
-        |    THEN floor((abs(sum(xt.x * w3.w6)) * 2 + sum(xt.x)) /
-        |      (sum(xt.x) * 2))
-        |    ELSE -floor((abs(sum(xt.x * w3.w6)) * 2 + sum(xt.x)) /
-        |      (sum(xt.x) * 2)) END / 1000000.0 AS score
-        |  FROM xt JOIN w3 USING (b) GROUP BY 1),
-        |pert AS (SELECT sct.score AS s, count(*)::BIGINT AS n,
-        |    sum(yl.y)::BIGINT AS n1
-        |  FROM sct JOIN yl USING (doc_id) GROUP BY 1),
-        |rkt AS (SELECT s, n, n1, coalesce(sum(n) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-        |    AS cb FROM pert),
-        |aggt AS (SELECT sum(n1)::BIGINT AS n_pos,
-        |    (sum(n) - sum(n1))::BIGINT AS n_neg,
-        |    sum(n1 * (2 * cb + n + 1))::BIGINT AS s_sum FROM rkt)
-        |SELECT 'holdout' AS eval_split, n_pos, n_neg,
-        |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |    round((s_sum - n_pos * (n_pos + 1))::DOUBLE /
-        |      (2.0 * (n_pos * n_neg)::DOUBLE), 6) END AS auc
-        |FROM aggt""".stripMargin,
+      s"""WITH uu AS (SELECT doc_id,
+         |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+         |    AS UBIGINT) / 4294967296.0 AS u FROM documents),
+         |$lrLabelsCtes,
+         |tr AS (SELECT d.doc_id, d.text FROM documents d
+         |  JOIN uu USING (doc_id) WHERE uu.u < 0.8),
+         |te AS (SELECT d.doc_id, d.text FROM documents d
+         |  JOIN uu USING (doc_id) WHERE uu.u >= 0.9 AND uu.u < 1.0),
+         |${lrTrainCtes("tr")},
+         |${lrBucketCtes("tokt", "xt", "te")},
+         |sct AS (SELECT xt.doc_id,
+         |${lrScoreExpr("xt")}
+         |  FROM xt JOIN w3 USING (b) GROUP BY 1),
+         |${aucCtes("t")}
+         |SELECT 'holdout' AS eval_split, n_pos, n_neg,
+         |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
+         |    round((s_sum - n_pos * (n_pos + 1))::DOUBLE /
+         |      (2.0 * (n_pos * n_neg)::DOUBLE), 6) END AS auc
+         |FROM aggt""".stripMargin,
 
 
     // q198's ladder -> trained scores -> the identical ntile window
     // ((score, doc_id) order) -> per-decile observed positive rate
     "q204_lr_calibration" ->
-      """WITH yl AS (SELECT doc_id,
-        |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents),
-        |x AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tok GROUP BY 1, 2),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |bl AS (SELECT range::BIGINT AS b FROM range(0, 16)),
-        |w0 AS (SELECT b, 0::BIGINT AS w6 FROM bl),
-        |p1 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w0.w6)::BIGINT AS z6
-        |        FROM x JOIN w0 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g1 AS (SELECT x.b,
-        |    sum(round((p1.p - p1.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p1 USING (doc_id) GROUP BY 1),
-        |w1 AS (SELECT bl.b,
-        |    round((coalesce(w0.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g1.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w0 USING (b) LEFT JOIN g1 USING (b)),
-        |p2 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w1.w6)::BIGINT AS z6
-        |        FROM x JOIN w1 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g2 AS (SELECT x.b,
-        |    sum(round((p2.p - p2.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p2 USING (doc_id) GROUP BY 1),
-        |w2 AS (SELECT bl.b,
-        |    round((coalesce(w1.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g2.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w1 USING (b) LEFT JOIN g2 USING (b)),
-        |p3 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w2.w6)::BIGINT AS z6
-        |        FROM x JOIN w2 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g3 AS (SELECT x.b,
-        |    sum(round((p3.p - p3.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p3 USING (doc_id) GROUP BY 1),
-        |w3 AS (SELECT bl.b,
-        |    round((coalesce(w2.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g3.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w2 USING (b) LEFT JOIN g3 USING (b)),
-        |sc AS (SELECT x.doc_id, yl.y,
-        |    CASE WHEN sum(x.x * w3.w6) >= 0
-        |    THEN floor((abs(sum(x.x * w3.w6)) * 2 + sum(x.x)) /
-        |      (sum(x.x) * 2))
-        |    ELSE -floor((abs(sum(x.x * w3.w6)) * 2 + sum(x.x)) /
-        |      (sum(x.x) * 2)) END / 1000000.0 AS score
-        |  FROM x JOIN w3 USING (b) JOIN yl USING (doc_id)
-        |  GROUP BY x.doc_id, yl.y),
-        |nt AS (SELECT y, score,
-        |    ntile(10) OVER (ORDER BY score ASC, doc_id ASC) AS bin
-        |  FROM sc)
-        |SELECT bin, count(*) AS n_docs, sum(y)::BIGINT AS n_pos,
-        |  round(sum(y)::DOUBLE / count(*), 6) AS pos_rate,
-        |  min(score) AS lo_score, max(score) AS hi_score
-        |FROM nt GROUP BY bin ORDER BY bin""".stripMargin,
+      s"""WITH $lrLabelsCtes,
+         |${lrTrainCtes("documents")},
+         |sc AS (SELECT x.doc_id, yl.y,
+         |${lrScoreExpr("x")}
+         |  FROM x JOIN w3 USING (b) JOIN yl USING (doc_id)
+         |  GROUP BY x.doc_id, yl.y),
+         |nt AS (SELECT y, score,
+         |    ntile(10) OVER (ORDER BY score ASC, doc_id ASC) AS bin
+         |  FROM sc)
+         |SELECT bin, count(*) AS n_docs, sum(y)::BIGINT AS n_pos,
+         |  round(sum(y)::DOUBLE / count(*), 6) AS pos_rate,
+         |  min(score) AS lo_score, max(score) AS hi_score
+         |FROM nt GROUP BY bin ORDER BY bin""".stripMargin,
 
 
     // identical rule table + the same compile chain (escape -> LIKE
@@ -2549,13 +2086,7 @@ object RoundsA {
          |d AS (SELECT *, string_split(lower(host), '.') AS arr,
          |    len(string_split(lower(host), '.')) AS n FROM h),
          |r AS (SELECT doc_id, etext, rank,
-         |    CASE WHEN n <= 2 THEN lower(host)
-         |         WHEN (arr[n-1] || '.' || arr[n]) IN
-         |           ('co.uk','ac.uk','gov.uk','org.uk','com.my','gov.my',
-         |            'edu.my','org.my','com.au','net.au','org.au','co.jp',
-         |            'ne.jp','or.jp','com.br','com.cn','com.sg','co.in','co.kr')
-         |           THEN arr[n-2] || '.' || arr[n-1] || '.' || arr[n]
-         |         ELSE arr[n-1] || '.' || arr[n] END AS domain
+         |$registeredDomainExpr
          |  FROM d),
          |k AS (SELECT *, row_number() OVER (PARTITION BY domain
          |    ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'wc3'), 1, 8))
@@ -2572,424 +2103,171 @@ object RoundsA {
     // closed-form extracted text + doc_id robots rule + the q193/q180/
     // q175 replays chained — the funnel re-derived end to end
     "q202_web_curation_v2" ->
-      """WITH kept0 AS (SELECT doc_id, source, text FROM documents
-        |               WHERE doc_id % 4 NOT IN (0, 2)),
-        |ex AS (SELECT doc_id, source,
-        |    'Doc ' || doc_id::VARCHAR || chr(10) ||
-        |    'Title & Doc ' || doc_id::VARCHAR || chr(10) ||
-        |    'Lead para <kept>.' || chr(10) || text || chr(10) ||
-        |    'item''s one' || chr(10) || 'item "two"' || chr(10) ||
-        |    'fine print' AS etext
-        |  FROM kept0),
-        |bl AS (SELECT * FROM ex
-        |  WHERE len(regexp_extract_all(etext,
-        |    '(?i)\b(\Qslow\E)\b', 1)) <= 2),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(etext), '\s+')) AS t FROM bl),
-        |sc AS (SELECT doc_id,
-        |    CASE WHEN sum(CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000) >= 0
-        |    THEN floor((abs(sum(CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000) * 1000) * 2 + count(*)) / (count(*) * 2))
-        |    ELSE -floor((abs(sum(CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000) * 1000) * 2 + count(*)) / (count(*) * 2))
-        |    END / 1000000.0 AS score
-        |  FROM tok GROUP BY doc_id),
-        |g AS (SELECT bl.doc_id, bl.source, bl.etext, sc.score
-        |  FROM bl JOIN sc USING (doc_id) WHERE sc.score >= -0.005),
-        |u AS (SELECT doc_id, etext, score,
-        |    'https://' || ['www.','blog.',''][(doc_id % 3 + 1)::INT] ||
-        |    'd' || (doc_id % 7)::VARCHAR || '.' ||
-        |    ['com','org','co.uk','com.my'][(doc_id % 4 + 1)::INT] ||
-        |    '/' || source || '/' || doc_id::VARCHAR AS url
-        |  FROM g),
-        |h AS (SELECT *, regexp_extract(url,
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host FROM u),
-        |d AS (SELECT *, string_split(lower(host), '.') AS arr,
-        |    len(string_split(lower(host), '.')) AS n FROM h),
-        |r AS (SELECT doc_id, etext, score,
-        |    CASE WHEN n <= 2 THEN lower(host)
-        |         WHEN (arr[n-1] || '.' || arr[n]) IN
-        |           ('co.uk','ac.uk','gov.uk','org.uk','com.my','gov.my',
-        |            'edu.my','org.my','com.au','net.au','org.au','co.jp',
-        |            'ne.jp','or.jp','com.br','com.cn','com.sg','co.in','co.kr')
-        |           THEN arr[n-2] || '.' || arr[n-1] || '.' || arr[n]
-        |         ELSE arr[n-1] || '.' || arr[n] END AS domain
-        |  FROM d),
-        |k AS (SELECT *, row_number() OVER (PARTITION BY domain
-        |    ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'wc2'), 1, 8))
-        |      AS UBIGINT) / 4294967296.0 ASC, doc_id ASC) AS rn
-        |  FROM r)
-        |SELECT domain, count(*) AS n_docs,
-        |  sum(len(string_split_regex(trim(etext), '\s+')))::BIGINT
-        |    AS n_tokens,
-        |  min(score) AS min_score, max(score) AS max_score
-        |FROM k WHERE rn <= 5
-        |GROUP BY domain ORDER BY domain""".stripMargin,
+      s"""WITH kept0 AS (SELECT doc_id, source, text FROM documents
+         |               WHERE doc_id % 4 NOT IN (0, 2)),
+         |ex AS (SELECT doc_id, source,
+         |    'Doc ' || doc_id::VARCHAR || chr(10) ||
+         |    'Title & Doc ' || doc_id::VARCHAR || chr(10) ||
+         |    'Lead para <kept>.' || chr(10) || text || chr(10) ||
+         |    'item''s one' || chr(10) || 'item "two"' || chr(10) ||
+         |    'fine print' AS etext
+         |  FROM kept0),
+         |bl AS (SELECT * FROM ex
+         |  WHERE len(regexp_extract_all(etext,
+         |    '(?i)\\b(\\Qslow\\E)\\b', 1)) <= 2),
+         |tok AS (SELECT doc_id,
+         |  unnest(string_split_regex(trim(etext), '\\s+')) AS t FROM bl),
+         |sc AS (SELECT doc_id,
+         |$untrainedScoreExpr
+         |  FROM tok GROUP BY doc_id),
+         |g AS (SELECT bl.doc_id, bl.source, bl.etext, sc.score
+         |  FROM bl JOIN sc USING (doc_id) WHERE sc.score >= -0.005),
+         |u AS (SELECT doc_id, etext, score,
+         |${fakeUrlExpr}
+         |  FROM g),
+         |h AS (SELECT *, regexp_extract(url,
+         |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host FROM u),
+         |d AS (SELECT *, string_split(lower(host), '.') AS arr,
+         |    len(string_split(lower(host), '.')) AS n FROM h),
+         |r AS (SELECT doc_id, etext, score,
+         |$registeredDomainExpr
+         |  FROM d),
+         |k AS (SELECT *, row_number() OVER (PARTITION BY domain
+         |    ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'wc2'), 1, 8))
+         |      AS UBIGINT) / 4294967296.0 ASC, doc_id ASC) AS rn
+         |  FROM r)
+         |SELECT domain, count(*) AS n_docs,
+         |  sum(len(string_split_regex(trim(etext), '\\s+')))::BIGINT
+         |    AS n_tokens,
+         |  min(score) AS min_score, max(score) AS max_score
+         |FROM k WHERE rn <= 5
+         |GROUP BY domain ORDER BY domain""".stripMargin,
 
 
     // q198's ladder -> trained scores -> the integer AUC formula,
     // plus q180's scorer through the SAME formula; ranks derive from
     // cumulative counts over the distinct-score frame
     "q201_model_auc_eval" ->
-      """WITH yl AS (SELECT doc_id,
-        |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents),
-        |x AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tok GROUP BY 1, 2),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |bl AS (SELECT range::BIGINT AS b FROM range(0, 16)),
-        |w0 AS (SELECT b, 0::BIGINT AS w6 FROM bl),
-        |p1 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w0.w6)::BIGINT AS z6
-        |        FROM x JOIN w0 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g1 AS (SELECT x.b,
-        |    sum(round((p1.p - p1.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p1 USING (doc_id) GROUP BY 1),
-        |w1 AS (SELECT bl.b,
-        |    round((coalesce(w0.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g1.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w0 USING (b) LEFT JOIN g1 USING (b)),
-        |p2 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w1.w6)::BIGINT AS z6
-        |        FROM x JOIN w1 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g2 AS (SELECT x.b,
-        |    sum(round((p2.p - p2.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p2 USING (doc_id) GROUP BY 1),
-        |w2 AS (SELECT bl.b,
-        |    round((coalesce(w1.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g2.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w1 USING (b) LEFT JOIN g2 USING (b)),
-        |p3 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w2.w6)::BIGINT AS z6
-        |        FROM x JOIN w2 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g3 AS (SELECT x.b,
-        |    sum(round((p3.p - p3.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p3 USING (doc_id) GROUP BY 1),
-        |w3 AS (SELECT bl.b,
-        |    round((coalesce(w2.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g3.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w2 USING (b) LEFT JOIN g3 USING (b)),
-        |sct AS (SELECT x.doc_id,
-        |    CASE WHEN sum(x.x * w3.w6) >= 0
-        |    THEN floor((abs(sum(x.x * w3.w6)) * 2 + sum(x.x)) /
-        |      (sum(x.x) * 2))
-        |    ELSE -floor((abs(sum(x.x * w3.w6)) * 2 + sum(x.x)) /
-        |      (sum(x.x) * 2)) END / 1000000.0 AS score
-        |  FROM x JOIN w3 USING (b) GROUP BY 1),
-        |scu AS (SELECT doc_id, count(*) AS n_tokens,
-        |    CASE WHEN sum(CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000) >= 0
-        |    THEN floor((abs(sum(CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000) * 1000) * 2 + count(*)) / (count(*) * 2))
-        |    ELSE -floor((abs(sum(CAST(CAST(('0x' || substr(md5('w:q:' ||
-        |      (CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |        % 1024)::VARCHAR), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 2001 - 1000) * 1000) * 2 + count(*)) / (count(*) * 2))
-        |    END / 1000000.0 AS score
-        |  FROM tok GROUP BY doc_id),
-        |pert AS (SELECT sct.score AS s, count(*)::BIGINT AS n,
-        |    sum(yl.y)::BIGINT AS n1
-        |  FROM sct JOIN yl USING (doc_id) GROUP BY 1),
-        |rkt AS (SELECT s, n, n1, coalesce(sum(n) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-        |    AS cb FROM pert),
-        |aggt AS (SELECT sum(n1)::BIGINT AS n_pos,
-        |    (sum(n) - sum(n1))::BIGINT AS n_neg,
-        |    sum(n1 * (2 * cb + n + 1))::BIGINT AS s_sum FROM rkt),
-        |peru AS (SELECT scu.score AS s, count(*)::BIGINT AS n,
-        |    sum(yl.y)::BIGINT AS n1
-        |  FROM scu JOIN yl USING (doc_id) GROUP BY 1),
-        |rku AS (SELECT s, n, n1, coalesce(sum(n) OVER (ORDER BY s
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT
-        |    AS cb FROM peru),
-        |aggu AS (SELECT sum(n1)::BIGINT AS n_pos,
-        |    (sum(n) - sum(n1))::BIGINT AS n_neg,
-        |    sum(n1 * (2 * cb + n + 1))::BIGINT AS s_sum FROM rku)
-        |SELECT * FROM (
-        |  SELECT 'trained' AS model, n_pos, n_neg,
-        |    CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |      round((s_sum - n_pos * (n_pos + 1))::DOUBLE /
-        |        (2.0 * (n_pos * n_neg)::DOUBLE), 6) END AS auc
-        |  FROM aggt
-        |  UNION ALL
-        |  SELECT 'untrained', n_pos, n_neg,
-        |    CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |      round((s_sum - n_pos * (n_pos + 1))::DOUBLE /
-        |        (2.0 * (n_pos * n_neg)::DOUBLE), 6) END
-        |  FROM aggu)
-        |ORDER BY model""".stripMargin,
+      s"""WITH $lrLabelsCtes,
+         |${lrTrainCtes("documents")},
+         |sct AS (SELECT x.doc_id,
+         |${lrScoreExpr("x")}
+         |  FROM x JOIN w3 USING (b) GROUP BY 1),
+         |scu AS (SELECT doc_id, count(*) AS n_tokens,
+         |$untrainedScoreExpr
+         |  FROM tok GROUP BY doc_id),
+         |${aucCtes("t")},
+         |${aucCtes("u")}
+         |SELECT * FROM (
+         |  SELECT 'trained' AS model, n_pos, n_neg,
+         |    CASE WHEN n_pos > 0 AND n_neg > 0 THEN
+         |      round((s_sum - n_pos * (n_pos + 1))::DOUBLE /
+         |        (2.0 * (n_pos * n_neg)::DOUBLE), 6) END AS auc
+         |  FROM aggt
+         |  UNION ALL
+         |  SELECT 'untrained', n_pos, n_neg,
+         |    CASE WHEN n_pos > 0 AND n_neg > 0 THEN
+         |      round((s_sum - n_pos * (n_pos + 1))::DOUBLE /
+         |        (2.0 * (n_pos * n_neg)::DOUBLE), 6) END
+         |  FROM aggu)
+         |ORDER BY model""".stripMargin,
 
 
     // q198's ladder + per-step loss rows; ln/exp trees fixed, the
     // per-doc losses rounded to 6dp-scaled BIGINTs before summing
-    "q200_lr_loss_curve" ->
-      """WITH yl AS (SELECT doc_id,
-        |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents),
-        |x AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tok GROUP BY 1, 2),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |bl AS (SELECT range::BIGINT AS b FROM range(0, 16)),
-        |w0 AS (SELECT b, 0::BIGINT AS w6 FROM bl),
-        |p1 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w0.w6)::BIGINT AS z6
-        |        FROM x JOIN w0 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g1 AS (SELECT x.b,
-        |    sum(round((p1.p - p1.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p1 USING (doc_id) GROUP BY 1),
-        |w1 AS (SELECT bl.b,
-        |    round((coalesce(w0.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g1.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w0 USING (b) LEFT JOIN g1 USING (b)),
-        |p2 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w1.w6)::BIGINT AS z6
-        |        FROM x JOIN w1 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g2 AS (SELECT x.b,
-        |    sum(round((p2.p - p2.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p2 USING (doc_id) GROUP BY 1),
-        |w2 AS (SELECT bl.b,
-        |    round((coalesce(w1.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g2.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w1 USING (b) LEFT JOIN g2 USING (b)),
-        |p3 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w2.w6)::BIGINT AS z6
-        |        FROM x JOIN w2 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g3 AS (SELECT x.b,
-        |    sum(round((p3.p - p3.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p3 USING (doc_id) GROUP BY 1),
-        |w3 AS (SELECT bl.b,
-        |    round((coalesce(w2.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g3.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w2 USING (b) LEFT JOIN g3 USING (b)),
-        |p4 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w3.w6)::BIGINT AS z6
-        |        FROM x JOIN w3 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |ls AS (
-        |  SELECT 1 AS step, sum(round(-(p1.y *
-        |    ln(least(greatest(p1.p, 1e-9), 1.0 - 1e-9)) +
-        |    (1 - p1.y) * ln(1.0 -
-        |    least(greatest(p1.p, 1e-9), 1.0 - 1e-9)))
-        |    * 1000000.0))::BIGINT AS loss6
-        |  FROM p1
-        |  UNION ALL
-        |  SELECT 2, sum(round(-(p2.y *
-        |    ln(least(greatest(p2.p, 1e-9), 1.0 - 1e-9)) +
-        |    (1 - p2.y) * ln(1.0 -
-        |    least(greatest(p2.p, 1e-9), 1.0 - 1e-9)))
-        |    * 1000000.0))::BIGINT FROM p2
-        |  UNION ALL
-        |  SELECT 3, sum(round(-(p3.y *
-        |    ln(least(greatest(p3.p, 1e-9), 1.0 - 1e-9)) +
-        |    (1 - p3.y) * ln(1.0 -
-        |    least(greatest(p3.p, 1e-9), 1.0 - 1e-9)))
-        |    * 1000000.0))::BIGINT FROM p3
-        |  UNION ALL
-        |  SELECT 4, sum(round(-(p4.y *
-        |    ln(least(greatest(p4.p, 1e-9), 1.0 - 1e-9)) +
-        |    (1 - p4.y) * ln(1.0 -
-        |    least(greatest(p4.p, 1e-9), 1.0 - 1e-9)))
-        |    * 1000000.0))::BIGINT FROM p4)
-        |SELECT step, loss6, loss6::DOUBLE / 1000000.0 AS loss
-        |FROM ls ORDER BY step""".stripMargin,
+    "q200_lr_loss_curve" -> {
+      def loss(i: Int) =
+        s"""sum(round(-(p$i.y *
+           |    ln(least(greatest(p$i.p, 1e-9), 1.0 - 1e-9)) +
+           |    (1 - p$i.y) * ln(1.0 -
+           |    least(greatest(p$i.p, 1e-9), 1.0 - 1e-9)))
+           |    * 1000000.0))::BIGINT""".stripMargin
+      val later = (2 to 4).map(i =>
+        s"\n  UNION ALL\n  SELECT $i, ${loss(i)} FROM p$i").mkString
+      s"""WITH $lrLabelsCtes,
+         |${lrTrainCtes("documents")},
+         |${lrProbCtes(4)},
+         |ls AS (
+         |  SELECT 1 AS step, ${loss(1)} AS loss6
+         |  FROM p1$later)
+         |SELECT step, loss6, loss6::DOUBLE / 1000000.0 AS loss
+         |FROM ls ORDER BY step""".stripMargin
+    },
 
 
     // q198's ladder + the scoring join; min/max are order statistics
     // of the 6dp scores, so the report is exact cross-engine
     "q199_lr_train_score" ->
-      """WITH yl AS (SELECT doc_id,
-        |  CASE WHEN contains(text, 'spark') THEN 1 ELSE 0 END AS y
-        |  FROM documents),
-        |tok AS (SELECT doc_id,
-        |  unnest(string_split_regex(trim(text), '\s+')) AS t FROM documents),
-        |x AS (SELECT doc_id,
-        |    CAST(CAST(('0x' || substr(md5(t), 1, 8)) AS UBIGINT) AS BIGINT)
-        |      % 16 AS b,
-        |    count(*)::BIGINT AS x
-        |  FROM tok GROUP BY 1, 2),
-        |nn AS (SELECT count(*)::DOUBLE AS n FROM documents),
-        |bl AS (SELECT range::BIGINT AS b FROM range(0, 16)),
-        |w0 AS (SELECT b, 0::BIGINT AS w6 FROM bl),
-        |p1 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w0.w6)::BIGINT AS z6
-        |        FROM x JOIN w0 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g1 AS (SELECT x.b,
-        |    sum(round((p1.p - p1.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p1 USING (doc_id) GROUP BY 1),
-        |w1 AS (SELECT bl.b,
-        |    round((coalesce(w0.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g1.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w0 USING (b) LEFT JOIN g1 USING (b)),
-        |p2 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w1.w6)::BIGINT AS z6
-        |        FROM x JOIN w1 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g2 AS (SELECT x.b,
-        |    sum(round((p2.p - p2.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p2 USING (doc_id) GROUP BY 1),
-        |w2 AS (SELECT bl.b,
-        |    round((coalesce(w1.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g2.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w1 USING (b) LEFT JOIN g2 USING (b)),
-        |p3 AS (SELECT z.doc_id, yl.y,
-        |    1.0/(1.0 + exp(-((z.z6)::DOUBLE / 1000000.0))) AS p
-        |  FROM (SELECT x.doc_id, sum(x.x * w2.w6)::BIGINT AS z6
-        |        FROM x JOIN w2 USING (b) GROUP BY 1) z
-        |  JOIN yl USING (doc_id)),
-        |g3 AS (SELECT x.b,
-        |    sum(round((p3.p - p3.y) * x.x * 1000000.0))::BIGINT AS g6
-        |  FROM x JOIN p3 USING (doc_id) GROUP BY 1),
-        |w3 AS (SELECT bl.b,
-        |    round((coalesce(w2.w6, 0)::DOUBLE / 1000000.0 -
-        |      0.02 * ((coalesce(g3.g6, 0)::DOUBLE / 1000000.0) /
-        |        (SELECT n FROM nn))) * 1000000.0)::BIGINT AS w6
-        |  FROM bl LEFT JOIN w2 USING (b) LEFT JOIN g3 USING (b)),
-        |sc AS (SELECT x.doc_id,
-        |    CASE WHEN sum(x.x * w3.w6) >= 0
-        |    THEN floor((abs(sum(x.x * w3.w6)) * 2 + sum(x.x)) /
-        |      (sum(x.x) * 2))
-        |    ELSE -floor((abs(sum(x.x * w3.w6)) * 2 + sum(x.x)) /
-        |      (sum(x.x) * 2)) END / 1000000.0 AS score
-        |  FROM x JOIN w3 USING (b) GROUP BY 1)
-        |SELECT yl.y, count(*) AS n_docs,
-        |  min(sc.score) AS min_score,
-        |  max(sc.score) AS max_score
-        |FROM sc JOIN yl USING (doc_id)
-        |GROUP BY 1 ORDER BY y""".stripMargin,
+      s"""WITH $lrLabelsCtes,
+         |${lrTrainCtes("documents")},
+         |sc AS (SELECT x.doc_id,
+         |${lrScoreExpr("x")}
+         |  FROM x JOIN w3 USING (b) GROUP BY 1)
+         |SELECT yl.y, count(*) AS n_docs,
+         |  min(sc.score) AS min_score,
+         |  max(sc.score) AS max_score
+         |FROM sc JOIN yl USING (doc_id)
+         |GROUP BY 1 ORDER BY y""".stripMargin,
 
 
     // q193's oracle verbatim: the large tier must produce the
     // IDENTICAL aggregate (whole-token == word-boundary equivalence)
     "q197_blocklist_scan_large" ->
-      """WITH s AS (
-        |  SELECT source,
-        |    len(regexp_extract_all(text,
-        |      '(?i)\b(\Qspark\E|\Qslow\E)\b', 1)) AS hits,
-        |    coalesce(array_to_string(list_sort(list_distinct(list_transform(
-        |      regexp_extract_all(text, '(?i)\b(\Qspark\E|\Qslow\E)\b', 1),
-        |      x -> lower(x)))), ','), '') AS terms_hit
-        |  FROM documents)
-        |SELECT source, terms_hit, count(*) AS n_docs,
-        |  CAST(sum(hits) AS BIGINT) AS n_hits
-        |FROM s GROUP BY source, terms_hit
-        |ORDER BY source, terms_hit""".stripMargin,
+      blocklistScanSql,
 
 
     // The suffix IN list mirrors Web.DefaultMultiSuffixes verbatim
     "q174_domain_stats" ->
-      """WITH u AS (
-        |  SELECT doc_id, source, text,
-        |    'https://' || ['www.','blog.',''][(doc_id % 3 + 1)::INT] ||
-        |    'd' || (doc_id % 7)::VARCHAR || '.' ||
-        |    ['com','org','co.uk','com.my'][(doc_id % 4 + 1)::INT] ||
-        |    '/' || source || '/' || doc_id::VARCHAR AS url
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id, text,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host
-        |  FROM u),
-        |d AS (
-        |  SELECT doc_id, text, host, string_split(lower(host), '.') AS arr,
-        |    len(string_split(lower(host), '.')) AS n
-        |  FROM h),
-        |r AS (
-        |  SELECT doc_id, text, host,
-        |    CASE WHEN n <= 2 THEN lower(host)
-        |         WHEN (arr[n-1] || '.' || arr[n]) IN
-        |           ('co.uk','ac.uk','gov.uk','org.uk','com.my','gov.my',
-        |            'edu.my','org.my','com.au','net.au','org.au','co.jp',
-        |            'ne.jp','or.jp','com.br','com.cn','com.sg','co.in','co.kr')
-        |           THEN arr[n-2] || '.' || arr[n-1] || '.' || arr[n]
-        |         ELSE arr[n-1] || '.' || arr[n] END AS domain
-        |  FROM d)
-        |SELECT domain, count(*) AS n_docs,
-        |  count(DISTINCT host) AS n_hosts,
-        |  sum(len(string_split_regex(trim(text), '\s+')))::BIGINT AS n_tokens,
-        |  round(count(*)::DOUBLE / (sum(count(*)) OVER ()), 6) AS doc_share
-        |FROM r GROUP BY domain ORDER BY domain""".stripMargin,
+      s"""WITH u AS (
+         |  SELECT doc_id, source, text,
+         |${fakeUrlExpr}
+         |  FROM documents),
+         |h AS (
+         |  SELECT doc_id, text,
+         |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host
+         |  FROM u),
+         |d AS (
+         |  SELECT doc_id, text, host, string_split(lower(host), '.') AS arr,
+         |    len(string_split(lower(host), '.')) AS n
+         |  FROM h),
+         |r AS (
+         |  SELECT doc_id, text, host,
+         |$registeredDomainExpr
+         |  FROM d)
+         |SELECT domain, count(*) AS n_docs,
+         |  count(DISTINCT host) AS n_hosts,
+         |  sum(len(string_split_regex(trim(text), '\\s+')))::BIGINT AS n_tokens,
+         |  round(count(*)::DOUBLE / (sum(count(*)) OVER ()), 6) AS doc_share
+         |FROM r GROUP BY domain ORDER BY domain""".stripMargin,
 
 
     // same URL/domain CTEs; then q89's md5-uniform quota window at the
     // domain grain (salt 'domcap')
     "q175_domain_cap" ->
-      """WITH u AS (
-        |  SELECT doc_id, source,
-        |    'https://' || ['www.','blog.',''][(doc_id % 3 + 1)::INT] ||
-        |    'd' || (doc_id % 7)::VARCHAR || '.' ||
-        |    ['com','org','co.uk','com.my'][(doc_id % 4 + 1)::INT] ||
-        |    '/' || source || '/' || doc_id::VARCHAR AS url
-        |  FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host
-        |  FROM u),
-        |d AS (
-        |  SELECT doc_id, host, string_split(lower(host), '.') AS arr,
-        |    len(string_split(lower(host), '.')) AS n
-        |  FROM h),
-        |r AS (
-        |  SELECT doc_id,
-        |    CASE WHEN n <= 2 THEN lower(host)
-        |         WHEN (arr[n-1] || '.' || arr[n]) IN
-        |           ('co.uk','ac.uk','gov.uk','org.uk','com.my','gov.my',
-        |            'edu.my','org.my','com.au','net.au','org.au','co.jp',
-        |            'ne.jp','or.jp','com.br','com.cn','com.sg','co.in','co.kr')
-        |           THEN arr[n-2] || '.' || arr[n-1] || '.' || arr[n]
-        |         ELSE arr[n-1] || '.' || arr[n] END AS domain
-        |  FROM d),
-        |k AS (
-        |  SELECT domain, doc_id, row_number() OVER (PARTITION BY domain
-        |    ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'domcap'), 1, 8))
-        |      AS UBIGINT) / 4294967296.0 ASC, doc_id ASC) AS rn
-        |  FROM r)
-        |SELECT domain, count(*) AS n_kept, sum(doc_id)::BIGINT AS id_sum
-        |FROM k WHERE rn <= 10
-        |GROUP BY domain ORDER BY domain""".stripMargin,
+      s"""WITH u AS (
+         |  SELECT doc_id, source,
+         |${fakeUrlExpr}
+         |  FROM documents),
+         |h AS (
+         |  SELECT doc_id,
+         |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/:?#]+)', 1) AS host
+         |  FROM u),
+         |d AS (
+         |  SELECT doc_id, host, string_split(lower(host), '.') AS arr,
+         |    len(string_split(lower(host), '.')) AS n
+         |  FROM h),
+         |r AS (
+         |  SELECT doc_id,
+         |$registeredDomainExpr
+         |  FROM d),
+         |k AS (
+         |  SELECT domain, doc_id, row_number() OVER (PARTITION BY domain
+         |    ORDER BY CAST(('0x' || substr(md5(doc_id::VARCHAR || 'domcap'), 1, 8))
+         |      AS UBIGINT) / 4294967296.0 ASC, doc_id ASC) AS rn
+         |  FROM r)
+         |SELECT domain, count(*) AS n_kept, sum(doc_id)::BIGINT AS id_sum
+         |FROM k WHERE rn <= 10
+         |GROUP BY domain ORDER BY domain""".stripMargin,
 
 
     // same integer counts (DuckDB regexp_matches runs RE2 over the
@@ -3090,42 +2368,24 @@ object RoundsA {
     // the 6dp-ROUNDED jaccard + partner id — the Spark side's exact
     // selection key — and only anchors with both legs survive
     "q206_contrastive_triplets" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jac
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.005),
-        |sym AS (SELECT id_a AS anchor, id_b AS other, jac FROM p
-        |        UNION ALL SELECT id_b, id_a, jac FROM p),
-        |best AS (
-        |  SELECT anchor, other, jac, jac >= 0.8 AS is_pos,
-        |    row_number() OVER (PARTITION BY anchor, jac >= 0.8
-        |                       ORDER BY jac DESC, other) AS rn
-        |  FROM sym)
-        |SELECT p.anchor, p.other AS pos_id, p.jac AS pos_sim,
-        |  n.other AS neg_id, n.jac AS neg_sim
-        |FROM best p JOIN best n ON p.anchor = n.anchor
-        |WHERE p.is_pos AND p.rn = 1 AND NOT n.is_pos AND n.rn = 1
-        |ORDER BY p.anchor""".stripMargin,
+      s"""WITH $shingleOverlapCtes,
+         |p AS (
+         |  SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jac
+         |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
+         |             JOIN sizes sb ON sb.doc_id = id_b
+         |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.005),
+         |sym AS (SELECT id_a AS anchor, id_b AS other, jac FROM p
+         |        UNION ALL SELECT id_b, id_a, jac FROM p),
+         |best AS (
+         |  SELECT anchor, other, jac, jac >= 0.8 AS is_pos,
+         |    row_number() OVER (PARTITION BY anchor, jac >= 0.8
+         |                       ORDER BY jac DESC, other) AS rn
+         |  FROM sym)
+         |SELECT p.anchor, p.other AS pos_id, p.jac AS pos_sim,
+         |  n.other AS neg_id, n.jac AS neg_sim
+         |FROM best p JOIN best n ON p.anchor = n.anchor
+         |WHERE p.is_pos AND p.rn = 1 AND NOT n.is_pos AND n.rn = 1
+         |ORDER BY p.anchor""".stripMargin,
 
 
     // three integer signals ranked per source ((rn-1)/(n-1), id
@@ -3171,42 +2431,24 @@ object RoundsA {
     // Spark side carries +1 slack so 6dp boundary pairs always reach
     // the exact comparison both engines share)
     "q173_edit_similarity_pairs" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.3)
-        |SELECT c.id_a, c.id_b, c.jaccard,
-        |  CASE WHEN greatest(length(da.text), length(db.text)) = 0 THEN 1.0
-        |       ELSE round(1.0 - levenshtein(da.text, db.text)::DOUBLE /
-        |              greatest(length(da.text), length(db.text)), 6) END
-        |    AS edit_sim
-        |FROM cand c
-        |JOIN documents da ON da.doc_id = c.id_a
-        |JOIN documents db ON db.doc_id = c.id_b
-        |WHERE CASE WHEN greatest(length(da.text), length(db.text)) = 0 THEN 1.0
-        |       ELSE round(1.0 - levenshtein(da.text, db.text)::DOUBLE /
-        |              greatest(length(da.text), length(db.text)), 6) END >= 0.98
-        |ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH $shingleOverlapCtes,
+         |cand AS (
+         |  SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
+         |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
+         |             JOIN sizes sb ON sb.doc_id = id_b
+         |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.3)
+         |SELECT c.id_a, c.id_b, c.jaccard,
+         |  CASE WHEN greatest(length(da.text), length(db.text)) = 0 THEN 1.0
+         |       ELSE round(1.0 - levenshtein(da.text, db.text)::DOUBLE /
+         |              greatest(length(da.text), length(db.text)), 6) END
+         |    AS edit_sim
+         |FROM cand c
+         |JOIN documents da ON da.doc_id = c.id_a
+         |JOIN documents db ON db.doc_id = c.id_b
+         |WHERE CASE WHEN greatest(length(da.text), length(db.text)) = 0 THEN 1.0
+         |       ELSE round(1.0 - levenshtein(da.text, db.text)::DOUBLE /
+         |              greatest(length(da.text), length(db.text)), 6) END >= 0.98
+         |ORDER BY id_a, id_b""".stripMargin,
 
 
     // q141's window extended to two leads; same (ts, event_id) ordering
@@ -3227,95 +2469,60 @@ object RoundsA {
     // endpoints by the SAME key (carried dt), closure is an equi-join
     // on the oriented pair — triangles counted exactly once
     "q220_part_triangles" ->
-      """WITH e AS (
-        |  SELECT a.l_partkey::BIGINT AS u, b.l_partkey::BIGINT AS v
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |deg AS (
-        |  SELECT node, count(*)::BIGINT AS d FROM (
-        |    SELECT u AS node FROM e UNION ALL SELECT v FROM e)
-        |  GROUP BY 1),
-        |o AS (
-        |  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS s,
-        |         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS t,
-        |         CASE WHEN (du.d, u) < (dv.d, v) THEN dv.d ELSE du.d END AS dt
-        |  FROM e JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v),
-        |tri AS (
-        |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM o e1 JOIN o e2 ON e1.s = e2.s
-        |   AND (e1.dt < e2.dt OR (e1.dt = e2.dt AND e1.t < e2.t))
-        |  JOIN o e3 ON e3.s = e1.t AND e3.t = e2.t),
-        |pern AS (
-        |  SELECT node, count(*)::BIGINT AS triangles FROM (
-        |    SELECT a AS node FROM tri UNION ALL SELECT b FROM tri
-        |    UNION ALL SELECT c FROM tri)
-        |  GROUP BY 1)
-        |SELECT d.node, d.d AS degree,
-        |       COALESCE(p.triangles, 0)::BIGINT AS triangles
-        |FROM deg d LEFT JOIN pern p USING (node)
-        |ORDER BY triangles DESC, node""".stripMargin,
+      s"""WITH e AS (
+         |${coPairsSql}),
+         |deg AS (
+         |  SELECT node, count(*)::BIGINT AS d FROM (
+         |    SELECT u AS node FROM e UNION ALL SELECT v FROM e)
+         |  GROUP BY 1),
+         |o AS (
+         |  SELECT CASE WHEN (du.d, u) < (dv.d, v) THEN u ELSE v END AS s,
+         |         CASE WHEN (du.d, u) < (dv.d, v) THEN v ELSE u END AS t,
+         |         CASE WHEN (du.d, u) < (dv.d, v) THEN dv.d ELSE du.d END AS dt
+         |  FROM e JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v),
+         |tri AS (
+         |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
+         |  FROM o e1 JOIN o e2 ON e1.s = e2.s
+         |   AND (e1.dt < e2.dt OR (e1.dt = e2.dt AND e1.t < e2.t))
+         |  JOIN o e3 ON e3.s = e1.t AND e3.t = e2.t),
+         |pern AS (
+         |  SELECT node, count(*)::BIGINT AS triangles FROM (
+         |    SELECT a AS node FROM tri UNION ALL SELECT b FROM tri
+         |    UNION ALL SELECT c FROM tri)
+         |  GROUP BY 1)
+         |SELECT d.node, d.d AS degree,
+         |       COALESCE(p.triangles, 0)::BIGINT AS triangles
+         |FROM deg d LEFT JOIN pern p USING (node)
+         |ORDER BY triangles DESC, node""".stripMargin,
 
 
     // q218's unrolled rounds over the word-adjacency graph: same
     // tokenizer as every text oracle, same md5-60bit ids as the
     // portable simhash twin, same BIGINT lattice arithmetic
     "q221_textrank_keywords" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w,
-        |         generate_subscripts(string_split_regex(trim(text), '\s+'), 1) AS pos
-        |  FROM documents),
-        |adj AS (
-        |  SELECT least(a.w, b.w) AS cu, greatest(a.w, b.w) AS cv,
-        |         count(*)::BIGINT AS weight
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |  WHERE a.w <> b.w GROUP BY 1, 2),
-        |e AS (
-        |  SELECT CAST(('0x' || substr(md5(cu),1,15)) AS UBIGINT)::BIGINT AS src,
-        |         CAST(('0x' || substr(md5(cv),1,15)) AS UBIGINT)::BIGINT AS dst,
-        |         weight FROM adj
-        |  UNION ALL
-        |  SELECT CAST(('0x' || substr(md5(cv),1,15)) AS UBIGINT)::BIGINT,
-        |         CAST(('0x' || substr(md5(cu),1,15)) AS UBIGINT)::BIGINT,
-        |         weight FROM adj),
-        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM nodes),
-        |ew AS (
-        |  SELECT e.src, e.dst, e.weight, o.outw
-        |  FROM e JOIN (SELECT src, sum(weight)::BIGINT AS outw
-        |               FROM e GROUP BY 1) o USING (src)),
-        |r0 AS (SELECT node,
-        |         (1000000000000 // (SELECT n FROM nn))::BIGINT AS rank
-        |       FROM nodes),
-        |r1 AS (SELECT nd.node,
-        |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-        |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-        |       FROM nodes nd LEFT JOIN (
-        |         SELECT ew.dst AS node,
-        |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-        |         FROM ew JOIN r0 r ON ew.src = r.node GROUP BY 1) c
-        |         USING (node)),
-        |r2 AS (SELECT nd.node,
-        |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-        |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-        |       FROM nodes nd LEFT JOIN (
-        |         SELECT ew.dst AS node,
-        |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-        |         FROM ew JOIN r1 r ON ew.src = r.node GROUP BY 1) c
-        |         USING (node)),
-        |r3 AS (SELECT nd.node,
-        |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-        |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-        |       FROM nodes nd LEFT JOIN (
-        |         SELECT ew.dst AS node,
-        |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-        |         FROM ew JOIN r2 r ON ew.src = r.node GROUP BY 1) c
-        |         USING (node)),
-        |words AS (SELECT DISTINCT w AS word,
-        |    CAST(('0x' || substr(md5(w),1,15)) AS UBIGINT)::BIGINT AS node
-        |  FROM tok)
-        |SELECT wd.word, r3.rank FROM r3 JOIN words wd USING (node)
-        |ORDER BY rank DESC, word LIMIT 20""".stripMargin,
+      s"""WITH tok AS (
+         |  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS w,
+         |         generate_subscripts(string_split_regex(trim(text), '\\s+'), 1) AS pos
+         |  FROM documents),
+         |adj AS (
+         |  SELECT least(a.w, b.w) AS cu, greatest(a.w, b.w) AS cv,
+         |         count(*)::BIGINT AS weight
+         |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+         |  WHERE a.w <> b.w GROUP BY 1, 2),
+         |e AS (
+         |  SELECT CAST(('0x' || substr(md5(cu),1,15)) AS UBIGINT)::BIGINT AS src,
+         |         CAST(('0x' || substr(md5(cv),1,15)) AS UBIGINT)::BIGINT AS dst,
+         |         weight FROM adj
+         |  UNION ALL
+         |  SELECT CAST(('0x' || substr(md5(cv),1,15)) AS UBIGINT)::BIGINT,
+         |         CAST(('0x' || substr(md5(cu),1,15)) AS UBIGINT)::BIGINT,
+         |         weight FROM adj),
+         |$pageRankCtes,
+         |words AS (SELECT DISTINCT w AS word,
+         |    CAST(('0x' || substr(md5(w),1,15)) AS UBIGINT)::BIGINT AS node
+         |  FROM tok)
+         |SELECT wd.word, r3.rank FROM r3 JOIN words wd USING (node)
+         |ORDER BY rank DESC, word LIMIT 20""".stripMargin,
 
 
     // DuckDB's own jaro_winkler_similarity IS the oracle — the native
@@ -3345,46 +2552,14 @@ object RoundsA {
     // edge — every intermediate is ::BIGINT-cast so DuckDB's HUGEINT
     // sums can't drift the schema
     "q218_part_pagerank" ->
-      """WITH e AS (
-        |  SELECT a.l_partkey::BIGINT AS src, b.l_partkey::BIGINT AS dst,
-        |         count(*)::BIGINT AS weight
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-        |  GROUP BY 1, 2),
-        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS (SELECT count(*)::BIGINT AS n FROM nodes),
-        |ew AS (
-        |  SELECT e.src, e.dst, e.weight, o.outw
-        |  FROM e JOIN (SELECT src, sum(weight)::BIGINT AS outw
-        |               FROM e GROUP BY 1) o USING (src)),
-        |r0 AS (SELECT node,
-        |         (1000000000000 // (SELECT n FROM nn))::BIGINT AS rank
-        |       FROM nodes),
-        |r1 AS (SELECT nd.node,
-        |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-        |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-        |       FROM nodes nd LEFT JOIN (
-        |         SELECT ew.dst AS node,
-        |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-        |         FROM ew JOIN r0 r ON ew.src = r.node GROUP BY 1) c
-        |         USING (node)),
-        |r2 AS (SELECT nd.node,
-        |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-        |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-        |       FROM nodes nd LEFT JOIN (
-        |         SELECT ew.dst AS node,
-        |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-        |         FROM ew JOIN r1 r ON ew.src = r.node GROUP BY 1) c
-        |         USING (node)),
-        |r3 AS (SELECT nd.node,
-        |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-        |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-        |       FROM nodes nd LEFT JOIN (
-        |         SELECT ew.dst AS node,
-        |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-        |         FROM ew JOIN r2 r ON ew.src = r.node GROUP BY 1) c
-        |         USING (node))
-        |SELECT node, rank FROM r3 ORDER BY rank DESC, node""".stripMargin,
+      s"""WITH e AS (
+         |  SELECT a.l_partkey::BIGINT AS src, b.l_partkey::BIGINT AS dst,
+         |         count(*)::BIGINT AS weight
+         |  FROM lineitem a JOIN lineitem b
+         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
+         |  GROUP BY 1, 2),
+         |$pageRankCtes
+         |SELECT node, rank FROM r3 ORDER BY rank DESC, node""".stripMargin,
 
 
     // identical damage injection (the shared mojibakeSuffix literal)
@@ -3392,19 +2567,19 @@ object RoundsA {
     // interpolated) — RE2 counts the same non-overlapping matches
     "q212_mojibake_scan" ->
       s"""WITH d AS (
-        |  SELECT source,
-        |    CASE WHEN doc_id % 3 = 0 THEN text || '$mojibakeSuffix'
-        |         ELSE text END AS t
-        |  FROM documents),
-        |h AS (SELECT source,
-        |  len(regexp_extract_all(t, '${TextStats.mojibakeMarkers}'))
-        |    AS hits FROM d)
-        |SELECT source AS slice, count(*) AS n_docs,
-        |  sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
-        |  sum(hits)::BIGINT AS n_hits,
-        |  round(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END)::DOUBLE
-        |    / count(*), 6) AS flagged_share
-        |FROM h GROUP BY source ORDER BY source""".stripMargin,
+         |  SELECT source,
+         |    CASE WHEN doc_id % 3 = 0 THEN text || '$mojibakeSuffix'
+         |         ELSE text END AS t
+         |  FROM documents),
+         |h AS (SELECT source,
+         |  len(regexp_extract_all(t, '${TextStats.mojibakeMarkers}'))
+         |    AS hits FROM d)
+         |SELECT source AS slice, count(*) AS n_docs,
+         |  sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END)::BIGINT AS n_flagged,
+         |  sum(hits)::BIGINT AS n_hits,
+         |  round(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END)::DOUBLE
+         |    / count(*), 6) AS flagged_share
+         |FROM h GROUP BY source ORDER BY source""".stripMargin,
 
 
     // dirty synthesis via chr() codes (8220/8221 curly doubles,

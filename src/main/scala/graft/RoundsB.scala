@@ -12,6 +12,7 @@ import etlmudah.web.Web
 import etlmudah.load.Upsert
 import etlmudah.joins.Joins
 import SparkEntry._
+import Fragments._
 
 /** Registry tier q231-q300 (rounds 9-10) — carved out of SparkEntry.scala behind the per-round
   * registry seam (the Round11 convention): `SparkEntry.queries` /
@@ -207,8 +208,6 @@ object RoundsB {
     // q223; the oracle replays the full 3-round seeded chain unrolled
     "q241_personalized_host_rank" -> ((s, dir) => {
       import etlmudah.web.Web
-import etlmudah.load.Upsert
-import etlmudah.joins.Joins
       val edges = stagedHostEdges(s, dir)
       val seeds = edges.select(col("src_host").as("host"))
         .union(edges.select(col("dst_host").as("host"))).distinct()
@@ -379,16 +378,8 @@ import etlmudah.joins.Joins
     // REAL audio features: zero-crossing count + silence segmentation
     // over decoded PCM samples (the VAD/trim preprocessing pair) —
     // every count replayed from the synth closed form via lag/islands
-    "q265_wav_features" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .where(col("doc_id") % 7 === 3)
-        .select(col("doc_id"), expr(
-          "graft_wav_features(graft_fake_wav16(doc_id, 1L, 8000L, " +
-            "doc_id % 50 + 10), 8000)").as("f"))
-        .select(col("doc_id"), col("f.n_samples"), col("f.n_zero_cross"),
-          col("f.n_silent"), col("f.n_silence_runs"),
-          col("f.max_silence_run"))
-        .orderBy(col("doc_id"))),
+    "q265_wav_features" ->
+      vadFeatures("graft_wav_features", "graft_fake_wav16"),
 
 
     // TPC-H Q2 shape (min-cost supplier per part): the correlated MIN
@@ -961,13 +952,7 @@ import etlmudah.joins.Joins
     // hops, layers unrolled in the oracle
     "q281_crawl_frontier" -> ((s, dir) => {
       import etlmudah.web.Web
-import etlmudah.load.Upsert
-import etlmudah.joins.Joins
-      val id = col("doc_id")
-      val pages = Tables.documents(s, dir).select(
-        Web.fakeUrl(id, col("source")).as("url"),
-        Web.fakeHtml(id, col("text"), lit(null).cast("string"),
-          Web.fakeLinkUrls(id)).as("page"))
+      val pages = fakePages(s, dir)
       // pinned: the HTML-parse edge mine is read FIVE times downstream
       // (crawlFrontier's e + its 2-way hosts union, plus both seed
       // projections) — unpinned, each one replans the corpus-scale
@@ -1028,13 +1013,7 @@ import etlmudah.joins.Joins
     // which the oracle unrolls on the same md5-60bit host ids
     "q278_host_hits" -> ((s, dir) => {
       import etlmudah.web.Web
-import etlmudah.load.Upsert
-import etlmudah.joins.Joins
-      val id = col("doc_id")
-      val pages = Tables.documents(s, dir).select(
-        Web.fakeUrl(id, col("source")).as("url"),
-        Web.fakeHtml(id, col("text"), lit(null).cast("string"),
-          Web.fakeLinkUrls(id)).as("page"))
+      val pages = fakePages(s, dir)
       Web.hostHits(Web.hostLinkEdges(pages, "url", "page"), iters = 2)
     }),
 
@@ -1088,22 +1067,8 @@ import etlmudah.joins.Joins
     // brief's multimodal resize step) — synth -> graft_bmp_resize ->
     // graft_bmp_stats, with every output byte replayed by the oracle
     // from the synth closed form (floor block means)
-    "q264_bmp_resize_stats" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .where(col("doc_id") % 7 === 0)
-        .select(col("doc_id"),
-          (col("doc_id") % 8 + 2).as("w"),
-          ((col("doc_id") * 3) % 8 + 2).as("h"))
-        .select(col("doc_id"), col("w"), col("h"),
-          expr("graft_bmp_stats(graft_bmp_resize(" +
-            "graft_fake_bmp24(doc_id, w, h), 2))").as("st"))
-        .select(col("doc_id"), col("w"), col("h"),
-          col("st.width").as("ow"), col("st.height").as("oh"),
-          col("st.n_px"),
-          col("st.b_min"), col("st.b_max"), col("st.b_sum"),
-          col("st.g_min"), col("st.g_max"), col("st.g_sum"),
-          col("st.r_min"), col("st.r_max"), col("st.r_sum"))
-        .orderBy(col("doc_id"))),
+    "q264_bmp_resize_stats" -> resizeStats(
+      "graft_fake_bmp24(doc_id, w, h)"),
 
 
     // CMS join-size estimation: |events ⋈ orders on user/cust key|
@@ -1512,14 +1477,20 @@ import etlmudah.joins.Joins
     // Seeded-teleport replay: same edge/node/outw chain as q222's
     // oracle, with r0 and the per-round teleport term gated on seed
     // membership (host LIKE '%.com') and normalized by |S| not |V|.
-    "q241_personalized_host_rank" ->
-      s"""WITH hh AS (SELECT doc_id,
-         |    ${duckFakeHost("doc_id")} AS hsrc,
-         |    ${duckFakeHost("doc_id + 1")} AS h1,
-         |    ${duckFakeHost("3 * doc_id + 5")} AS h2
-         |  FROM documents),
-         |le AS (SELECT hsrc AS src_host, h1 AS dst_host FROM hh
-         |       UNION ALL SELECT hsrc, h2 FROM hh),
+    "q241_personalized_host_rank" -> {
+      val rounds = (1 to 3).map { i =>
+        s"""r$i AS (SELECT nd.node,
+           |    (CASE WHEN nd.node IN (SELECT node FROM seedn)
+           |      THEN (15 * 1000000000000) // (100 * (SELECT n FROM ns))
+           |      ELSE 0 END
+           |     + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
+           |  FROM nodes nd LEFT JOIN (
+           |    SELECT ew.dst AS node,
+           |           sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
+           |    FROM ew JOIN r${i - 1} r ON ew.src = r.node GROUP BY 1) c
+           |    USING (node))""".stripMargin
+      }.mkString(",\n")
+      s"""WITH $hostLinkCtes,
          |e0 AS (SELECT src_host, dst_host, count(*)::BIGINT AS weight
          |       FROM le WHERE src_host <> dst_host GROUP BY 1, 2),
          |e AS (SELECT
@@ -1547,39 +1518,11 @@ import etlmudah.joins.Joins
          |      THEN 1000000000000 // (SELECT n FROM ns)
          |      ELSE 0 END)::BIGINT AS rank
          |  FROM nodes),
-         |r1 AS (SELECT nd.node,
-         |    (CASE WHEN nd.node IN (SELECT node FROM seedn)
-         |      THEN (15 * 1000000000000) // (100 * (SELECT n FROM ns))
-         |      ELSE 0 END
-         |     + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT ew.dst AS node,
-         |           sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-         |    FROM ew JOIN r0 r ON ew.src = r.node GROUP BY 1) c
-         |    USING (node)),
-         |r2 AS (SELECT nd.node,
-         |    (CASE WHEN nd.node IN (SELECT node FROM seedn)
-         |      THEN (15 * 1000000000000) // (100 * (SELECT n FROM ns))
-         |      ELSE 0 END
-         |     + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT ew.dst AS node,
-         |           sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-         |    FROM ew JOIN r1 r ON ew.src = r.node GROUP BY 1) c
-         |    USING (node)),
-         |r3 AS (SELECT nd.node,
-         |    (CASE WHEN nd.node IN (SELECT node FROM seedn)
-         |      THEN (15 * 1000000000000) // (100 * (SELECT n FROM ns))
-         |      ELSE 0 END
-         |     + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT ew.dst AS node,
-         |           sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-         |    FROM ew JOIN r2 r ON ew.src = r.node GROUP BY 1) c
-         |    USING (node))
+         |$rounds
          |SELECT hosts.host, hosts.host LIKE '%.com' AS is_seed, r3.rank
          |FROM r3 JOIN hosts USING (node)
-         |ORDER BY rank DESC, host""".stripMargin,
+         |ORDER BY rank DESC, host""".stripMargin
+    },
 
 
     // Jackknife replay: per-group cent sums, the guarded leave-one-out
@@ -2071,38 +2014,8 @@ import etlmudah.joins.Joins
          |ORDER BY rrf DESC, id LIMIT 15""".stripMargin,
 
 
-    // wav-feature replay: samples from the synth closed form (doc_id
-    // >= 0, so SQL % equals floorMod), crossings via lag, silence
-    // runs via the islands trick over silent rows only.
     "q265_wav_features" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 50 + 10)::BIGINT AS nf
-        |  FROM documents WHERE doc_id % 7 = 3),
-        |s AS (SELECT d.doc_id, i.x AS i,
-        |    ((d.doc_id * 31 + i.x * 17) % 65536 - 32768)::BIGINT AS v
-        |  FROM d, range(0, 60) i(x) WHERE i.x < d.nf),
-        |f AS (SELECT doc_id, i, v,
-        |    lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv,
-        |    CASE WHEN abs(v) <= 8000 THEN 1 ELSE 0 END AS sil
-        |  FROM s),
-        |runs AS (SELECT doc_id, i,
-        |    i - row_number() OVER (PARTITION BY doc_id ORDER BY i)
-        |      AS grp
-        |  FROM f WHERE sil = 1),
-        |runagg AS (SELECT doc_id, count(*)::BIGINT AS rl FROM runs
-        |           GROUP BY doc_id, grp),
-        |rstats AS (SELECT doc_id, count(*)::BIGINT AS n_runs,
-        |             max(rl)::BIGINT AS max_run
-        |           FROM runagg GROUP BY doc_id),
-        |base AS (SELECT doc_id, count(*)::BIGINT AS n_samples,
-        |    sum(CASE WHEN pv IS NOT NULL AND pv * v < 0
-        |      THEN 1 ELSE 0 END)::BIGINT AS n_zero_cross,
-        |    sum(sil)::BIGINT AS n_silent
-        |  FROM f GROUP BY doc_id)
-        |SELECT b.doc_id, n_samples, n_zero_cross, n_silent,
-        |  coalesce(r.n_runs, 0)::BIGINT AS n_silence_runs,
-        |  coalesce(r.max_run, 0)::BIGINT AS max_silence_run
-        |FROM base b LEFT JOIN rstats r USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+      wavFeaturesSql,
 
 
     // Q2 shape: the correlated min decorrelated exactly as the engine
@@ -2675,13 +2588,7 @@ import etlmudah.joins.Joins
     // internal — reachability needs no hashing), two unrolled layers:
     // seeds at 0, new dsts at 1, new dsts of layer 1 at 2
     "q281_crawl_frontier" ->
-      s"""WITH hh AS (SELECT doc_id,
-         |    ${duckFakeHost("doc_id")} AS hsrc,
-         |    ${duckFakeHost("doc_id + 1")} AS h1,
-         |    ${duckFakeHost("3 * doc_id + 5")} AS h2
-         |  FROM documents),
-         |le AS (SELECT hsrc AS src_host, h1 AS dst_host FROM hh
-         |       UNION ALL SELECT hsrc, h2 FROM hh),
+      s"""WITH $hostLinkCtes,
          |e0 AS (SELECT DISTINCT src_host, dst_host
          |       FROM le WHERE src_host <> dst_host),
          |v0 AS (SELECT host FROM (
@@ -2753,19 +2660,11 @@ import etlmudah.joins.Joins
     // round R+1, inlined CTEs would re-evaluate exponentially)
     "q279_kcenter_coreset" -> {
       val rounds = (2 to 8).map { r =>
-        s"""m$r AS MATERIALIZED (
-           |  SELECT c2.id,
-           |    max(round(list_cosine_similarity(c2.vec, s.vec), 6))
-           |      AS msim
-           |  FROM cand c2, cand s
-           |  WHERE s.id IN (SELECT id FROM sel${r - 1})
-           |    AND c2.id NOT IN (SELECT id FROM sel${r - 1})
-           |  GROUP BY c2.id),
+        s"""${greedyMaxSimCtes(r)},
            |s$r AS MATERIALIZED (
            |  SELECT $r::BIGINT AS rank, id, msim AS coverage
            |  FROM m$r ORDER BY msim ASC, id ASC LIMIT 1),
-           |sel$r AS MATERIALIZED (SELECT * FROM sel${r - 1}
-           |          UNION ALL SELECT * FROM s$r)""".stripMargin
+           |${greedySelCtes(r)}""".stripMargin
       }.mkString(",\n")
       s"""WITH cand AS MATERIALIZED (
          |  SELECT vec_id AS id, embedding::DOUBLE[] AS vec
@@ -2781,61 +2680,37 @@ import etlmudah.joins.Joins
     // HITS replay: the q222 edge CTEs + two unrolled (auth, hub)
     // half-round pairs, each L∞-renormalized with `//` (== Spark div
     // on the non-negative lattice); h0 = scale on every node
-    "q278_host_hits" ->
-      s"""WITH hh AS (SELECT doc_id,
-         |    ${duckFakeHost("doc_id")} AS hsrc,
-         |    ${duckFakeHost("doc_id + 1")} AS h1,
-         |    ${duckFakeHost("3 * doc_id + 5")} AS h2
-         |  FROM documents),
-         |le AS (SELECT hsrc AS src_host, h1 AS dst_host FROM hh
-         |       UNION ALL SELECT hsrc, h2 FROM hh),
-         |e0 AS (SELECT src_host, dst_host, count(*)::BIGINT AS weight
-         |       FROM le WHERE src_host <> dst_host GROUP BY 1, 2),
-         |e AS (SELECT
-         |    CAST(('0x' || substr(md5(src_host),1,15)) AS UBIGINT)::BIGINT AS src,
-         |    CAST(('0x' || substr(md5(dst_host),1,15)) AS UBIGINT)::BIGINT AS dst,
-         |    weight FROM e0),
+    "q278_host_hits" -> {
+      // half-round i of side `out` (a = authorities, h = hubs): the
+      // other side's latest scores summed along each node's in-edges
+      // (authorities) or out-edges (hubs), then renormalized
+      def half(out: String, i: Int): String = {
+        val (in, prev, along, key, score, inScore) =
+          if (out == "a") ("h", s"h${i - 1}", "src", "dst", "auth", "hub")
+          else ("a", s"a$i", "dst", "src", "hub", "auth")
+        s"""$out${i}r AS (SELECT nd.node, COALESCE(m.m, 0)::BIGINT AS raw
+           |  FROM nodes nd LEFT JOIN (
+           |    SELECT e.$key AS node, sum($in.$inScore * e.weight)::BIGINT AS m
+           |    FROM e JOIN $prev $in ON e.$along = $in.node GROUP BY 1) m
+           |  USING (node)),
+           |$out$i AS (SELECT node, CASE WHEN (SELECT max(raw) FROM $out${i}r) > 0
+           |    THEN (raw * 1000000) // (SELECT max(raw) FROM $out${i}r)
+           |    ELSE 0 END::BIGINT AS $score FROM $out${i}r)""".stripMargin
+      }
+      val rounds = (1 to 2).flatMap(i => Seq(half("a", i), half("h", i)))
+        .mkString(",\n")
+      s"""WITH $hostEdgeCtes,
          |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
          |h0 AS (SELECT node, 1000000::BIGINT AS hub FROM nodes),
-         |a1r AS (SELECT nd.node, COALESCE(m.m, 0)::BIGINT AS raw
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT e.dst AS node, sum(h.hub * e.weight)::BIGINT AS m
-         |    FROM e JOIN h0 h ON e.src = h.node GROUP BY 1) m
-         |  USING (node)),
-         |a1 AS (SELECT node, CASE WHEN (SELECT max(raw) FROM a1r) > 0
-         |    THEN (raw * 1000000) // (SELECT max(raw) FROM a1r)
-         |    ELSE 0 END::BIGINT AS auth FROM a1r),
-         |h1r AS (SELECT nd.node, COALESCE(m.m, 0)::BIGINT AS raw
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT e.src AS node, sum(a.auth * e.weight)::BIGINT AS m
-         |    FROM e JOIN a1 a ON e.dst = a.node GROUP BY 1) m
-         |  USING (node)),
-         |h1 AS (SELECT node, CASE WHEN (SELECT max(raw) FROM h1r) > 0
-         |    THEN (raw * 1000000) // (SELECT max(raw) FROM h1r)
-         |    ELSE 0 END::BIGINT AS hub FROM h1r),
-         |a2r AS (SELECT nd.node, COALESCE(m.m, 0)::BIGINT AS raw
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT e.dst AS node, sum(h.hub * e.weight)::BIGINT AS m
-         |    FROM e JOIN h1 h ON e.src = h.node GROUP BY 1) m
-         |  USING (node)),
-         |a2 AS (SELECT node, CASE WHEN (SELECT max(raw) FROM a2r) > 0
-         |    THEN (raw * 1000000) // (SELECT max(raw) FROM a2r)
-         |    ELSE 0 END::BIGINT AS auth FROM a2r),
-         |h2r AS (SELECT nd.node, COALESCE(m.m, 0)::BIGINT AS raw
-         |  FROM nodes nd LEFT JOIN (
-         |    SELECT e.src AS node, sum(a.auth * e.weight)::BIGINT AS m
-         |    FROM e JOIN a2 a ON e.dst = a.node GROUP BY 1) m
-         |  USING (node)),
-         |h2 AS (SELECT node, CASE WHEN (SELECT max(raw) FROM h2r) > 0
-         |    THEN (raw * 1000000) // (SELECT max(raw) FROM h2r)
-         |    ELSE 0 END::BIGINT AS hub FROM h2r),
+         |$rounds,
          |hosts AS (SELECT host,
          |    CAST(('0x' || substr(md5(host),1,15)) AS UBIGINT)::BIGINT AS node
          |  FROM (SELECT src_host AS host FROM e0
          |        UNION SELECT dst_host FROM e0))
          |SELECT hosts.host, h2.hub, a2.auth
          |FROM hosts JOIN h2 USING (node) JOIN a2 USING (node)
-         |ORDER BY auth DESC, host ASC""".stripMargin,
+         |ORDER BY auth DESC, host ASC""".stripMargin
+    },
 
 
     // the window DEFINITION of graft_topk's bounded heap: row_number
@@ -2873,39 +2748,8 @@ import etlmudah.joins.Joins
         |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
 
 
-    // resize replay: the q224 closed form pushed through the box
-    // filter — every output pixel is the floor mean of its 2x2 block,
-    // generated per (oy, ox, dy, dx) and aggregated per channel.
     "q264_bmp_resize_stats" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 8 + 2)::BIGINT AS w,
-        |    ((doc_id * 3) % 8 + 2)::BIGINT AS h
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |o AS (SELECT doc_id, w, h, w // 2 AS ow, h // 2 AS oh FROM d),
-        |cells AS (
-        |  SELECT o.doc_id, oy.x AS oy, ox.x AS ox,
-        |    (sum((o.doc_id*7 + (oy.x*2 + dy.x)*3 + (ox.x*2 + dx.x))
-        |      % 256) // 4)::INT AS b,
-        |    (sum((o.doc_id*11 + (oy.x*2 + dy.x)*5 + (ox.x*2 + dx.x)*2)
-        |      % 256) // 4)::INT AS g,
-        |    (sum((o.doc_id*13 + (oy.x*2 + dy.x)*7 + (ox.x*2 + dx.x)*3)
-        |      % 256) // 4)::INT AS r
-        |  FROM o, range(0, 4) oy(x), range(0, 4) ox(x),
-        |       range(0, 2) dy(x), range(0, 2) dx(x)
-        |  WHERE oy.x < o.oh AND ox.x < o.ow
-        |  GROUP BY 1, 2, 3),
-        |st AS (SELECT doc_id, count(*)::BIGINT AS n_px,
-        |    min(b)::INT AS b_min, max(b)::INT AS b_max,
-        |    sum(b)::BIGINT AS b_sum,
-        |    min(g)::INT AS g_min, max(g)::INT AS g_max,
-        |    sum(g)::BIGINT AS g_sum,
-        |    min(r)::INT AS r_min, max(r)::INT AS r_max,
-        |    sum(r)::BIGINT AS r_sum
-        |  FROM cells GROUP BY 1)
-        |SELECT o.doc_id, o.w, o.h, o.ow, o.oh, st.n_px,
-        |  st.b_min, st.b_max, st.b_sum, st.g_min, st.g_max, st.g_sum,
-        |  st.r_min, st.r_max, st.r_sum
-        |FROM o JOIN st USING (doc_id)
-        |ORDER BY o.doc_id""".stripMargin,
+      bmpResizeStatsSql,
 
 
     // CM inner-product replay: q231's exact bucket layout on both
@@ -2982,21 +2826,13 @@ import etlmudah.joins.Joins
       // and each selR is referenced 3x by round R+1 — unmaterialized,
       // the 10-round ladder explodes 3^9-fold
       val rounds = (2 to 10).map { r =>
-        s"""m$r AS MATERIALIZED (
-           |  SELECT c2.id,
-           |    max(round(list_cosine_similarity(c2.vec, s.vec), 6))
-           |      AS msim
-           |  FROM cand c2, cand s
-           |  WHERE s.id IN (SELECT id FROM sel${r - 1})
-           |    AND c2.id NOT IN (SELECT id FROM sel${r - 1})
-           |  GROUP BY c2.id),
+        s"""${greedyMaxSimCtes(r)},
            |s$r AS MATERIALIZED (
            |  SELECT $r::BIGINT AS rank, c.id,
            |    round(0.7 * c.score - (1.0 - 0.7) * m.msim, 6) AS mmr
            |  FROM cand c JOIN m$r m ON c.id = m.id
            |  ORDER BY mmr DESC, c.id LIMIT 1),
-           |sel$r AS MATERIALIZED (SELECT * FROM sel${r - 1}
-           |          UNION ALL SELECT * FROM s$r)""".stripMargin
+           |${greedySelCtes(r)}""".stripMargin
       }.mkString(",\n")
       s"""WITH cand AS MATERIALIZED (
          |  SELECT vec_id AS id,

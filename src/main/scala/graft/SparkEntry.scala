@@ -12,6 +12,7 @@ import etlmudah.load.Upsert
 import etlmudah.multimodal.Multimodal
 import etlmudah.scale.{Dedup, Sampling, Similarity}
 import etlmudah.text.TextStats
+import Fragments._
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, with matching DuckDB-runnable ANSI SQL in `oracleSql`.
@@ -95,11 +96,6 @@ object SparkEntry {
               .cast("int")),
         "text", "doc_id", "y", buckets = 16, steps = 3, lr = 0.02))
 
-  /** Per-doc portable minhash signatures (q152/q157's cost center —
-    * the md5 family itself) staged once per corpus identity:
-    * signatures are subset-stable, so the one full-corpus table serves
-    * the self-join audit AND every train/ref decontamination split
-    * that shares (shingleN=3, k=128). */
   /** Deterministic encoding-damage suffix for q212 (the q176
     * dirty-synthesis precedent): one 'Ã'-family double-decode, one
     * 'â€' punctuation artifact, one 'Â '+space — exactly 3 marker hits.
@@ -118,6 +114,11 @@ object SparkEntry {
     * damage is identical. */
   private[graft] val nfcSuffix = " cafe\u0301 A\u030A \u212B"
 
+  /** Per-doc portable minhash signatures (q152/q157's cost center —
+    * the md5 family itself) staged once per corpus identity:
+    * signatures are subset-stable, so the one full-corpus table serves
+    * the self-join audit AND every train/ref decontamination split
+    * that shares (shingleN=3, k=128). */
   private[graft] val portableSigTag = "psig-v1-n3-k128"
   private[graft] def stagedPortableSigs(s: SparkSession, dir: String): DataFrame =
     Stage.parquet(s, dir, portableSigTag, "psig")(
@@ -138,11 +139,6 @@ object SparkEntry {
       Dedup.winnowFingerprints(Tables.documents(s, dir), "text", "doc_id",
         k = 3, w = 4))
 
-  /** The winnow shared-PAIR table staged one level above the
-    * fingerprints — the q64/q108 split applied to the winnow tier:
-    * q166 runs the df-capped inverted-index join live (its oracle row
-    * benchmarks the join cost every round); q170's cluster composition
-    * consumes this artifact and pays only connected components. */
   /** The co-purchase edge table staged once per corpus — the q64/q108
     * split applied to the graph tier: q218 keeps running the miner live
     * (its oracle row benchmarks mining + PageRank iteration every
@@ -164,17 +160,14 @@ object SparkEntry {
     * consumes this artifact and pays only the rank loop + the gate. */
   private[graft] val hostEdgeTag = "hedge-v1-links2"
   private[graft] def stagedHostEdges(s: SparkSession, dir: String): DataFrame =
-    Stage.parquet(s, dir, hostEdgeTag, "hedge") {
-      import etlmudah.web.Web
-      val id = col("doc_id")
-      Web.hostLinkEdges(
-        Tables.documents(s, dir).select(
-          Web.fakeUrl(id, col("source")).as("url"),
-          Web.fakeHtml(id, col("text"), lit(null).cast("string"),
-            Web.fakeLinkUrls(id)).as("page")),
-        "url", "page")
-    }
+    Stage.parquet(s, dir, hostEdgeTag, "hedge")(
+      etlmudah.web.Web.hostLinkEdges(fakePages(s, dir), "url", "page"))
 
+  /** The winnow shared-PAIR table staged one level above the
+    * fingerprints — the q64/q108 split applied to the winnow tier:
+    * q166 runs the df-capped inverted-index join live (its oracle row
+    * benchmarks the join cost every round); q170's cluster composition
+    * consumes this artifact and pays only connected components. */
   private[graft] val winnowPairTag = "wpair-v1-k3-w4-ms2-df50"
   private[graft] def stagedWinnowPairs(s: SparkSession, dir: String): DataFrame =
     Stage.parquet(s, dir, winnowPairTag, "wpair")(
@@ -749,12 +742,7 @@ object SparkEntry {
         url, "ORDERS_STAGE")
       etlmudah.sinks.Writers.readJdbcPartitioned(s, url, "ORDERS_STAGE",
           "o_orderkey", 0L, 6000000L, 4)
-        .groupBy(col("o_orderpriority")).agg(
-          count(lit(1)).as("n"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("sum_price"),
-          min(col("o_orderkey")).as("min_key"),
-          max(col("o_orderkey")).as("max_key"))
-        .orderBy(col("o_orderpriority"))
+        .transform(copyRoundtripAgg)
     }),
 
     "q44_tsv_roundtrip" -> ((s, dir) => {
@@ -1019,11 +1007,7 @@ object SparkEntry {
       // read of the decoder's marker walk
       docs.select(col("doc_id"),
           Multimodal.fakeMediaHeader(fmt, w, h).as("blob"))
-        .select(col("doc_id"), Multimodal.mediaMeta(col("blob")).as("m"))
-        .select(col("doc_id"), col("m.format").as("format"),
-          col("m.width").cast("bigint").as("width"),
-          col("m.height").cast("bigint").as("height"))
-        .orderBy(col("doc_id"))
+        .transform(mediaDims)
     }),
 
     // PORTABLE hyperplane LSH (the q152 move applied to embedding ANN):
@@ -1880,21 +1864,6 @@ object SparkEntry {
       .select(col("text")).head().getString(0)
       .trim.split("\\s+").toSeq.distinct
 
-  /** Shared q253/q257 input: the exact-cent monthly revenue series per
-    * priority — one map-side-combined aggregate, BIGINT lattice so the
-    * trend/changepoint statistics replay engine-exactly. */
-  private[graft] def monthlyCents(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .where(col("o_orderdate").isNotNull && col("o_totalprice").isNotNull)
-      .groupBy(col("o_orderpriority"),
-        (year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
-          .cast("long").as("m"))
-      .agg(sum(round(col("o_totalprice").cast("double") * 100)
-        .cast("long")).as("cents"))
-
-  /** Stopword list shared by quality/text queries (and their oracles). */
-  private[graft] val qualityStops = Seq("the", "a", "of", "and", "to")
-
   /** Marker lists for the langid heuristic; first lang wins ties. */
   private[graft] val langMarkers = Seq(
     "en" -> Seq("the", "a", "of"),
@@ -1933,363 +1902,8 @@ object SparkEntry {
        |ORDER BY hamming, id_a, id_b""".stripMargin
   }
 
-  /** Full SQL twin of `Dedup.minhashPortablePairs` (k=8, bands=4, r=2,
-    * t=0.7): same string shingles as the q63/q108 CTEs, the same
-    * md5-60bit seeded hash family, band agreement as an OR of per-band
-    * min-pair equalities, and the same candidate-restricted exact
-    * refine — so the probabilistic candidate set itself hash-matches. */
-  /** Parametric DuckDB twin of `Dedup.minhashPortablePairs`: k md5-60bit
-    * min-hashes, `bands` bands of k/bands rows, exact-Jaccard refine at
-    * `minJ`. q130 keeps the hand-auditable small sketch; q152 runs q25's
-    * production parameters (k=128, b=32) so the flagship banded tier
-    * itself carries an oracle row. */
-  /** Shared CTE prefix for the winnowing oracles (q165/q166): trigram
-    * positional grams, 32-bit md5-lane hashes, trailing windows of 4
-    * with the rightmost-min selection encoded as a plain min() over the
-    * sortable key h || lpad(1e9 - pos). Mirrors
-    * [[etlmudah.scale.Dedup.winnowFingerprints]] at k=3, w=4. */
-  private[graft] def winnowSelSql: String =
-    """WITH tokarr AS (
-      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-      |  FROM documents),
-      |tok AS (
-      |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-      |  FROM tokarr),
-      |grams AS (
-      |  SELECT a.doc_id, a.pos - 1 AS pos,
-      |    substr(md5(a.t || ' ' || b.t || ' ' || c.t), 1, 8) AS h
-      |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-      |win AS (
-      |  SELECT doc_id, pos, h,
-      |    min(h || lpad((1000000000 - pos)::VARCHAR, 10, '0'))
-      |      OVER (PARTITION BY doc_id ORDER BY pos
-      |            ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sk,
-      |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn,
-      |    count(*) OVER (PARTITION BY doc_id) AS total
-      |  FROM grams),
-      |sel AS (
-      |  SELECT DISTINCT doc_id,
-      |    1000000000 - substr(sk, 9, 10)::BIGINT AS pos,
-      |    substr(sk, 1, 8) AS fp
-      |  FROM win WHERE rn >= 4 OR rn = total)""".stripMargin
-
-  private[graft] def minhashPortableSql(k: Int, bands: Int, minJ: Double): String = {
-    val rpb = k / bands
-    // four 32-bit hex lanes per md5: hash i = seed i/4, lane i%4 (hex
-    // chars 1-8 / 9-16 / 17-24 / 25-32); the min runs on the fixed-width
-    // hex substring (lexicographic == numeric) — mirrors
-    // Dedup.minhashPortablePairs exactly
-    val mins = (0 until k).map(i =>
-      s"min(substr(md5('${i / 4}:' || g), ${1 + 8 * (i % 4)}, 8)) AS m$i")
-      .mkString(", ")
-    val bandPred = (0 until bands).map { b =>
-      (0 until rpb).map(j => s"a.m${rpb * b + j} = b.m${rpb * b + j}")
-        .mkString("(", " AND ", ")")
-    }.mkString(" OR ")
-    s"""WITH tokarr AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
-       |  FROM documents),
-       |tok AS (
-       |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-       |  FROM tokarr),
-       |grams AS (
-       |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-       |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-       |short AS (
-       |  SELECT doc_id, array_to_string(arr, ' ') AS g
-       |  FROM tokarr WHERE len(arr) < 3),
-       |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-       |sig AS (SELECT doc_id, $mins, count(*) AS n FROM sh GROUP BY doc_id),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ($bandPred)),
-       |inter AS (
-       |  SELECT id_a, id_b, count(*) AS i
-       |  FROM cand JOIN sh sa ON sa.doc_id = id_a
-       |            JOIN sh sb ON sb.doc_id = id_b AND sb.g = sa.g
-       |  GROUP BY 1, 2)
-       |SELECT id_a, id_b,
-       | round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-       |FROM inter JOIN sig sa ON sa.doc_id = id_a
-       |           JOIN sig sb ON sb.doc_id = id_b
-       |WHERE i::DOUBLE / (sa.n + sb.n - i) >= $minJ
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** Twin of `Dedup.bandingDesignTable`: one UNION ALL row per
-    * (bands, j) with j^r and (1-j^r)^b written as EXPLICIT multiply
-    * chains (left-associative, ::DOUBLE literals so DuckDB never
-    * parses them as DECIMAL) — the same IEEE operation sequence the
-    * engine's fold performs, so every double is bit-identical; 6dp via
-    * floor(x*1e6 + 0.5), never an engine round(). */
-  private[graft] def bandingDesignSql(k: Int, jGrid: Seq[Double]): String = {
-    val rows = for {
-      b <- 1 to k if k % b == 0
-      r = k / b
-      j <- jGrid
-    } yield {
-      val jl = s"$j::DOUBLE"
-      val jr = Seq.fill(r)(jl).mkString(" * ")
-      val miss = Seq.fill(b)(s"(1 - $jr)").mkString(" * ")
-      s"SELECT $k::BIGINT AS k, $b::BIGINT AS bands, " +
-        s"$r::BIGINT AS rows_per_band, " +
-        s"floor($jl * 1000000 + 0.5) / 1000000.0 AS jaccard, " +
-        s"floor((1 - $miss) * 1000000 + 0.5) / 1000000.0 AS p_catch"
-    }
-    rows.mkString("", "\nUNION ALL\n", "\nORDER BY bands, jaccard")
-  }
-
-  /** Recall-curve twin of [[minhashPortableSql]] — replicates
-    * `Dedup.bandedRecallReport`: the SAME shingle/signature CTEs serve
-    * both the exact-Jaccard ground truth (inverted-index self-join at
-    * `gate`) and the banded candidate set (seeded-md5 lane mins, band
-    * equality), then true pairs group by jaccard decile with a
-    * found-by-banding left join. */
-  private[graft] def bandedRecallSql(k: Int, bands: Int, gate: Double): String = {
-    val rpb = k / bands
-    val mins = (0 until k).map(i =>
-      s"min(substr(md5('${i / 4}:' || g), ${1 + 8 * (i % 4)}, 8)) AS m$i")
-      .mkString(", ")
-    val bandPred = (0 until bands).map { b =>
-      (0 until rpb).map(j => s"a.m${rpb * b + j} = b.m${rpb * b + j}")
-        .mkString("(", " AND ", ")")
-    }.mkString(" OR ")
-    s"""WITH tokarr AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
-       |  FROM documents),
-       |tok AS (
-       |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-       |  FROM tokarr),
-       |grams AS (
-       |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-       |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-       |short AS (
-       |  SELECT doc_id, array_to_string(arr, ' ') AS g
-       |  FROM tokarr WHERE len(arr) < 3),
-       |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-       |sig AS (SELECT doc_id, $mins, count(*) AS n FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-       |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |exj AS (
-       |  SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-       |  FROM inter JOIN sig sa ON sa.doc_id = id_a
-       |             JOIN sig sb ON sb.doc_id = id_b
-       |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= $gate),
-       |cand AS (
-       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-       |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id AND ($bandPred))
-       |SELECT floor(jaccard * 10)::BIGINT AS jac_decile,
-       |  count(*) AS n_true,
-       |  sum(CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-       |    AS n_found,
-       |  round(sum(CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-       |    / count(*), 6) AS recall
-       |FROM exj LEFT JOIN cand c ON c.id_a = exj.id_a AND c.id_b = exj.id_b
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Cross-corpus (even-id train vs odd-id ref) variant of
-    * [[minhashPortableSql]] — replicates
-    * `Dedup.minhashPortableCrossPairs` verbatim: same seeded-md5 lane
-    * mins, band equality BETWEEN the two corpora's signatures instead
-    * of a self-join, exact-Jaccard refine over the candidate set. */
-  private[graft] def minhashPortableCrossSql(k: Int, bands: Int,
-                                      minJ: Double): String = {
-    val rpb = k / bands
-    val mins = (0 until k).map(i =>
-      s"min(substr(md5('${i / 4}:' || g), ${1 + 8 * (i % 4)}, 8)) AS m$i")
-      .mkString(", ")
-    val bandPred = (0 until bands).map { b =>
-      (0 until rpb).map(j => s"a.m${rpb * b + j} = b.m${rpb * b + j}")
-        .mkString("(", " AND ", ")")
-    }.mkString(" OR ")
-    s"""WITH tokarr AS (
-       |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS arr
-       |  FROM documents),
-       |tok AS (
-       |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-       |  FROM tokarr),
-       |grams AS (
-       |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-       |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-       |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-       |short AS (
-       |  SELECT doc_id, array_to_string(arr, ' ') AS g
-       |  FROM tokarr WHERE len(arr) < 3),
-       |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-       |sig AS (SELECT doc_id, $mins, count(*) AS n FROM sh GROUP BY doc_id),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS train_id, b.doc_id AS ref_id
-       |  FROM sig a JOIN sig b
-       |    ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1 AND ($bandPred)),
-       |inter AS (
-       |  SELECT train_id, ref_id, count(*) AS i
-       |  FROM cand JOIN sh sa ON sa.doc_id = train_id
-       |            JOIN sh sb ON sb.doc_id = ref_id AND sb.g = sa.g
-       |  GROUP BY 1, 2)
-       |SELECT train_id, ref_id,
-       | round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-       |FROM inter JOIN sig sa ON sa.doc_id = train_id
-       |           JOIN sig sb ON sb.doc_id = ref_id
-       |WHERE i::DOUBLE / (sa.n + sb.n - i) >= $minJ
-       |ORDER BY train_id, ref_id""".stripMargin
-  }
-
-  /** DuckDB closed form of [[etlmudah.web.Web.fakeHost]] applied to the
-    * BIGINT expression `j` — the host-arithmetic building block the
-    * q222/q223 oracles use to carry the KNOWN link targets. */
-  private[graft] def duckFakeHost(j: String): String =
-    s"['www.','blog.',''][(($j) % 3 + 1)::INT] || 'd' || " +
-      s"(($j) % 7)::VARCHAR || '.' || " +
-      s"['com','org','co.uk','com.my'][(($j) % 4 + 1)::INT]"
-
-  /** Shared CTE chain of the q222/q223 oracles (callers prepend WITH
-    * and append their SELECT): known link targets from the doc_id rule
-    * -> weighted host edges -> md5-60bit ids -> the 3 unrolled
-    * integer-lattice PageRank rounds (the q218 CTE shape verbatim) ->
-    * `hostrank(host, rank)`. Also exposes `hh(doc_id, hsrc)` so q223
-    * can key pages to their host without re-deriving it. */
-  private[graft] val duckHostRankCtes: String =
-    s"""hh AS (SELECT doc_id,
-       |    ${duckFakeHost("doc_id")} AS hsrc,
-       |    ${duckFakeHost("doc_id + 1")} AS h1,
-       |    ${duckFakeHost("3 * doc_id + 5")} AS h2
-       |  FROM documents),
-       |le AS (SELECT hsrc AS src_host, h1 AS dst_host FROM hh
-       |       UNION ALL SELECT hsrc, h2 FROM hh),
-       |e0 AS (SELECT src_host, dst_host, count(*)::BIGINT AS weight
-       |       FROM le WHERE src_host <> dst_host GROUP BY 1, 2),
-       |e AS (SELECT
-       |    CAST(('0x' || substr(md5(src_host),1,15)) AS UBIGINT)::BIGINT AS src,
-       |    CAST(('0x' || substr(md5(dst_host),1,15)) AS UBIGINT)::BIGINT AS dst,
-       |    weight FROM e0),
-       |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-       |nn AS (SELECT count(*)::BIGINT AS n FROM nodes),
-       |ew AS (
-       |  SELECT e.src, e.dst, e.weight, o.outw
-       |  FROM e JOIN (SELECT src, sum(weight)::BIGINT AS outw
-       |               FROM e GROUP BY 1) o USING (src)),
-       |r0 AS (SELECT node,
-       |         (1000000000000 // (SELECT n FROM nn))::BIGINT AS rank
-       |       FROM nodes),
-       |r1 AS (SELECT nd.node,
-       |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-       |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-       |       FROM nodes nd LEFT JOIN (
-       |         SELECT ew.dst AS node,
-       |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-       |         FROM ew JOIN r0 r ON ew.src = r.node GROUP BY 1) c
-       |         USING (node)),
-       |r2 AS (SELECT nd.node,
-       |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-       |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-       |       FROM nodes nd LEFT JOIN (
-       |         SELECT ew.dst AS node,
-       |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-       |         FROM ew JOIN r1 r ON ew.src = r.node GROUP BY 1) c
-       |         USING (node)),
-       |r3 AS (SELECT nd.node,
-       |         ((15 * 1000000000000) // (100 * (SELECT n FROM nn))
-       |          + (85 * COALESCE(c.c, 0)) // 100)::BIGINT AS rank
-       |       FROM nodes nd LEFT JOIN (
-       |         SELECT ew.dst AS node,
-       |                sum((r.rank * ew.weight) // ew.outw)::BIGINT AS c
-       |         FROM ew JOIN r2 r ON ew.src = r.node GROUP BY 1) c
-       |         USING (node)),
-       |hosts AS (SELECT host,
-       |    CAST(('0x' || substr(md5(host),1,15)) AS UBIGINT)::BIGINT AS node
-       |  FROM (SELECT src_host AS host FROM e0
-       |        UNION SELECT dst_host FROM e0)),
-       |hostrank AS (SELECT hosts.host, r3.rank
-       |  FROM r3 JOIN hosts USING (node))""".stripMargin
-
-  /** Shared CTE chain of the q232/q233 oracles — the FULL exact-integer
-    * PCA replay: lattice quantization (round half-away matches on both
-    * engines; *1024 is exact in double), the d x d Gram via a self-join
-    * on vec_id, exact centering n*G - s*s', the one-time covariance
-    * rescale, and THREE unrolled lattice power-iteration steps with
-    * truncating division (DuckDB `//` == Java `/`). Ends with
-    * `v3(i, v)` (the iterate), `wf(i, w)` (one more mat-vec for the
-    * Rayleigh pair), and `ray(num, den)`; `q(vec_id, i, qv)` stays
-    * visible for the projection oracle. */
-  private[graft] val duckPcaCtes: String =
-    """q AS (SELECT vec_id,
-      |    generate_subscripts(embedding, 1) - 1 AS i,
-      |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1024) AS BIGINT)
-      |      AS qv
-      |  FROM embeddings),
-      |g AS (SELECT a.i AS i, b.i AS j, sum(a.qv * b.qv)::BIGINT AS gij
-      |  FROM q a JOIN q b USING (vec_id) GROUP BY 1, 2),
-      |s AS (SELECT i, sum(qv)::BIGINT AS si FROM q GROUP BY 1),
-      |nn AS (SELECT count(*)::BIGINT AS n FROM embeddings),
-      |c AS (SELECT g.i, g.j,
-      |    ((SELECT n FROM nn) * g.gij - sa.si * sb.si)::BIGINT AS cij
-      |  FROM g JOIN s sa ON sa.i = g.i JOIN s sb ON sb.i = g.j),
-      |gd AS (SELECT greatest(1, max(abs(cij)) // 1048576)::BIGINT AS gdiv
-      |  FROM c),
-      |cg AS (SELECT i, j, (cij // (SELECT gdiv FROM gd))::BIGINT AS cv
-      |  FROM c),
-      |v0 AS (SELECT i, 1::BIGINT AS v FROM range(64) t(i)),
-      |w1 AS (SELECT cg.i, sum(cg.cv * v0.v)::BIGINT AS w
-      |  FROM cg JOIN v0 ON v0.i = cg.j GROUP BY 1),
-      |v1 AS (SELECT i, ((w * 32768) //
-      |    (SELECT greatest(1, max(abs(w))) FROM w1))::BIGINT AS v FROM w1),
-      |w2 AS (SELECT cg.i, sum(cg.cv * v1.v)::BIGINT AS w
-      |  FROM cg JOIN v1 ON v1.i = cg.j GROUP BY 1),
-      |v2 AS (SELECT i, ((w * 32768) //
-      |    (SELECT greatest(1, max(abs(w))) FROM w2))::BIGINT AS v FROM w2),
-      |w3 AS (SELECT cg.i, sum(cg.cv * v2.v)::BIGINT AS w
-      |  FROM cg JOIN v2 ON v2.i = cg.j GROUP BY 1),
-      |v3 AS (SELECT i, ((w * 32768) //
-      |    (SELECT greatest(1, max(abs(w))) FROM w3))::BIGINT AS v FROM w3),
-      |wf AS (SELECT cg.i, sum(cg.cv * v3.v)::BIGINT AS w
-      |  FROM cg JOIN v3 ON v3.i = cg.j GROUP BY 1),
-      |ray AS (SELECT sum(v3.v * wf.w)::BIGINT AS num,
-      |    sum(v3.v * v3.v)::BIGINT AS den
-      |  FROM v3 JOIN wf USING (i))""".stripMargin
-
-  /** Shared CTE chain of the q225/q229 oracles: sign-bit packing (two
-    * 32-bit words per vector), the md5 probe pick, bit_count(xor)
-    * Hamming, the (hamming, id) candidate window at candK=50, and the
-    * exact rerank — ends with `rr(probe_id, vec_id, hamming, cos_sim)`
-    * and exposes `pr(probe_id)`. */
-  private[graft] val duckBinaryRerankCtes: String =
-    """e AS (SELECT vec_id, unnest(embedding) AS x,
-      |    generate_subscripts(embedding, 1) - 1 AS d0 FROM embeddings),
-      |sig AS (SELECT vec_id,
-      |    sum(CASE WHEN d0 < 32 AND x > 0 THEN (1::BIGINT << d0::INT)
-      |        ELSE 0 END)::BIGINT AS w0,
-      |    sum(CASE WHEN d0 >= 32 AND x > 0
-      |        THEN (1::BIGINT << (d0 - 32)::INT)
-      |        ELSE 0 END)::BIGINT AS w1
-      |  FROM e GROUP BY vec_id),
-      |pr AS (SELECT vec_id AS probe_id FROM embeddings
-      |       ORDER BY md5(vec_id::VARCHAR) DESC, vec_id DESC LIMIT 5),
-      |ps AS (SELECT pr.probe_id, s.w0 AS pw0, s.w1 AS pw1
-      |       FROM pr JOIN sig s ON s.vec_id = pr.probe_id),
-      |hm AS (SELECT ps.probe_id, s.vec_id,
-      |    (bit_count(xor(s.w0, ps.pw0)) +
-      |     bit_count(xor(s.w1, ps.pw1)))::INT AS hamming
-      |  FROM sig s CROSS JOIN ps WHERE s.vec_id <> ps.probe_id),
-      |cand AS (SELECT probe_id, vec_id, hamming FROM (
-      |    SELECT *, row_number() OVER (PARTITION BY probe_id
-      |      ORDER BY hamming ASC, vec_id ASC) AS hr FROM hm)
-      |  WHERE hr <= 50),
-      |rr AS (SELECT c.probe_id, c.vec_id, c.hamming,
-      |    round(list_cosine_similarity(e.embedding::DOUBLE[],
-      |      p.embedding::DOUBLE[]), 6) AS cos_sim
-      |  FROM cand c
-      |  JOIN embeddings e ON e.vec_id = c.vec_id
-      |  JOIN embeddings p ON p.vec_id = c.probe_id)""".stripMargin
-
   def oracleSql: Map[String, String] = baseOracleSql ++ RoundsA.oracleSql ++ RoundsB.oracleSql ++ Round11.oracleSql ++ Round12.oracleSql ++ Round13.oracleSql
 
-  // lazy: forward-references monthlyCentsSql / bm25SearchSql below
   private[graft] lazy val baseOracleSql: Map[String, String] = Map(
     "q26_simhash_near_dups" -> simhashOracleSql,
     "q130_minhash_portable" -> minhashPortableSql(8, 4, 0.7),
@@ -2366,51 +1980,31 @@ object SparkEntry {
         |FROM p ORDER BY doc_id, pack_id""".stripMargin,
 
     "q158_ivf_assign_portable" ->
-      """WITH c AS (
-        |  SELECT vec_id AS cid, embedding AS cvec FROM embeddings
-        |  ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT 8),
-        |scored AS (
-        |  SELECT e.vec_id, c.cid,
-        |    round(list_cosine_similarity(e.embedding::DOUBLE[],
-        |      c.cvec::DOUBLE[]), 6) AS cs
-        |  FROM embeddings e CROSS JOIN c),
-        |ranked AS (
-        |  SELECT vec_id, cid, cs,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY cs DESC, cid ASC) AS rn
-        |  FROM scored)
-        |SELECT vec_id, cid AS centroid_id, cs AS cos_sim
-        |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin,
+      s"""WITH ${ivfScoredCtes},
+         |ranked AS (
+         |  SELECT vec_id, cid, cs,
+         |    row_number() OVER (PARTITION BY vec_id
+         |                       ORDER BY cs DESC, cid ASC) AS rn
+         |  FROM scored)
+         |SELECT vec_id, cid AS centroid_id, cs AS cos_sim
+         |FROM ranked WHERE rn = 1 ORDER BY vec_id""".stripMargin,
 
     // Cross-corpus exact Jaccard (decontamination, oracle tier): same
     // shingle CTEs as q63, split even/odd, two-sided inverted-index join.
     "q65_decontamination_exact" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT t.doc_id AS train_id, r.doc_id AS ref_id, count(*) AS i
-        |  FROM sh t JOIN sh r ON t.g = r.g
-        |  WHERE t.doc_id % 2 = 0 AND r.doc_id % 2 = 1
-        |  GROUP BY 1, 2)
-        |SELECT train_id, ref_id,
-        | round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-        |FROM inter JOIN sizes sa ON sa.doc_id = train_id
-        |           JOIN sizes sb ON sb.doc_id = ref_id
-        |WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8
-        |ORDER BY train_id, ref_id""".stripMargin,
+      s"""WITH $shingleCtes,
+         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         |inter AS (
+         |  SELECT t.doc_id AS train_id, r.doc_id AS ref_id, count(*) AS i
+         |  FROM sh t JOIN sh r ON t.g = r.g
+         |  WHERE t.doc_id % 2 = 0 AND r.doc_id % 2 = 1
+         |  GROUP BY 1, 2)
+         |SELECT train_id, ref_id,
+         | round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
+         |FROM inter JOIN sizes sa ON sa.doc_id = train_id
+         |           JOIN sizes sb ON sb.doc_id = ref_id
+         |WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8
+         |ORDER BY train_id, ref_id""".stripMargin,
 
     // string grams stand in for the engine's rolling hashes (same
     // equality); the interval-union lag trick is shared verbatim
@@ -2454,29 +2048,16 @@ object SparkEntry {
     // same gram construction as q65; reference side pooled to one
     // distinct gram set, then a gram-keyed left join per train doc
     "q87_contamination_fraction" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |refset AS (SELECT DISTINCT g FROM sh WHERE doc_id % 2 = 1)
-        |SELECT t.doc_id, count(*) AS n_grams,
-        | sum(CASE WHEN r.g IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-        |   AS n_contaminated,
-        | round(sum(CASE WHEN r.g IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
-        |   / count(*), 6) AS contam_frac
-        |FROM sh t LEFT JOIN refset r ON t.g = r.g
-        |WHERE t.doc_id % 2 = 0
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""WITH $shingleCtes,
+         |refset AS (SELECT DISTINCT g FROM sh WHERE doc_id % 2 = 1)
+         |SELECT t.doc_id, count(*) AS n_grams,
+         | sum(CASE WHEN r.g IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+         |   AS n_contaminated,
+         | round(sum(CASE WHEN r.g IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
+         |   / count(*), 6) AS contam_frac
+         |FROM sh t LEFT JOIN refset r ON t.g = r.g
+         |WHERE t.doc_id % 2 = 0
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "q01_headline_orders" ->
       """SELECT count(*) AS n, round(avg(o_totalprice),2) AS avg_value,
@@ -2742,24 +2323,15 @@ object SparkEntry {
         | ORDER BY hour_us, event_type""".stripMargin,
 
     "q21_doc_quality_by_source" ->
-      """WITH t AS (SELECT source,
-        |  string_split_regex(trim(text), '\s+') AS toks,
-        |  len(regexp_extract_all(text, '[.,;:!?]'))::DOUBLE
-        |    / nullif(length(text), 0) AS pr
-        |  FROM documents),
-        |m AS (SELECT source, len(toks)::BIGINT AS n_tokens,
-        |  CASE WHEN len(toks) > 0 THEN
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','to')))::DOUBLE
-        |      / len(toks) ELSE 0.0 END AS sr,
-        |  coalesce(pr, 0.0) AS pr FROM t)
-        |SELECT source, count(*) AS n_docs,
-        | round(avg(n_tokens), 4) AS avg_tokens,
-        | round(avg(round(
-        |   least(n_tokens / 50.0, 1.0) * 0.4
-        |   + least(sr * 5.0, 1.0) * 0.4
-        |   + greatest(0.0, 1.0 - pr * 5.0) * 0.2, 6)), 4) AS avg_quality,
-        | round(avg(sr), 4) AS avg_stop_ratio
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH ${qualityProfileCtes("source")}
+         |SELECT source, count(*) AS n_docs,
+         | round(avg(n_tokens), 4) AS avg_tokens,
+         | round(avg(round(
+         |   least(n_tokens / 50.0, 1.0) * 0.4
+         |   + least(sr * 5.0, 1.0) * 0.4
+         |   + greatest(0.0, 1.0 - pr * 5.0) * 0.2, 6)), 4) AS avg_quality,
+         | round(avg(sr), 4) AS avg_stop_ratio
+         |FROM m GROUP BY source ORDER BY source""".stripMargin,
 
     "q22_langid_agreement" ->
       """WITH t AS (SELECT lang,
@@ -2958,37 +2530,32 @@ object SparkEntry {
     // via generate_series over each hot-gram start; order-preserving
     // reassembly through string_agg ORDER BY pos
     "q154_boilerplate_strip" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT a.doc_id, a.pos, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |dfreq AS (
-        |  SELECT g, count(*) AS df
-        |  FROM (SELECT DISTINCT doc_id, g FROM grams) GROUP BY g),
-        |drops AS (SELECT g FROM dfreq WHERE df >= 5),
-        |cov AS (
-        |  SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + 2)) AS pos
-        |  FROM grams JOIN drops USING (g)),
-        |kept AS (
-        |  SELECT k.doc_id, k.pos, k.t
-        |  FROM tok k LEFT JOIN cov c ON k.doc_id = c.doc_id AND k.pos = c.pos
-        |  WHERE c.pos IS NULL),
-        |agg AS (
-        |  SELECT doc_id, string_agg(t, ' ' ORDER BY pos) AS text_clean,
-        |    count(*) AS n_kept
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(a.text_clean, '') AS text_clean,
-        | len(string_split_regex(trim(d.text), '\s+'))::BIGINT AS n_tokens,
-        | (len(string_split_regex(trim(d.text), '\s+'))
-        |   - coalesce(a.n_kept, 0))::BIGINT AS n_removed
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+      s"""WITH $tokPosCtes,
+         |grams AS (
+         |  SELECT a.doc_id, a.pos, a.t || ' ' || b.t || ' ' || c.t AS g
+         |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+         |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
+         |dfreq AS (
+         |  SELECT g, count(*) AS df
+         |  FROM (SELECT DISTINCT doc_id, g FROM grams) GROUP BY g),
+         |drops AS (SELECT g FROM dfreq WHERE df >= 5),
+         |cov AS (
+         |  SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + 2)) AS pos
+         |  FROM grams JOIN drops USING (g)),
+         |kept AS (
+         |  SELECT k.doc_id, k.pos, k.t
+         |  FROM tok k LEFT JOIN cov c ON k.doc_id = c.doc_id AND k.pos = c.pos
+         |  WHERE c.pos IS NULL),
+         |agg AS (
+         |  SELECT doc_id, string_agg(t, ' ' ORDER BY pos) AS text_clean,
+         |    count(*) AS n_kept
+         |  FROM kept GROUP BY doc_id)
+         |SELECT d.doc_id, coalesce(a.text_clean, '') AS text_clean,
+         | len(string_split_regex(trim(d.text), '\\s+'))::BIGINT AS n_tokens,
+         | (len(string_split_regex(trim(d.text), '\\s+'))
+         |   - coalesce(a.n_kept, 0))::BIGINT AS n_removed
+         |FROM documents d LEFT JOIN agg a USING (doc_id)
+         |ORDER BY d.doc_id""".stripMargin,
 
     // media metadata round trip: the oracle computes the dimensions the
     // Spark side ENCODED into real PNG/GIF/JPEG headers and then parsed
@@ -3039,15 +2606,8 @@ object SparkEntry {
         |  eb.embedding::DOUBLE[]), 6) >= 0.3
         |ORDER BY id_a, id_b""".stripMargin,
 
-    // round-trip through the JDBC wire must reproduce the source table's
-    // aggregate exactly (doubles survive bit-for-bit; decimal sum fixes
-    // the association order on both engines)
     "q153_jdbc_roundtrip" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        | min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
-        | FROM orders GROUP BY o_orderpriority
-        | ORDER BY o_orderpriority""".stripMargin,
+      copyRoundtripSql,
 
     "q44_tsv_roundtrip" ->
       """SELECT o_orderpriority, count(*) AS n,
@@ -3074,24 +2634,15 @@ object SparkEntry {
         | FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
 
     "q48_quality_filter" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(trim(text), '\s+') AS toks,
-        |  len(regexp_extract_all(text, '[.,;:!?]'))::DOUBLE
-        |    / nullif(length(text), 0) AS pr
-        |  FROM documents),
-        |m AS (SELECT doc_id, len(toks)::BIGINT AS n_tokens,
-        |  CASE WHEN len(toks) > 0 THEN
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','to')))::DOUBLE
-        |      / len(toks) ELSE 0.0 END AS sr,
-        |  coalesce(pr, 0.0) AS pr FROM t)
-        |SELECT CASE WHEN n_tokens < 30 THEN 'too_short'
-        |  WHEN n_tokens > 100000 THEN 'too_long'
-        |  WHEN sr < 0.03 THEN 'low_stopwords'
-        |  WHEN pr > 0.05 THEN 'high_punct'
-        |  ELSE 'keep' END AS verdict,
-        | count(*) AS n_docs,
-        | round(avg(n_tokens), 4) AS avg_tokens
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
+      s"""WITH ${qualityProfileCtes("doc_id")}
+         |SELECT CASE WHEN n_tokens < 30 THEN 'too_short'
+         |  WHEN n_tokens > 100000 THEN 'too_long'
+         |  WHEN sr < 0.03 THEN 'low_stopwords'
+         |  WHEN pr > 0.05 THEN 'high_punct'
+         |  ELSE 'keep' END AS verdict,
+         | count(*) AS n_docs,
+         | round(avg(n_tokens), 4) AS avg_tokens
+         |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "q93_profile_orders" ->
       """SELECT 'o_custkey' AS col_name, count(*) AS n_rows,
@@ -3127,26 +2678,17 @@ object SparkEntry {
     // q48's profile expressions verbatim; the funnel is cumulative
     // conditional counts in rule order
     "q92_filter_funnel" ->
-      """WITH t AS (SELECT doc_id, source,
-        |  string_split_regex(trim(text), '\s+') AS toks,
-        |  len(regexp_extract_all(text, '[.,;:!?]'))::DOUBLE
-        |    / nullif(length(text), 0) AS pr
-        |  FROM documents),
-        |m AS (SELECT doc_id, source, len(toks)::BIGINT AS n_tokens,
-        |  CASE WHEN len(toks) > 0 THEN
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','to')))::DOUBLE
-        |      / len(toks) ELSE 0.0 END AS sr,
-        |  coalesce(pr, 0.0) AS pr FROM t)
-        |SELECT source, count(*) AS n_docs,
-        | sum(CASE WHEN n_tokens >= 30 THEN 1 ELSE 0 END)::BIGINT
-        |   AS after_min_len,
-        | sum(CASE WHEN n_tokens >= 30 AND n_tokens <= 100000
-        |          THEN 1 ELSE 0 END)::BIGINT AS after_max_len,
-        | sum(CASE WHEN n_tokens >= 30 AND n_tokens <= 100000 AND sr >= 0.03
-        |          THEN 1 ELSE 0 END)::BIGINT AS after_stopwords,
-        | sum(CASE WHEN n_tokens >= 30 AND n_tokens <= 100000 AND sr >= 0.03
-        |          AND pr <= 0.05 THEN 1 ELSE 0 END)::BIGINT AS after_punct
-        |FROM m GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH ${qualityProfileCtes("doc_id, source")}
+         |SELECT source, count(*) AS n_docs,
+         | sum(CASE WHEN n_tokens >= 30 THEN 1 ELSE 0 END)::BIGINT
+         |   AS after_min_len,
+         | sum(CASE WHEN n_tokens >= 30 AND n_tokens <= 100000
+         |          THEN 1 ELSE 0 END)::BIGINT AS after_max_len,
+         | sum(CASE WHEN n_tokens >= 30 AND n_tokens <= 100000 AND sr >= 0.03
+         |          THEN 1 ELSE 0 END)::BIGINT AS after_stopwords,
+         | sum(CASE WHEN n_tokens >= 30 AND n_tokens <= 100000 AND sr >= 0.03
+         |          AND pr <= 0.05 THEN 1 ELSE 0 END)::BIGINT AS after_punct
+         |FROM m GROUP BY source ORDER BY source""".stripMargin,
 
     // power-of-two buckets via binary digit count — exact integer
     // arithmetic, no floor(log2) float edges
@@ -3226,28 +2768,13 @@ object SparkEntry {
     // corpus itself so every scored bigram has c2>=1 (no smoothing
     // constant to keep in sync); ln on exact integer counts
     "q106_bigram_logprob" ->
-      """WITH tok AS (SELECT doc_id, source,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS t,
-        |    generate_subscripts(string_split_regex(trim(text), '\s+'), 1)
-        |      AS pos
-        |  FROM documents),
-        |bg AS (SELECT a.doc_id, a.source, a.t AS prev, b.t AS cur
-        |  FROM tok a JOIN tok b
-        |    ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-        |tf AS (SELECT doc_id, source, prev, cur, count(*)::BIGINT AS m
-        |  FROM bg GROUP BY doc_id, source, prev, cur),
-        |big AS (SELECT prev, cur, sum(m)::BIGINT AS c2
-        |  FROM tf GROUP BY prev, cur),
-        |ctx AS (SELECT prev, sum(c2)::BIGINT AS c1 FROM big GROUP BY prev),
-        |doc AS (SELECT doc_id, source,
-        |    round(sum(m * (ln(c2) - ln(c1))) / sum(m), 6) AS doc_lp
-        |  FROM tf JOIN big USING (prev, cur) JOIN ctx USING (prev)
-        |  GROUP BY doc_id, source)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        | round(avg(doc_lp), 4) AS avg_logprob,
-        | round(min(doc_lp), 6) AS min_logprob,
-        | round(max(doc_lp), 6) AS max_logprob
-        |FROM doc GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH $bigramCountCtes,
+         |ctx AS (SELECT prev, sum(c2)::BIGINT AS c1 FROM big GROUP BY prev),
+         |doc AS (SELECT doc_id, source,
+         |    round(sum(m * (ln(c2) - ln(c1))) / sum(m), 6) AS doc_lp
+         |  FROM tf JOIN big USING (prev, cur) JOIN ctx USING (prev)
+         |  GROUP BY doc_id, source)
+         |${logprobBySourceSql}""".stripMargin,
 
     // trailing-window z from exact integer window sums (sum x, sum
     // x^2) — the variance expression is ONE fixed double formula in
@@ -3283,30 +2810,7 @@ object SparkEntry {
     // PPJoin tier returns the identical pair set — q63's oracle applies
     // verbatim (prefix filtering is lossless by the prefix lemma)
     "q108_prefix_jaccard" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-        |FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |           JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
+      jaccardPairsSql,
 
     // day-level buckets, exact integer counts; only the display share
     // is a rounded double
@@ -3331,51 +2835,29 @@ object SparkEntry {
     // first-touch funnel; epoch_us comparisons mirror Spark's micros
     // truncation so the strict > is integer-exact in both engines
     "q111_event_funnel" ->
-      """WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t1
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(epoch_us(ts)) AS t2
-        |  FROM events e JOIN v USING (user_id)
-        |  WHERE event_type = 'click' AND epoch_us(ts) > t1 GROUP BY 1),
-        |p AS (SELECT e.user_id, min(epoch_us(ts)) AS t3
-        |  FROM events e JOIN c USING (user_id)
-        |  WHERE event_type = 'purchase' AND epoch_us(ts) > t2 GROUP BY 1),
-        |tot AS (SELECT count(DISTINCT user_id)::BIGINT AS n0 FROM events),
-        |s AS (
-        |  SELECT 1 AS stage_idx, 'view' AS stage,
-        |    (SELECT count(*) FROM v)::BIGINT AS n_users
-        |  UNION ALL SELECT 2, 'click', (SELECT count(*) FROM c)::BIGINT
-        |  UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM p)::BIGINT)
-        |SELECT stage_idx, stage, n_users,
-        | round(n_users * 100.0 / n0, 4) AS pct_of_all,
-        | round(n_users * 100.0 /
-        |   coalesce(lag(n_users) OVER (ORDER BY stage_idx), n0), 4)
-        |   AS pct_of_prev
-        |FROM s CROSS JOIN tot ORDER BY stage_idx""".stripMargin,
+      s"""WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t1
+         |  FROM events WHERE event_type = 'view' GROUP BY 1),
+         |c AS (SELECT e.user_id, min(epoch_us(ts)) AS t2
+         |  FROM events e JOIN v USING (user_id)
+         |  WHERE event_type = 'click' AND epoch_us(ts) > t1 GROUP BY 1),
+         |p AS (SELECT e.user_id, min(epoch_us(ts)) AS t3
+         |  FROM events e JOIN c USING (user_id)
+         |  WHERE event_type = 'purchase' AND epoch_us(ts) > t2 GROUP BY 1),
+         |$funnelStagesSql""".stripMargin,
 
     // q111's stage CTEs with the 6-hour conversion-window bound added
     "q151_windowed_funnel" ->
-      """WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t1
-        |  FROM events WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(epoch_us(ts)) AS t2
-        |  FROM events e JOIN v USING (user_id)
-        |  WHERE event_type = 'click' AND epoch_us(ts) > t1
-        |    AND epoch_us(ts) <= t1 + 21600000000 GROUP BY 1),
-        |p AS (SELECT e.user_id, min(epoch_us(ts)) AS t3
-        |  FROM events e JOIN c USING (user_id)
-        |  WHERE event_type = 'purchase' AND epoch_us(ts) > t2
-        |    AND epoch_us(ts) <= t2 + 21600000000 GROUP BY 1),
-        |tot AS (SELECT count(DISTINCT user_id)::BIGINT AS n0 FROM events),
-        |s AS (
-        |  SELECT 1 AS stage_idx, 'view' AS stage,
-        |    (SELECT count(*) FROM v)::BIGINT AS n_users
-        |  UNION ALL SELECT 2, 'click', (SELECT count(*) FROM c)::BIGINT
-        |  UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM p)::BIGINT)
-        |SELECT stage_idx, stage, n_users,
-        | round(n_users * 100.0 / n0, 4) AS pct_of_all,
-        | round(n_users * 100.0 /
-        |   coalesce(lag(n_users) OVER (ORDER BY stage_idx), n0), 4)
-        |   AS pct_of_prev
-        |FROM s CROSS JOIN tot ORDER BY stage_idx""".stripMargin,
+      s"""WITH v AS (SELECT user_id, min(epoch_us(ts)) AS t1
+         |  FROM events WHERE event_type = 'view' GROUP BY 1),
+         |c AS (SELECT e.user_id, min(epoch_us(ts)) AS t2
+         |  FROM events e JOIN v USING (user_id)
+         |  WHERE event_type = 'click' AND epoch_us(ts) > t1
+         |    AND epoch_us(ts) <= t1 + 21600000000 GROUP BY 1),
+         |p AS (SELECT e.user_id, min(epoch_us(ts)) AS t3
+         |  FROM events e JOIN c USING (user_id)
+         |  WHERE event_type = 'purchase' AND epoch_us(ts) > t2
+         |    AND epoch_us(ts) <= t2 + 21600000000 GROUP BY 1),
+         |$funnelStagesSql""".stripMargin,
 
     "q126_customers_no_orders" ->
       """SELECT count(*)::BIGINT AS n_without, min(c_custkey) AS min_key,
@@ -3562,32 +3044,23 @@ object SparkEntry {
     // the q48 keep-rules, q24 fingerprint dedup, and q49 md5 split
     // composed in one statement
     "q114_curation_pipeline" ->
-      """WITH t AS (SELECT doc_id, source, text,
-        |  string_split_regex(trim(text), '\s+') AS toks,
-        |  len(regexp_extract_all(text, '[.,;:!?]'))::DOUBLE
-        |    / nullif(length(text), 0) AS pr
-        |  FROM documents),
-        |m AS (SELECT doc_id, source, text, len(toks)::BIGINT AS n_tokens,
-        |  CASE WHEN len(toks) > 0 THEN
-        |    len(list_filter(toks, x -> x IN ('the','a','of','and','to')))::DOUBLE
-        |      / len(toks) ELSE 0.0 END AS sr,
-        |  coalesce(pr, 0.0) AS pr FROM t),
-        |kept AS (SELECT doc_id, source, text, n_tokens FROM m
-        |  WHERE n_tokens >= 30 AND n_tokens <= 100000
-        |    AND sr >= 0.03 AND pr <= 0.05),
-        |dedup AS (SELECT min(doc_id) AS doc_id FROM kept
-        |  GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))),
-        |surv AS (SELECT k.* FROM kept k JOIN dedup USING (doc_id)),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-        |       WHEN u < 1.0 THEN 'test' ELSE 'rest' END AS split
-        |  FROM (SELECT doc_id,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |      AS UBIGINT) / 4294967296.0 AS u FROM surv))
-        |SELECT split, source, count(*)::BIGINT AS n_docs,
-        | sum(n_tokens)::BIGINT AS sum_tokens
-        |FROM surv JOIN sp USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      s"""WITH ${qualityProfileCtes("doc_id, source, text")},
+         |kept AS (SELECT doc_id, source, text, n_tokens FROM m
+         |  WHERE n_tokens >= 30 AND n_tokens <= 100000
+         |    AND sr >= 0.03 AND pr <= 0.05),
+         |dedup AS (SELECT min(doc_id) AS doc_id FROM kept
+         |  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
+         |surv AS (SELECT k.* FROM kept k JOIN dedup USING (doc_id)),
+         |sp AS (SELECT doc_id,
+         |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
+         |       WHEN u < 1.0 THEN 'test' ELSE 'rest' END AS split
+         |  FROM (SELECT doc_id,
+         |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+         |      AS UBIGINT) / 4294967296.0 AS u FROM surv))
+         |SELECT split, source, count(*)::BIGINT AS n_docs,
+         | sum(n_tokens)::BIGINT AS sum_tokens
+         |FROM surv JOIN sp USING (doc_id)
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     // PMI spelled as a fixed sum of ln's on exact integer counts (a
     // product form would exceed double exactness on corpus totals)
@@ -3632,64 +3105,42 @@ object SparkEntry {
     // q63's pair set joined to the q49 md5 split labels; leaked =
     // members in different splits
     "q109_split_leakage" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b,
-        |    round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8),
-        |sp AS (SELECT doc_id,
-        |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
-        |       WHEN u < 1.0 THEN 'test' ELSE 'rest' END AS split
-        |  FROM (SELECT doc_id,
-        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-        |      AS UBIGINT) / 4294967296.0 AS u FROM documents))
-        |SELECT id_a, id_b, sa.split AS split_a, sb.split AS split_b,
-        | jaccard
-        |FROM pairs JOIN sp sa ON sa.doc_id = id_a
-        |           JOIN sp sb ON sb.doc_id = id_b
-        |WHERE sa.split <> sb.split
-        |ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH $shingleOverlapCtes,
+         |pairs AS (
+         |  SELECT id_a, id_b,
+         |    round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
+         |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
+         |             JOIN sizes sb ON sb.doc_id = id_b
+         |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8),
+         |sp AS (SELECT doc_id,
+         |  CASE WHEN u < 0.8 THEN 'train' WHEN u < 0.9 THEN 'val'
+         |       WHEN u < 1.0 THEN 'test' ELSE 'rest' END AS split
+         |  FROM (SELECT doc_id,
+         |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+         |      AS UBIGINT) / 4294967296.0 AS u FROM documents))
+         |SELECT id_a, id_b, sa.split AS split_a, sb.split AS split_b,
+         | jaccard
+         |FROM pairs JOIN sp sa ON sa.doc_id = id_a
+         |           JOIN sp sb ON sb.doc_id = id_b
+         |WHERE sa.split <> sb.split
+         |ORDER BY id_a, id_b""".stripMargin,
 
     // unigram LM: same tf shape; ln on identical integer inputs agrees
     // across engines, and 6dp doc / 4dp slice rounding absorbs
     // double-sum combine order (q57's convention)
     "q99_unigram_logprob" ->
-      """WITH tok AS (SELECT doc_id, source,
-        |    unnest(string_split_regex(trim(text), '\s+')) AS t
-        |  FROM documents),
-        |tf AS (SELECT doc_id, source, t, count(*)::BIGINT AS m
-        |  FROM tok GROUP BY doc_id, source, t),
-        |vocab AS (SELECT t AS vt, sum(m)::BIGINT AS cnt FROM tf GROUP BY t),
-        |tot AS (SELECT sum(cnt)::BIGINT AS total FROM vocab),
-        |doc AS (SELECT doc_id, source,
-        |    round(sum(m * (ln(cnt) - ln(total))) / sum(m), 6) AS doc_lp
-        |  FROM tf JOIN vocab ON tf.t = vocab.vt CROSS JOIN tot
-        |  GROUP BY doc_id, source)
-        |SELECT source, count(*)::BIGINT AS n_docs,
-        | round(avg(doc_lp), 4) AS avg_logprob,
-        | round(min(doc_lp), 6) AS min_logprob,
-        | round(max(doc_lp), 6) AS max_logprob
-        |FROM doc GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH tok AS (SELECT doc_id, source,
+         |    unnest(string_split_regex(trim(text), '\\s+')) AS t
+         |  FROM documents),
+         |tf AS (SELECT doc_id, source, t, count(*)::BIGINT AS m
+         |  FROM tok GROUP BY doc_id, source, t),
+         |vocab AS (SELECT t AS vt, sum(m)::BIGINT AS cnt FROM tf GROUP BY t),
+         |tot AS (SELECT sum(cnt)::BIGINT AS total FROM vocab),
+         |doc AS (SELECT doc_id, source,
+         |    round(sum(m * (ln(cnt) - ln(total))) / sum(m), 6) AS doc_lp
+         |  FROM tf JOIN vocab ON tf.t = vocab.vt CROSS JOIN tot
+         |  GROUP BY doc_id, source)
+         |${logprobBySourceSql}""".stripMargin,
 
     // q99's tf chain with a target flag; +0.5 smoothing keeps
     // target-absent tokens finite; every smoothed term DOUBLE
@@ -3784,20 +3235,15 @@ object SparkEntry {
         |ORDER BY bucket, bin""".stripMargin,
 
     "q86_unk_rewrite" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |freq AS (SELECT t, count(*) AS n FROM tok GROUP BY t),
-        |rw AS (
-        |  SELECT doc_id, pos,
-        |    CASE WHEN n >= 900 THEN tok.t ELSE '<unk>' END AS t2
-        |  FROM tok JOIN freq USING (t))
-        |SELECT doc_id, string_agg(t2, ' ' ORDER BY pos) AS text,
-        | sum(CASE WHEN t2 = '<unk>' THEN 1 ELSE 0 END)::BIGINT AS n_unk
-        |FROM rw GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+      s"""WITH $tokPosCtes,
+         |freq AS (SELECT t, count(*) AS n FROM tok GROUP BY t),
+         |rw AS (
+         |  SELECT doc_id, pos,
+         |    CASE WHEN n >= 900 THEN tok.t ELSE '<unk>' END AS t2
+         |  FROM tok JOIN freq USING (t))
+         |SELECT doc_id, string_agg(t2, ' ' ORDER BY pos) AS text,
+         | sum(CASE WHEN t2 = '<unk>' THEN 1 ELSE 0 END)::BIGINT AS n_unk
+         |FROM rw GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     // same md5-uniform order + next-fit budget cut as the Spark side
     "q83_token_budget_sample" ->
@@ -3913,37 +3359,24 @@ object SparkEntry {
     // same shingle definition as q63 (distinct word 3-grams per doc,
     // whole text for <3-token docs), collapsed to distinct per source
     "q133_source_overlap" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |src_sh AS (
-        |  SELECT DISTINCT d.source AS src, s.g
-        |  FROM sh s JOIN documents d USING (doc_id)),
-        |sizes AS (SELECT src, count(*) AS n FROM src_sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.src AS src_a, b.src AS src_b, count(*) AS i
-        |  FROM src_sh a JOIN src_sh b ON a.g = b.g AND a.src < b.src
-        |  GROUP BY 1, 2)
-        |SELECT sa.src AS src_a, sb.src AS src_b, sa.n AS n_a, sb.n AS n_b,
-        |  coalesce(i.i, 0) AS inter,
-        |  round(coalesce(i.i, 0)::DOUBLE
-        |    / (sa.n + sb.n - coalesce(i.i, 0)), 6) AS jaccard,
-        |  round(coalesce(i.i, 0)::DOUBLE / sa.n, 6) AS containment_a,
-        |  round(coalesce(i.i, 0)::DOUBLE / sb.n, 6) AS containment_b
-        |FROM sizes sa JOIN sizes sb ON sa.src < sb.src
-        |LEFT JOIN inter i ON i.src_a = sa.src AND i.src_b = sb.src
-        |ORDER BY src_a, src_b""".stripMargin,
+      s"""WITH $shingleCtes,
+         |src_sh AS (
+         |  SELECT DISTINCT d.source AS src, s.g
+         |  FROM sh s JOIN documents d USING (doc_id)),
+         |sizes AS (SELECT src, count(*) AS n FROM src_sh GROUP BY 1),
+         |inter AS (
+         |  SELECT a.src AS src_a, b.src AS src_b, count(*) AS i
+         |  FROM src_sh a JOIN src_sh b ON a.g = b.g AND a.src < b.src
+         |  GROUP BY 1, 2)
+         |SELECT sa.src AS src_a, sb.src AS src_b, sa.n AS n_a, sb.n AS n_b,
+         |  coalesce(i.i, 0) AS inter,
+         |  round(coalesce(i.i, 0)::DOUBLE
+         |    / (sa.n + sb.n - coalesce(i.i, 0)), 6) AS jaccard,
+         |  round(coalesce(i.i, 0)::DOUBLE / sa.n, 6) AS containment_a,
+         |  round(coalesce(i.i, 0)::DOUBLE / sb.n, 6) AS containment_b
+         |FROM sizes sa JOIN sizes sb ON sa.src < sb.src
+         |LEFT JOIN inter i ON i.src_a = sa.src AND i.src_b = sb.src
+         |ORDER BY src_a, src_b""".stripMargin,
 
     // identical per-term expression shape on both sides; only the sum
     // ORDER differs across engines, absorbed by the 4dp round
@@ -3975,29 +3408,16 @@ object SparkEntry {
     // q63's shingle CTEs; df over distinct (doc, shingle), ties at the
     // k boundary break by shingle text in both engines
     "q135_boilerplate_shingles" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |per AS (
-        |  SELECT s.g AS shingle, count(*) AS df,
-        |    count(DISTINCT d.source) AS n_sources
-        |  FROM sh s JOIN documents d USING (doc_id) GROUP BY 1),
-        |tot AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT shingle, df, round(df::DOUBLE / n_docs, 6) AS df_share,
-        |  n_sources
-        |FROM per CROSS JOIN tot
-        |ORDER BY df DESC, shingle ASC LIMIT 25""".stripMargin,
+      s"""WITH $shingleCtes,
+         |per AS (
+         |  SELECT s.g AS shingle, count(*) AS df,
+         |    count(DISTINCT d.source) AS n_sources
+         |  FROM sh s JOIN documents d USING (doc_id) GROUP BY 1),
+         |tot AS (SELECT count(*) AS n_docs FROM documents)
+         |SELECT shingle, df, round(df::DOUBLE / n_docs, 6) AS df_share,
+         |  n_sources
+         |FROM per CROSS JOIN tot
+         |ORDER BY df DESC, shingle ASC LIMIT 25""".stripMargin,
 
     "q56_top_bigrams" ->
       """WITH tok AS (
@@ -4187,63 +3607,19 @@ object SparkEntry {
         |    / 4294967296.0)::FLOAT AS f0
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    // Exact 3-gram Jaccard: distinct word trigrams per doc (docs shorter
-    // than 3 tokens contribute their whole token string), inverted-index
-    // self-join as both candidate generation and intersection count.
     "q63_jaccard_pairs" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(i::DOUBLE / (sa.n + sb.n - i), 6) AS jaccard
-        |FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |           JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8
-        |ORDER BY id_a, id_b""".stripMargin,
+      jaccardPairsSql,
 
     // same shingle/inverted-index CTEs as q63; the final select reports
     // both containment directions and thresholds on their max
     "q140_containment_pairs" ->
-      """WITH tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(i::DOUBLE / sa.n, 6) AS c_a_in_b,
-        |  round(i::DOUBLE / sb.n, 6) AS c_b_in_a
-        |FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |           JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE greatest(i::DOUBLE / sa.n, i::DOUBLE / sb.n) >= 0.7
-        |ORDER BY id_a, id_b""".stripMargin,
+      s"""WITH $shingleOverlapCtes
+         |SELECT id_a, id_b, round(i::DOUBLE / sa.n, 6) AS c_a_in_b,
+         |  round(i::DOUBLE / sb.n, 6) AS c_b_in_a
+         |FROM inter JOIN sizes sa ON sa.doc_id = id_a
+         |           JOIN sizes sb ON sb.doc_id = id_b
+         |WHERE greatest(i::DOUBLE / sa.n, i::DOUBLE / sb.n) >= 0.7
+         |ORDER BY id_a, id_b""".stripMargin,
 
     "q141_event_transitions" ->
       """WITH s AS (SELECT event_type AS from_event,
@@ -4261,189 +3637,61 @@ object SparkEntry {
     // Connected components over the exact near-dup pair graph via a
     // recursive reachability CTE; cluster_id = min reachable doc_id.
     "q64_dedup_clusters" ->
-      """WITH RECURSIVE tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id AS n, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.n, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-        |cc AS (SELECT n AS doc_id, min(r) AS cluster_id FROM reach GROUP BY n)
-        |SELECT doc_id, cluster_id,
-        | count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-        |FROM cc ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE $nearDupCcCtes
+         |SELECT doc_id, cluster_id,
+         | count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+         |FROM cc ORDER BY doc_id""".stripMargin,
 
     // q64's recursive CC + q49's split CASE, keyed on
     // coalesce(cluster_id, doc_id) for the leakage-safe label and on
     // doc_id for the own label it is compared against
     "q147_leakage_safe_split" ->
-      """WITH RECURSIVE tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id AS n, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.n, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-        |cc AS (SELECT n AS doc_id, min(r) AS cluster_id FROM reach GROUP BY n),
-        |j AS (SELECT d.doc_id, cc.cluster_id,
-        |  coalesce(cc.cluster_id, d.doc_id) AS ek
-        |  FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id),
-        |lab AS (SELECT doc_id, cluster_id,
-        |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)
-        |    / 4294967296.0 AS uo,
-        |  CAST(('0x' || substr(md5(CAST(ek AS VARCHAR)), 1, 8)) AS UBIGINT)
-        |    / 4294967296.0 AS ue
-        |  FROM j),
-        |fin AS (SELECT doc_id, cluster_id,
-        |  CASE WHEN uo < 0.8 THEN 'train' WHEN uo < 0.9 THEN 'val'
-        |       WHEN uo < 1.0 THEN 'test' ELSE 'rest' END AS own_split,
-        |  CASE WHEN ue < 0.8 THEN 'train' WHEN ue < 0.9 THEN 'val'
-        |       WHEN ue < 1.0 THEN 'test' ELSE 'rest' END AS split
-        |  FROM lab)
-        |SELECT split, count(*) AS n_docs, count(cluster_id) AS n_clustered,
-        |  sum(CASE WHEN own_split != split THEN 1 ELSE 0 END)::BIGINT AS n_moved,
-        |  sum(doc_id)::BIGINT AS id_sum
-        |FROM fin GROUP BY split ORDER BY split""".stripMargin,
+      s"""WITH RECURSIVE $nearDupCcCtes,
+         |j AS (SELECT d.doc_id, cc.cluster_id,
+         |  coalesce(cc.cluster_id, d.doc_id) AS ek
+         |  FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id),
+         |lab AS (SELECT doc_id, cluster_id,
+         |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT)
+         |    / 4294967296.0 AS uo,
+         |  CAST(('0x' || substr(md5(CAST(ek AS VARCHAR)), 1, 8)) AS UBIGINT)
+         |    / 4294967296.0 AS ue
+         |  FROM j),
+         |fin AS (SELECT doc_id, cluster_id,
+         |  CASE WHEN uo < 0.8 THEN 'train' WHEN uo < 0.9 THEN 'val'
+         |       WHEN uo < 1.0 THEN 'test' ELSE 'rest' END AS own_split,
+         |  CASE WHEN ue < 0.8 THEN 'train' WHEN ue < 0.9 THEN 'val'
+         |       WHEN ue < 1.0 THEN 'test' ELSE 'rest' END AS split
+         |  FROM lab)
+         |SELECT split, count(*) AS n_docs, count(cluster_id) AS n_clustered,
+         |  sum(CASE WHEN own_split != split THEN 1 ELSE 0 END)::BIGINT AS n_moved,
+         |  sum(doc_id)::BIGINT AS id_sum
+         |FROM fin GROUP BY split ORDER BY split""".stripMargin,
 
     // q64's connected components + per-cluster argmax(n_chars, min id)
     "q82_dedup_survivor_quality" ->
-      """WITH RECURSIVE tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id AS n, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.n, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-        |cc AS (SELECT n AS doc_id, min(r) AS cluster_id FROM reach GROUP BY n),
-        |sized AS (
-        |  SELECT cc.doc_id, cc.cluster_id,
-        |    count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-        |    d.n_chars
-        |  FROM cc JOIN documents d ON d.doc_id = cc.doc_id),
-        |rk AS (
-        |  SELECT *, row_number() OVER (PARTITION BY cluster_id
-        |      ORDER BY n_chars DESC, doc_id ASC) AS rn
-        |  FROM sized)
-        |SELECT cluster_id, cluster_size, doc_id AS survivor_id,
-        | n_chars AS survivor_score
-        |FROM rk WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
+      s"""WITH RECURSIVE $nearDupCcCtes,
+         |sized AS (
+         |  SELECT cc.doc_id, cc.cluster_id,
+         |    count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
+         |    d.n_chars
+         |  FROM cc JOIN documents d ON d.doc_id = cc.doc_id),
+         |rk AS (
+         |  SELECT *, row_number() OVER (PARTITION BY cluster_id
+         |      ORDER BY n_chars DESC, doc_id ASC) AS rn
+         |  FROM sized)
+         |SELECT cluster_id, cluster_size, doc_id AS survivor_id,
+         | n_chars AS survivor_score
+         |FROM rk WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
 
     // Dedup applied: q64's clusters -> drop non-canonical members ->
     // per-source survival counts.
     "q66_dedup_apply" ->
-      """WITH RECURSIVE tokarr AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
-        |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, unnest(arr) AS t, generate_subscripts(arr, 1) AS pos
-        |  FROM tokarr),
-        |grams AS (
-        |  SELECT DISTINCT a.doc_id, a.t || ' ' || b.t || ' ' || c.t AS g
-        |  FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        |             JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2),
-        |short AS (
-        |  SELECT doc_id, array_to_string(arr, ' ') AS g
-        |  FROM tokarr WHERE len(arr) < 3),
-        |sh AS (SELECT * FROM grams UNION SELECT * FROM short),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT id_a, id_b
-        |  FROM inter JOIN sizes sa ON sa.doc_id = id_a
-        |             JOIN sizes sb ON sb.doc_id = id_b
-        |  WHERE i::DOUBLE / (sa.n + sb.n - i) >= 0.8),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM pairs
-        |  UNION ALL SELECT id_b, id_a FROM pairs),
-        |nodes AS (SELECT DISTINCT src AS id FROM edges),
-        |reach AS (
-        |  SELECT id AS n, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.n, e.dst FROM reach JOIN edges e ON e.src = reach.r),
-        |cc AS (SELECT n AS doc_id, min(r) AS cluster_id FROM reach GROUP BY n),
-        |drops AS (SELECT doc_id FROM cc WHERE doc_id <> cluster_id)
-        |SELECT source, count(*) AS n_docs,
-        | count(*) FILTER (WHERE d.doc_id IS NULL) AS n_kept
-        |FROM documents LEFT JOIN drops d USING (doc_id)
-        |GROUP BY source ORDER BY source""".stripMargin,
+      s"""WITH RECURSIVE $nearDupCcCtes,
+         |drops AS (SELECT doc_id FROM cc WHERE doc_id <> cluster_id)
+         |SELECT source, count(*) AS n_docs,
+         | count(*) FILTER (WHERE d.doc_id IS NULL) AS n_kept
+         |FROM documents LEFT JOIN drops d USING (doc_id)
+         |GROUP BY source ORDER BY source""".stripMargin,
 
     "q75_cube_orders" ->
       """SELECT o_orderpriority, o_orderstatus,
@@ -4623,52 +3871,4 @@ object SparkEntry {
         |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS ma3
         |FROM monthly ORDER BY yyyymm""".stripMargin,
   )
-
-  /** The q257 lexical-retrieval CTE ladder (through the per-doc
-    * aggregate `agg`) — ONE definition feeding both the q257 oracle
-    * and q258's lexical half so the tiers cannot drift. Mirrors
-    * [[etlmudah.text.TextStats.bm25Search]]: q131's exact idf/tfnorm
-    * expression text, per-term 4dp round, DECIMAL sum, query-doc
-    * excluded from results only. */
-  private[graft] val bm25SearchSql: String =
-    """qterms AS (
-      |  SELECT DISTINCT unnest(string_split_regex(trim(text), '\s+'))
-      |    AS term
-      |  FROM documents WHERE doc_id = 0),
-      |docs AS (
-      |  SELECT doc_id AS id, text,
-      |    len(string_split_regex(trim(text), '\s+'))::BIGINT AS dl
-      |  FROM documents),
-      |tot AS (SELECT count(*)::BIGINT AS n,
-      |    sum(dl)::DOUBLE / count(*) AS avgdl FROM docs),
-      |tf AS (
-      |  SELECT id, dl, term, count(*)::BIGINT AS tf FROM (
-      |    SELECT id, dl,
-      |      unnest(string_split_regex(trim(text), '\s+')) AS term
-      |    FROM docs)
-      |  WHERE term IN (SELECT term FROM qterms)
-      |  GROUP BY 1, 2, 3),
-      |dfreq AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-      |scored AS (
-      |  SELECT id, CAST(round(
-      |      ln(1.0 + (n - df + 0.5) / (df + 0.5)) *
-      |      (tf * (1.2 + 1.0)) /
-      |      (tf + 1.2 * (1.0 - 0.75 + 0.75 * dl / avgdl)), 4)
-      |    AS DECIMAL(20,4)) AS ts
-      |  FROM tf JOIN dfreq USING (term) CROSS JOIN tot),
-      |agg AS (
-      |  SELECT id, count(*)::BIGINT AS terms_hit,
-      |    CAST(sum(ts) AS DOUBLE) AS score
-      |  FROM scored WHERE id <> 0 GROUP BY id)""".stripMargin
-
-  /** The q253/q256 series CTE body — kept in ONE place so the Spark
-    * helper and both oracles cannot drift. */
-  private[graft] val monthlyCentsSql: String =
-    """SELECT o_orderpriority AS g,
-      |    (year(o_orderdate) * 12 + month(o_orderdate) - 1)::BIGINT AS m,
-      |    sum(CAST(round(CAST(o_totalprice AS DOUBLE) * 100) AS BIGINT))
-      |      ::BIGINT AS cents
-      |  FROM orders
-      |  WHERE o_orderdate IS NOT NULL AND o_totalprice IS NOT NULL
-      |  GROUP BY 1, 2""".stripMargin
 }

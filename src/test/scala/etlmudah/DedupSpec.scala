@@ -415,6 +415,16 @@ class DedupSpec extends SparkSpec {
       Seq.empty[(Long, Long)].toDF("id_a", "id_b")).isEmpty)
   }
 
+  test("dupClusters: an empty pair set on the distributed path returns no rows") {
+    import spark.implicits._
+    // a negative threshold sends even 0 edges to the rounds, whose
+    // max-degree probe then reads the max of no rows
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val rounds = Dedup.dupClusters(empty, localEdgeThreshold = -1L)
+    assert(rounds.schema == Dedup.dupClusters(empty).schema)
+    assert(rounds.collect().isEmpty)
+  }
+
   test("dupClusters: the driver tier runs at most 3 Spark jobs") {
     import spark.implicits._
     // the former single-partition layout ran a pinned job plus an

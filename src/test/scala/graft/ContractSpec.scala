@@ -34,6 +34,22 @@ class ContractSpec extends AnyFunSuite {
       s"oracleSql pairs digest: $pairs")
   }
 
+  test("Verify: a throwing builder is named with its exception class; the rest still write") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    val spark = SparkTestSession.spark
+    val out = java.nio.file.Files.createTempDirectory("verify_spec").toString
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "q1_ok" -> ((s, _) => s.range(3).toDF()),
+      "q2_boom" -> ((_, _) => throw new IllegalStateException("boom")))
+    val failed = Verify.writeResults(spark, "unused", out, queries)
+    assert(failed == Seq("q2_boom" -> "java.lang.IllegalStateException"))
+    assert(spark.read.parquet(s"$out/q1_ok").count() == 3)
+    assert(!new java.io.File(s"$out/q2_boom").exists())
+    assert(Verify.failuresLine(failed) == """{"metric":"failures",""" +
+      """"queries":{"q2_boom":"java.lang.IllegalStateException"}}""")
+    assert(Verify.failuresLine(Nil) == """{"metric":"failures","queries":{}}""")
+  }
+
   test("GraftExtensions: every native function resolves and evaluates in SQL") {
     val spark = SparkTestSession.spark
     val probes = Seq(
