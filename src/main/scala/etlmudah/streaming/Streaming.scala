@@ -101,11 +101,21 @@ object Streaming {
     * the batch path (Tables.eventsTyped) — the events ts encoding has
     * already flipped between data generations (nanos-long vs NTZ), and
     * a hardcoded schema would silently break only the streaming path.
-    * An empty source directory falls back to [[eventsFileSchema]]. */
+    * A source directory with no `*.parquet` file yet (or none at all)
+    * falls back to [[eventsFileSchema]]; any other failure to sniff,
+    * such as a corrupt or unreadable file, propagates. */
   def readEvents(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Int = 0): DataFrame = {
-    val fileSchema = scala.util.Try(spark.read.parquet(dir).schema)
-      .getOrElse(eventsFileSchema)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasParquet = fs.exists(path) && {
+      val it = fs.listFiles(path, true)
+      var found = false
+      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
+    val fileSchema =
+      if (hasParquet) spark.read.parquet(dir).schema else eventsFileSchema
     val reader = spark.readStream
       .schema(fileSchema)
       .option("pathGlobFilter", "*.parquet")

@@ -258,7 +258,7 @@ object Round12 {
     // the float-fold ban).
     "q342_lateness_audit_counts" -> ((s, dir) => {
       val root = stagedLatenessAudit(s, dir)
-      s.read.parquet(s"$root/counts")
+      Tables.parquet(s, s"$root/counts")
         .select(col("hour_us").cast("long").as("hour_us"),
           col("event_type"), col("cnt").cast("long").as("cnt"))
         .orderBy(col("hour_us"), col("event_type"))
@@ -270,7 +270,7 @@ object Round12 {
     // oracle derives all four from the same SQL ledger replay
     "q343_lateness_audit_quarantine" -> ((s, dir) => {
       val root = stagedLatenessAudit(s, dir)
-      s.read.parquet(s"$root/late")
+      Tables.parquet(s, s"$root/late")
         .select(col("event_id").cast("long").as("event_id"),
           col("ts_us").cast("long").as("ts_us"),
           col("watermark_us").cast("long").as("watermark_us"),

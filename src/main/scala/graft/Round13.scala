@@ -79,7 +79,7 @@ object Round13 {
       // (~1000 files at sf0.1 — 5.3s/read measured, pure listing+footer
       // overhead, guide §6 small files). The stream is complete, so one
       // plain rewrite preserves the committed row set exactly.
-      s.read.parquet(s"$root/joined").coalesce(1)
+      Tables.parquet(s, s"$root/joined").coalesce(1)
         .write.mode("overwrite").parquet(s"$root/joined_compact")
     }
 
@@ -98,7 +98,7 @@ object Round13 {
     // (round 12), full-outer (here).
     "q357_stream_full_outer_join" -> ((s, dir) => {
       val root = stagedFullOuterJoin(s, dir)
-      s.read.parquet(s"$root/joined_compact")
+      Tables.parquet(s, s"$root/joined_compact")
         .filter(coalesce(col("p_user"), col("c_user")) =!= HbUser)
         .orderBy(coalesce(col("p_user"), col("c_user")),
           coalesce(col("p_us"), lit(-1L)),

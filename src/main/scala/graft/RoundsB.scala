@@ -110,7 +110,7 @@ object RoundsB {
       etlmudah.sinks.Writers.writeZOrdered(
         Tables.orders(s, dir), out,
         Seq("o_totalprice", "o_custkey"), files = 16)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("o_totalprice").between(50000, 150000) &&
           col("o_custkey") < 500)
         .agg(

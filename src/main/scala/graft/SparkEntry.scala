@@ -768,7 +768,7 @@ object SparkEntry {
       val out = Stage.scratch("graft_sink_q85", dir)
       etlmudah.sinks.Writers.writeRangeSorted(
         Tables.orders(s, dir), out, Seq("o_totalprice"), files = 8)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("o_totalprice") < 100000)
         .agg(
           count(lit(1)).as("n"),
@@ -786,7 +786,7 @@ object SparkEntry {
         Tables.orders(s, dir).select("o_orderkey", "o_orderstatus",
           "o_orderpriority", "o_totalprice"),
         out, Seq("o_orderstatus"))
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("o_orderstatus") === "F")
         .groupBy(col("o_orderpriority")).agg(
           count(lit(1)).as("n"),
@@ -804,7 +804,7 @@ object SparkEntry {
         out)
       val cache = new etlmudah.sinks.Writers.TtlCache(s)
       def load() = cache.getOrCompute(s"q46_$dir", ttlMs = 600000L)(
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy(col("c_nationkey")).agg(
             count(lit(1)).as("n"),
             sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("sum_bal")))

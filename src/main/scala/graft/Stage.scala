@@ -23,9 +23,10 @@ object Stage {
     * `build` writes the artifact into the directory it is given.
     *
     * The artifact is keyed on source URI + per-leaf-file (name, length,
-    * mtime) of `dir/srcTable` + `tag`, the builder's version and
-    * parameters: a corpus regeneration or a parameter change rebuilds
-    * instead of silently reusing a stale artifact. Each writer builds
+    * mtime) of `dir/srcTable` ([[etlmudah.Tables.fileIdentity]]) + `tag`,
+    * the builder's version and parameters: a corpus regeneration or a
+    * parameter change rebuilds instead of silently reusing a stale
+    * artifact. Each writer builds
     * under its own attempt dir, marks it with `_SUCCESS`, then atomically
     * renames a pointer file into `CURRENT`. A live attempt dir is never
     * deleted, so racing writers and mid-scan readers are always safe; a
@@ -34,41 +35,7 @@ object Stage {
                 srcTable: String = "documents.parquet")
                (build: String => Unit): String = {
     val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    // qualify BEFORE relativizing: listFiles returns scheme-qualified
-    // paths, so stripping an unqualified root would be a no-op and the
-    // key would carry absolute paths (key churn across hosts/tmpdirs)
-    val src = fs.makeQualified(new Path(s"$dir/$srcTable"))
-    val srcUriPath = src.toUri.getPath
-    val rootSt = fs.getFileStatus(src)
-    // RECURSIVE listing: a partitioned/nested layout has no top-level
-    // data files, and a non-recursive list would leave the key constant
-    // across corpus regenerations (silent stale-artifact reuse). Paths
-    // are recorded relative to the root so nested same-name files stay
-    // distinct.
-    val leafIds: Seq[String] =
-      if (rootSt.isDirectory) {
-        val it = fs.listFiles(src, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val st = it.next()
-          // walk up to the root: a leaf only enters the key if NO
-          // segment on its relative path is `_`/`.`-prefixed — data
-          // under e.g. a leftover _temporary/ from a killed write is
-          // not part of the corpus identity and must not churn the key
-          val segs = scala.collection.mutable.ArrayBuffer.empty[String]
-          var p = st.getPath
-          var visible = true
-          while (p != null && p.toUri.getPath != srcUriPath) {
-            segs += p.getName
-            if (p.getName.startsWith("_") || p.getName.startsWith("."))
-              visible = false
-            p = p.getParent
-          }
-          if (visible && p != null)
-            buf += s"${segs.reverse.mkString("/")}|${st.getLen}|${st.getModificationTime}"
-        }
-        buf.sorted.toSeq
-      } else Seq(s"${rootSt.getLen}|${rootSt.getModificationTime}")
+    val (srcUriPath, leafIds) = etlmudah.Tables.fileIdentity(s, s"$dir/$srcTable")
     // layout=2: attempt-dir + CURRENT-pointer publishing; the version
     // keeps new code off old-layout dirs from earlier rounds
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -115,7 +82,7 @@ object Stage {
   def parquet(s: SparkSession, dir: String, tag: String, prefix: String,
               srcTable: String = "documents.parquet")
              (build: => DataFrame): DataFrame =
-    s.read.parquet(directory(s, dir, tag, prefix, srcTable)(
+    etlmudah.Tables.parquet(s, directory(s, dir, tag, prefix, srcTable)(
       build.write.mode("overwrite").parquet(_)))
 
   /** Stages events `ev` as a file stream source under `root/src` and

@@ -54,6 +54,16 @@ class StreamingSpec extends SparkSpec {
     Files.move(part.toPath, java.nio.file.Paths.get(s"$srcDir/$name"))
   }
 
+  test("readEvents: no parquet file yet falls back to the fixed schema; a corrupt file throws") {
+    val empty = Files.createTempDirectory("src_empty").toString
+    val fallback = Streaming.readEvents(spark, empty).schema
+    assert(fallback.fieldNames.toSeq == Streaming.eventsFileSchema.fieldNames.toSeq)
+    assert(fallback("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val corrupt = Files.createTempDirectory("src_corrupt").toString
+    Files.write(java.nio.file.Paths.get(s"$corrupt/day01.parquet"), "PAR1 truncated".getBytes("UTF-8"))
+    intercept[Exception](Streaming.readEvents(spark, corrupt))
+  }
+
   test("hourlyCounts stream == batch twin on the same input (exactly-once contract)") {
     val out = Files.createTempDirectory("stream_out").toString
     val q = Streaming.hourlyCounts(

@@ -34,6 +34,14 @@ class ContractSpec extends AnyFunSuite {
       s"oracleSql pairs digest: $pairs")
   }
 
+  test("PlanDump resolves short ids; missing and ambiguous names fail together") {
+    val keys = Set("q1_a", "q1_b", "q2_c", "q3_d")
+    assert(PlanDump.resolve(keys, Seq("q2", "q1_b", "q3")) == Right(Seq("q2_c", "q1_b", "q3_d")))
+    assert(PlanDump.resolve(keys, Seq("q1", "q9", "q2")) ==
+      Left("q1: ambiguous (q1_a, q1_b); q9: not in SparkEntry.queries"))
+    assert(PlanDump.resolve(SparkEntry.queries.keySet, Seq("q18")).exists(_.head.startsWith("q18_")))
+  }
+
   test("Verify: a throwing builder is named with its exception class; the rest still write") {
     import org.apache.spark.sql.{DataFrame, SparkSession}
     val spark = SparkTestSession.spark

@@ -3,17 +3,39 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Dev-only plan + exclusive-timing dump for specific registered queries:
-  * `sbt "Test/runMain graft.PlanDump sfDir outDir reps q1 q2 ..."` —
-  * writes each query's `.explain("formatted")` to `outDir/<name>.txt`
+  * `sbt "Test/runMain graft.PlanDump sfDir outDir reps q18 q268_... ..."` —
+  * writes each query's `.explain("formatted")` to `outDir/<key>.txt`
   * and prints per-rep wall seconds measured with the noop sink (forces
   * every column, unlike count(), per the optimization guide §1.4).
+  * A name is a full registry key or a short id such as `q18`.
   */
 object PlanDump {
+
+  /** Each name as its registry key: a full key stays as it is; otherwise
+    * the name must equal the part before `_` of exactly one key (the
+    * rule the benchmark's workload lists resolve by). Every missing or
+    * ambiguous name is reported at once. */
+  def resolve(keys: Set[String], names: Seq[String]): Either[String, Seq[String]] = {
+    val byShort = keys.groupBy(_.takeWhile(_ != '_'))
+    val resolved = names.map { n =>
+      if (keys(n)) Right(n)
+      else byShort.getOrElse(n, Set.empty).toSeq match {
+        case Seq(k) => Right(k)
+        case Seq() => Left(s"$n: not in SparkEntry.queries")
+        case many => Left(s"$n: ambiguous (${many.sorted.mkString(", ")})")
+      }
+    }
+    val problems = resolved.collect { case Left(p) => p }
+    if (problems.nonEmpty) Left(problems.mkString("; "))
+    else Right(resolved.collect { case Right(k) => k })
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outDir = args(1)
     val reps = args(2).toInt
-    val names = args.drop(3)
+    val names = resolve(SparkEntry.queries.keySet, args.toSeq.drop(3))
+      .fold(p => { System.err.println(s"PlanDump: $p"); sys.exit(2) }, identity)
     val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
